@@ -27,18 +27,11 @@ import graft.pipeline.DataOps
  * at most [[DataOps.DsirBuckets]] rows of three longs, KB-sized at ANY
  * corpus scale (the feature space is fixed), broadcast on every score.
  */
-object DsirStore {
+object DsirStore extends Store {
 
-  /** One store build+mutate per (JVM, directory) — the K9 guard:
-    * later registry calls probe, never re-mutate. */
-  private val built =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Train (overwrite) the bucket-statistics store from the sf corpus. */
-  def build(spark: SparkSession, sfDir: String, storeDir: String): Unit =
-    buildFrom(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("lang"), col("text")), storeDir)
+  def name = "dsir"
+  def relations = Seq("stats")
+  def input = Store.Labeled
 
   /** Train (overwrite) the store from a (doc_id, lang, text) labeled
     * corpus frame. */
@@ -66,7 +59,7 @@ object DsirStore {
     * DataOpsSpec; hash-audited by the `dsirIncremental` registry entry
     * against [[DataOps.dsirWeights]]'s own full-corpus oracle). */
   def appendBatch(spark: SparkSession, batch: DataFrame,
-      storeDir: String, tag: String = null): Unit = {
+      storeDir: String, tag: String): Unit = {
     StoreDirs.mergeOnce(spark, s"$storeDir/stats", tag) {
       spark.read.parquet(s"$storeDir/stats")
         .unionByName(batchStats(spark, batch))
@@ -131,7 +124,7 @@ object DsirStore {
         DataOps.dsirStatsFromBuckets(withB))
     }
     val dir = StoreDirs.tmpStoreDir("graft-dsir-store", sfDir)
-    if (built.add(dir)) build(spark, sfDir, dir)
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     scoreAgainst(spark, d, dir)
   }
 
@@ -149,7 +142,7 @@ object DsirStore {
     val dbl = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("lang"), col("text"))
     val dir = StoreDirs.tmpStoreDir("graft-dsir-incr", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, dbl.where(col("doc_id") % 2 === 0), dir)
       appendBatch(spark, dbl.where(col("doc_id") % 2 === 1), dir)
     }
@@ -188,7 +181,7 @@ object DsirStore {
           sum(col("tgt_cnt")).cast("long").as("sum_tgt"))
     }
     val dir = StoreDirs.tmpStoreDir("graft-dsir-incr", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, dbl.where(col("doc_id") % 2 === 0), dir)
       appendBatch(spark, dbl.where(col("doc_id") % 2 === 1), dir)
     }
@@ -218,7 +211,7 @@ object DsirStore {
         DataOps.dsirStatsFromBuckets(withB))
     }
     val dir = StoreDirs.tmpStoreDir("graft-dsir-del", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, dbl, dir)
       removeBatch(spark, dbl.where(col("doc_id") % 2 === 1), dir)
     }

@@ -8,20 +8,16 @@ import graft.pipeline.DataOps
 /**
  * COMPOSED RIGHT-TO-BE-FORGOTTEN — one `forget(docIds)` call driving
  * every surface a published document touches: the lang-partitioned
- * corpus ([[CorpusSink.deleteDocs]], partition-pruned rewrite), the K9
- * search index ([[PostingsIndex.removeBatch]] — postings, lengths,
- * vocabulary decrements, query-head statistics), the K4 dedup index
- * ([[MinhashIndex.removeBatch]] — shingles, band buckets), the K10
- * positional index, the K5/K7 vector stores ([[PqIndex.removeBatch]] /
- * [[SqIndex.removeBatch]] — FAISS `remove_ids` over the document's
- * embedding, linked by the fixture's vec_id = doc_id identity) and the
- * K6/K8 trained-model stores ([[LangProfileStore.removeBatch]] /
- * [[DsirStore.removeBatch]] — count subtraction, which needs the
- * victims' LABELED TEXT: the corpus is the only surface that still has
- * it, so forget fetches the victim rows BEFORE rewriting the corpus
- * partitions — the one real ordering constraint in the composition). A
- * real deletion request is not "remove from one store": a document that
- * stays BM25-retrievable, keeps matching as a near-dup corpus member,
+ * corpus ([[CorpusSink.deleteDocs]], partition-pruned rewrite) and each
+ * store the caller names (any subset of the [[Store.all]] registry),
+ * removed by the key its [[Store.Input]] declares: doc_id for the text
+ * stores, vec_id = doc_id for the vector stores (FAISS `remove_ids`),
+ * and the victims' LABELED TEXT for the count-subtraction model stores.
+ * The corpus is the only surface that still has that text, so forget
+ * fetches the victim rows BEFORE rewriting the corpus partitions — the
+ * one real ordering constraint in the composition. A real deletion
+ * request is not "remove from one store": a document that stays
+ * BM25-retrievable, keeps matching as a near-dup corpus member,
  * remains a nearest-neighbor answer, or keeps shaping the language /
  * importance models after its corpus row is gone has not been
  * forgotten.
@@ -32,21 +28,13 @@ import graft.pipeline.DataOps
  * id (or one subtracted twice from the vocab/stats sums) would corrupt
  * the stores' additive state.
  *
- * Registry proof (entries over ONE composed store set, built +
- * forgotten once per JVM): `corpusForget` hash-audits the surviving
- * published corpus per language against a survivors-only rollup;
- * `forgetSearch` probes the maintained postings store ≡ the
- * [[PostingsIndex.bm25Removed]] oracle (a from-scratch survivors-only
- * build); `forgetDedup` probes the maintained dedup store with the
- * victims as a fresh snapshot ≡ the `dedupIndexed` oracle (no victim
- * may self-match — its bands are gone); `forgetVectors` / `forgetSq`
- * probe the maintained vector stores ≡ the [[PqIndex.annPqRemoved]] /
- * [[SqIndex.annSqRemoved]] oracles (full-corpus-frozen model, codes
- * filtered to survivors); `forgetClassifier` / `forgetImportance`
- * classify/score against the subtracted model stores ≡ the
- * evens-trained [[LangProfileStore.langIdRemoved]] /
- * [[DsirStore.dsirRemoved]] oracles (nothing of the victims remains in
- * any profile or bucket statistic).
+ * Registry proof (entries over ONE composed store set — every registry
+ * store built over the full corpus, then the odd half forgotten, once
+ * per JVM): `corpusForget` hash-audits the surviving published corpus
+ * per language against a survivors-only rollup; the per-store entries
+ * (`forgetSearch`, `forgetPhrase`, `forgetDedup`, `forgetVectors`,
+ * `forgetSq`, `forgetClassifier`, `forgetImportance`) probe the
+ * maintained store ≡ that store's own `*Removed` oracle.
  *
  * 100 TB shape: the id set broadcasts everywhere (deletion batches are
  * small); the corpus rewrite touches only affected lang partitions;
@@ -57,7 +45,7 @@ import graft.pipeline.DataOps
  */
 object Forget {
 
-  /** Forget `docIds` across the corpus and every maintained store.
+  /** Forget `docIds` across the corpus and every `(store, dir)` named.
     * Contract: ids duplicate-free and ⊆ the published corpus —
     * asserted HERE, once (two bounded jobs over the broadcast-sized
     * request), before any store mutates, so a bad request fails
@@ -66,16 +54,12 @@ object Forget {
     * The vector stores forget the victims' embeddings under the
     * vec_id = doc_id linkage (the fixture embeds document `i` as
     * vector `i`; a deployment with its own mapping resolves doc→vec
-    * ids before the call). The model stores subtract the victims'
-    * (lang, text) counts — fetched from the published corpus BEFORE
-    * [[CorpusSink.deleteDocs]] rewrites it, because after the rewrite
-    * no surface has the text to subtract. */
+    * ids before the call). The labeled-text stores subtract the
+    * victims' (lang, text) counts — fetched from the published corpus
+    * BEFORE [[CorpusSink.deleteDocs]] rewrites it, because after the
+    * rewrite no surface has the text to subtract. */
   def forget(spark: SparkSession, docIds: DataFrame, corpusDir: String,
-      postingsDir: String, minhashDir: String,
-      positionsDir: Option[String] = None,
-      pqDir: Option[String] = None, sqDir: Option[String] = None,
-      langDir: Option[String] = None,
-      dsirDir: Option[String] = None): Unit = {
+      stores: Seq[(Store, String)]): Unit = {
     val ids = docIds.select(col("doc_id")).localCheckpoint(true)
     val n = ids.count()
     require(n == ids.distinct().count(),
@@ -95,7 +79,7 @@ object Forget {
     // redacted text — the SAME text the maintained stores trained on,
     // which is exactly what the subtraction must use).
     val victims =
-      if (langDir.isDefined || dsirDir.isDefined) {
+      if (stores.exists(_._1.input == Store.Labeled)) {
         val corpus = spark.read.parquet(corpusDir)
         val textCol =
           if (corpus.columns.contains("text")) col("text")
@@ -107,49 +91,35 @@ object Forget {
           .localCheckpoint(true))
       } else None
     CorpusSink.deleteDocs(spark, ids, corpusDir)
-    PostingsIndex.removeBatch(spark, ids, postingsDir)
-    MinhashIndex.removeBatch(spark, ids, minhashDir)
-    positionsDir.foreach(PositionsIndex.removeBatch(spark, ids, _))
-    val vecIds = ids.select(col("doc_id").as("vec_id"))
-    pqDir.foreach(PqIndex.removeBatch(spark, vecIds, _))
-    sqDir.foreach(SqIndex.removeBatch(spark, vecIds, _))
-    langDir.foreach(LangProfileStore.removeBatch(spark, victims.get, _))
-    dsirDir.foreach(DsirStore.removeBatch(spark, victims.get, _))
-    ()
+    for ((store, dir) <- stores) {
+      val keys = store.input match {
+        case Store.Text => ids
+        case Store.Vectors => ids.select(col("doc_id").as("vec_id"))
+        case Store.Labeled => victims.get
+      }
+      store.removeBatch(spark, keys, dir)
+    }
   }
 
   /** One composed publish+build+forget per (JVM, sf directory), shared
     * by all the registry entries: corpus published lang-partitioned,
-    * every store built/trained over the full corpus, then ONE
-    * [[forget]] of the odd doc_ids across all seven surfaces. Returns
-    * the composed store root. */
+    * every registry store built over the full sf directory, then ONE
+    * [[forget]] of the odd doc_ids across all of them. Returns the
+    * composed store root ([[Store.under]] layout). */
   private def forgottenDirs(spark: SparkSession, sfDir: String): String = {
     val dir = StoreDirs.tmpStoreDir("graft-forget", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("lang"), col("text"))
       CorpusSink.appendCurated(docs, s"$dir/corpus")
-      PostingsIndex.buildFrom(spark,
-        docs.select(col("doc_id"), col("text")), s"$dir/postings")
-      MinhashIndex.build(spark,
-        docs.select(col("doc_id"), col("text")), s"$dir/minhash")
-      PositionsIndex.buildFrom(spark,
-        docs.select(col("doc_id"), col("text")), s"$dir/positions")
-      PqIndex.build(spark, sfDir, s"$dir/pq")
-      SqIndex.build(spark, sfDir, s"$dir/sq")
-      LangProfileStore.buildFrom(spark, docs, s"$dir/lang")
-      DsirStore.buildFrom(spark, docs, s"$dir/dsir")
+      val stores = Store.under(dir)
+      for ((store, storeDir) <- stores) store.build(spark, sfDir, storeDir)
       forget(spark,
         docs.where(col("doc_id") % 2 === 1).select(col("doc_id")),
-        s"$dir/corpus", s"$dir/postings", s"$dir/minhash",
-        Some(s"$dir/positions"), Some(s"$dir/pq"), Some(s"$dir/sq"),
-        Some(s"$dir/lang"), Some(s"$dir/dsir"))
+        s"$dir/corpus", stores)
     }
     dir
   }
-
-  private val built =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Registry entry: the surviving published corpus rolled up per
     * language — read from the REWRITTEN partitions, so a victim

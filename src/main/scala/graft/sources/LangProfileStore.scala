@@ -33,17 +33,11 @@ import graft.pipeline.DataOps
  * L·|trigrams| for counts), broadcast on every probe; at cluster
  * scale the store is trivially replicated.
  */
-object LangProfileStore {
+object LangProfileStore extends Store {
 
-  /** One store build+mutate per (JVM, directory) — the K9 guard:
-    * later registry calls probe, never re-mutate. */
-  private val built =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Train (overwrite) the profile store from the sf corpus. */
-  def build(spark: SparkSession, sfDir: String, storeDir: String): Unit =
-    buildFrom(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet"), storeDir)
+  def name = "lang"
+  def relations = Seq("counts", "profiles")
+  def input = Store.Labeled
 
   /** Train (overwrite) the profile store from a (doc_id, lang, text)
     * labeled corpus frame. */
@@ -69,7 +63,7 @@ object LangProfileStore {
     * `langIdIncremental` registry entry against [[DataOps.langIdNgram]]'s
     * own full-corpus oracle. */
   def appendBatch(spark: SparkSession, batch: DataFrame,
-      storeDir: String, tag: String = null): Unit = {
+      storeDir: String, tag: String): Unit = {
     val countsDir = s"$storeDir/counts"
     // On a replay where counts already absorbed this batch (witness in
     // the relation), profiles must derive from the POST-MERGE relation
@@ -148,7 +142,7 @@ object LangProfileStore {
         DataOps.ctProfilesFromCounts(DataOps.ctGramCounts(spark, train)))
     }
     val dir = StoreDirs.tmpStoreDir("graft-lang-store", sfDir)
-    if (built.add(dir)) buildFrom(spark, train, dir)
+    StoreDirs.once(dir)(buildFrom(spark, train, dir))
     // langIdNgram's cache hygiene: the probe gram counts feed the doc
     // profile, its size aggregate and the label join.
     val gc = DataOps.ctGramCounts(spark, probe).persist()
@@ -171,7 +165,7 @@ object LangProfileStore {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("lang"), col("text"))
     val dir = StoreDirs.tmpStoreDir("graft-lang-incr", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
       appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
     }
@@ -220,7 +214,7 @@ object LangProfileStore {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("lang"), col("text"))
     val dir = StoreDirs.tmpStoreDir("graft-lang-incr", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
       appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
     }
@@ -242,7 +236,7 @@ object LangProfileStore {
       return langIdStored(spark, sfDir)
     }
     val dir = StoreDirs.tmpStoreDir("graft-lang-del", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, d, dir)
       removeBatch(spark, odds, dir)
     }

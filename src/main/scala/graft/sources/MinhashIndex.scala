@@ -31,7 +31,17 @@ import graft.pipeline.DataOps
  * `shingles` by `doc_id`) so the snapshot probe co-locates without a
  * corpus-side shuffle — the layout knob, not a plan change.
  */
-object MinhashIndex {
+object MinhashIndex extends Store {
+
+  def name = "minhash"
+  def relations = Seq("shingles", "bands")
+  def input = Store.Text
+  override def ingestDir(outDir: String, indexDir: String): String =
+    indexDir
+
+  /** [[build]] under the [[Store]] contract's name. */
+  def buildFrom(spark: SparkSession, corpus: DataFrame,
+      indexDir: String): Unit = build(spark, corpus, indexDir)
 
   /** Build (overwrite) the index from a (doc_id, text) corpus frame. */
   def build(spark: SparkSession, corpus: DataFrame,
@@ -61,7 +71,7 @@ object MinhashIndex {
     * never read. Each append lands one parquet file set — [[compact]]
     * folds the pileup. */
   def appendBatch(spark: SparkSession, batch: DataFrame,
-      indexDir: String, tag: String = null): Unit = {
+      indexDir: String, tag: String): Unit = {
     val sh = DataOps.shingleHashes(spark, batch).persist()
     StoreDirs.appendOnce(sh, s"$indexDir/shingles", tag)
     StoreDirs.appendOnce(DataOps.minhashBandsOf(sh),
@@ -78,8 +88,8 @@ object MinhashIndex {
     * (pinned in MinhashIndexSpec); at cluster scale the same rewrite
     * buckets bands by `bh` and shingles by `doc_id` (the layout knob
     * of the store scaladoc). */
-  def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int = 1): Unit = {
+  override def compact(spark: SparkSession, indexDir: String,
+      numFiles: Int): Unit = {
     val sh = spark.read.parquet(s"$indexDir/shingles")
       .repartition(numFiles)
       .sortWithinPartitions(col("doc_id"), col("h"))
@@ -111,13 +121,6 @@ object MinhashIndex {
         count_distinct(col("bh")).as("n_buckets"))))
   }
 
-  /** One store build+mutate per (JVM, directory) — the K9 guard: the
-    * lifecycle entries' mutation half re-run per call would only
-    * rebuild the identical store (build overwrites), so later registry
-    * calls probe, never re-mutate. */
-  private val built =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Registry form of the telemetry: build the full-corpus store once,
     * read the one-row health readout purely from it. */
   def minhashStats(spark: SparkSession, sfDir: String): DataFrame = {
@@ -134,7 +137,7 @@ object MinhashIndex {
           count_distinct(col("bh")).as("n_buckets"))))
     }
     val dir = StoreDirs.tmpStoreDir("graft-mh-stats", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       build(spark, spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text")), dir)
     }
@@ -159,7 +162,7 @@ object MinhashIndex {
         DataOps.minhashBandsOf(shIdx), shIdx)
     }
     val dir = StoreDirs.tmpStoreDir("graft-mh-incr", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       build(spark, docs.where(col("doc_id") % 3 === 0), dir)
       appendBatch(spark, docs.where(col("doc_id") % 3 === 1), dir)
     }
@@ -203,7 +206,7 @@ object MinhashIndex {
         DataOps.minhashBandsOf(shIdx), shIdx)
     }
     val dir = StoreDirs.tmpStoreDir("graft-mh-del", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       build(spark, docs, dir)
       removeBatch(spark, nw.select(col("doc_id")), dir)
     }
@@ -281,7 +284,7 @@ object MinhashIndex {
         DataOps.minhashBandsOf(shIdx), shIdx)
     }
     val dir = StoreDirs.tmpStoreDir("graft-mh-index", sfDir)
-    if (built.add(dir)) build(spark, old, dir)
+    StoreDirs.once(dir)(build(spark, old, dir))
     dedupAgainst(spark, nw, dir)
   }
 
@@ -313,10 +316,6 @@ object MinhashIndex {
       spark.read.parquet(s"$indexDir/shingles"))
   }
 
-  /** One bucketed-table write per (JVM, sf directory). */
-  private val bucketedBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Registry form of the BUCKETED layout — [[dedupIndexed]]'s
     * buildOnce store with its band relation re-laid out bucketed once,
     * probed by the same odd-half snapshot. Result ≡ [[dedupIndexed]]
@@ -337,10 +336,10 @@ object MinhashIndex {
         DataOps.minhashBandsOf(shIdx), shIdx)
     }
     val dir = StoreDirs.tmpStoreDir("graft-mh-index", sfDir)
-    if (built.add(dir)) build(spark, old, dir)
+    StoreDirs.once(dir)(build(spark, old, dir))
     val table = "graft_bands_bkt_" +
       java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
-    if (bucketedBuilt.add(table)) {
+    StoreDirs.once(table) {
       writeBucketedBands(spark, dir, table,
         path = Some(StoreDirs.tmpStoreDir("graft-bands-bktdata", sfDir)))
     }

@@ -34,14 +34,11 @@ import graft.pipeline.DataOps
  * corpus. Appends cost one tokenize pass over the BATCH; removals one
  * scan-and-filter.
  */
-object PositionsIndex {
+object PositionsIndex extends Store {
 
-  /** Tokenize the sf corpus once and write (overwrite) the positional
-    * relation. */
-  def build(spark: SparkSession, sfDir: String, indexDir: String): Unit =
-    buildFrom(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text")), indexDir)
+  def name = "positions"
+  def relations = Seq("positions")
+  def input = Store.Text
 
   /** Build (overwrite) the store from a (doc_id, text) corpus frame. */
   def buildFrom(spark: SparkSession, corpus: DataFrame,
@@ -55,7 +52,7 @@ object PositionsIndex {
     * (doc_ids disjoint from the store's): one tokenize pass over the
     * batch, rows append on disjoint keys. */
   def appendBatch(spark: SparkSession, batch: DataFrame,
-      indexDir: String, tag: String = null): Unit = {
+      indexDir: String, tag: String): Unit = {
     StoreDirs.appendOnce(DataOps.positionsOf(spark, batch),
       s"$indexDir/positions", tag)
     ()
@@ -75,8 +72,8 @@ object PositionsIndex {
 
   /** COMPACTION — `numFiles`-file re-layout sorted by (t, doc_id, pos)
     * — the probe key first; contents bit-identical. */
-  def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int = 1): Unit = {
+  override def compact(spark: SparkSession, indexDir: String,
+      numFiles: Int): Unit = {
     val p = spark.read.parquet(s"$indexDir/positions")
       .repartition(numFiles)
       .sortWithinPartitions(col("t"), col("doc_id"), col("pos"))
@@ -112,11 +109,6 @@ object PositionsIndex {
     DataOps.proximityServeStage(
       spark.read.parquet(s"$indexDir/positions"), terms)
 
-  /** One store build+mutate per (JVM, directory) — the K9 guard: the
-    * lifecycle entries' append half is not idempotent. */
-  private val built =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private def standardParts(spark: SparkSession,
       sfDir: String): DataFrame =
     DataOps.phraseParts(spark,
@@ -134,7 +126,7 @@ object PositionsIndex {
       return DataOps.phraseSearch(spark, sfDir)
     }
     val dir = StoreDirs.tmpStoreDir("graft-pos-index", sfDir)
-    if (built.add(dir)) build(spark, sfDir, dir)
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     phraseAgainst(spark, standardParts(spark, sfDir), dir)
   }
 
@@ -148,7 +140,7 @@ object PositionsIndex {
       return DataOps.proximitySearch(spark, sfDir)
     }
     val dir = StoreDirs.tmpStoreDir("graft-pos-index", sfDir)
-    if (built.add(dir)) build(spark, sfDir, dir)
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     proximityAgainst(spark,
       DataOps.proximityTerms(spark,
         spark.read.parquet(s"$sfDir/documents.parquet")
@@ -166,7 +158,7 @@ object PositionsIndex {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val dir = StoreDirs.tmpStoreDir("graft-pos-incr", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
       appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
     }
@@ -203,7 +195,7 @@ object PositionsIndex {
       return positionsStatsOf(DataOps.positionsOf(spark, d))
     }
     val dir = StoreDirs.tmpStoreDir("graft-pos-incr", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
       appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
     }
@@ -264,10 +256,6 @@ object PositionsIndex {
     phraseAgainstBucketed(spark, tokens, parts, table)
   }
 
-  /** One bucketed-table write per (JVM, sf directory). */
-  private val bucketedBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Registry form of the BUCKETED layout — the oracle-checked proof
     * that the 100 TB positional layout serves the standard phrase
     * byte-identically: [[phraseIndexed]]'s buildOnce store re-laid out
@@ -283,10 +271,10 @@ object PositionsIndex {
       return DataOps.phraseSearch(spark, sfDir)
     }
     val dir = StoreDirs.tmpStoreDir("graft-pos-index", sfDir)
-    if (built.add(dir)) build(spark, sfDir, dir)
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     val table = "graft_positions_bkt_" +
       java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
-    if (bucketedBuilt.add(table)) {
+    StoreDirs.once(table) {
       writeBucketedPositions(spark, dir, table,
         path = Some(StoreDirs.tmpStoreDir("graft-pos-bktdata", sfDir)))
     }
@@ -317,7 +305,7 @@ object PositionsIndex {
         DataOps.phraseParts(spark, d))
     }
     val dir = StoreDirs.tmpStoreDir("graft-pos-del", sfDir)
-    if (built.add(dir)) {
+    StoreDirs.once(dir) {
       buildFrom(spark, d, dir)
       removeBatch(spark,
         d.where(col("doc_id") % 2 === 1).select(col("doc_id")), dir)

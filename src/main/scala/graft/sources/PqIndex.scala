@@ -49,7 +49,11 @@ import graft.pipeline.DataOps
  * scan-and-filter of codes/cells (the compaction-style full form, as
  * in [[PostingsIndex.removeBatch]]).
  */
-object PqIndex {
+object PqIndex extends Store {
+
+  def name = "pq"
+  def relations = Seq("codebook", "codes", "centroids", "cells")
+  def input = Store.Vectors
 
   /** Train the PQ model + IVF coarse quantizer over the sf directory's
     * embeddings and write (overwrite) the four store relations. Routes
@@ -57,7 +61,8 @@ object PqIndex {
     * ([[DataOps.pqCodebook]]/[[DataOps.centroids]] — training is
     * deterministic, so the store content is bit-identical whether the
     * models come fresh or cached; only the repeated Lloyd passes go). */
-  def build(spark: SparkSession, sfDir: String, indexDir: String): Unit = {
+  override def build(spark: SparkSession, sfDir: String,
+      indexDir: String): Unit = {
     val v = DataOps.emb(spark, sfDir)
     val el = DataOps.pqElements(v).persist()
     val refined = DataOps.pqCodebook(spark, sfDir)
@@ -98,7 +103,7 @@ object PqIndex {
     * any batch decomposition yields the identical store (pinned in
     * PqIndexSpec; hash-audited by `annPqIncremental`). */
   def appendBatch(spark: SparkSession, v: DataFrame,
-      indexDir: String, tag: String = null): Unit = {
+      indexDir: String, tag: String): Unit = {
     val el = DataOps.pqElements(v).persist()
     StoreDirs.appendOnce(DataOps.pqAssign(el,
         spark.read.parquet(s"$indexDir/codebook")),
@@ -133,8 +138,8 @@ object PqIndex {
     * `numFiles`-file layout (codes sorted by (vec_id, m), cells by
     * (cid, vec_id) — the probe keys), folding the one-file-set-per-
     * [[appendBatch]] pileup; contents bit-identical (PqIndexSpec). */
-  def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int = 1): Unit = {
+  override def compact(spark: SparkSession, indexDir: String,
+      numFiles: Int): Unit = {
     val codes = spark.read.parquet(s"$indexDir/codes")
       .repartition(numFiles)
       .sortWithinPartitions(col("vec_id"), col("m"))
@@ -157,19 +162,6 @@ object PqIndex {
       spark.read.parquet(s"$indexDir/codes"),
       DataOps.emb(spark, sfDir))
 
-  /** One store build+mutate per (JVM, directory): the lifecycle
-    * entries run a build + append/remove SEQUENCE whose append half is
-    * not idempotent, so a second registry call in the same JVM must
-    * probe the existing store, never re-mutate it (the
-    * [[PostingsIndex.bm25Incremental]] discipline). The guard BLOCKS
-    * concurrent callers for the same key until the first build
-    * completes (`computeIfAbsent`, not a bare set-add): the recall
-    * audits build independent tiers on overlapped driver threads, and
-    * a losing thread must never probe a half-written store. */
-  private val built = new StoreDirs.OnceMap[Unit]
-
-  private def once(key: String)(body: => Unit): Unit = built(key)(body)
-
   /** Registry form — the full round-trip: build (write) the store for
     * the sf directory ONCE (shared with [[annIvfPqIndexed]] — one
     * build, both probes), then answer the standard ANN query set
@@ -186,7 +178,7 @@ object PqIndex {
         refined, coded, DataOps.emb(spark, sfDir))
     }
     val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    once(dir)(build(spark, sfDir, dir))
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
   }
 
@@ -300,13 +292,6 @@ object PqIndex {
       DataOps.emb(spark, sfDir))
   }
 
-  /** One bucketed-codes write per (JVM, sf directory) — the same
-    * blocking [[StoreDirs.OnceMap]] discipline as [[built]] (round-16
-    * ADVICE: the former non-blocking `keySet.add` would let a losing
-    * thread read a half-written bucketed table if this entry ever
-    * joins a parallel fan-out). */
-  private val bucketedBuilt = new StoreDirs.OnceMap[Unit]
-
   /** Registry form of the inverted-list layout — the SERVING shape: one
     * user query (the standard set's minimum q_id — a deterministic
     * stand-in), its ≤[[DataOps.IvfPqProbes]] probe cells resolved
@@ -322,10 +307,10 @@ object PqIndex {
       return DataOps.annIvfPq(spark, sfDir).where(col("q_id") === 0L)
     }
     val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    once(dir)(build(spark, sfDir, dir))
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     val table = "graft_codes_bkt_" +
       java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
-    bucketedBuilt(table) {
+    StoreDirs.once(table) {
       writeBucketedCodes(spark, dir, table,
         path = Some(StoreDirs.tmpStoreDir("graft-codes-bktdata", sfDir)))
     }
@@ -360,7 +345,7 @@ object PqIndex {
       return DataOps.annIvfPq(spark, sfDir)
     }
     val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    once(dir)(build(spark, sfDir, dir))
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     ivfPqAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
   }
 
@@ -420,7 +405,7 @@ object PqIndex {
           .agg(count(lit(1)).as("n_cells"))))
     }
     val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    once(dir)(build(spark, sfDir, dir))
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     statsOf(spark, dir)
   }
 
@@ -443,7 +428,7 @@ object PqIndex {
         refined, DataOps.pqAssign(DataOps.pqElements(v), refined), v)
     }
     val dir = StoreDirs.tmpStoreDir("graft-pq-incr", sfDir)
-    once(dir) {
+    StoreDirs.once(dir) {
       buildFrom(spark, v.where(col("vec_id") % 2 === 0), dir)
       appendBatch(spark, v.where(col("vec_id") % 2 === 1), dir)
     }
@@ -465,7 +450,7 @@ object PqIndex {
         DataOps.emb(spark, sfDir))
     }
     val dir = StoreDirs.tmpStoreDir("graft-pq-del", sfDir)
-    once(dir) {
+    StoreDirs.once(dir) {
       build(spark, sfDir, dir)
       removeBatch(spark,
         DataOps.emb(spark, sfDir).where(col("vec_id") % 2 === 1)

@@ -38,12 +38,11 @@ import graft.pipeline.DataOps
  * rows only. Appends cost one quantize pass over the batch; removals
  * one scan-and-filter (the compaction-style full form).
  */
-object SqIndex {
+object SqIndex extends Store {
 
-  /** Quantize the sf directory's embeddings and write (overwrite) the
-    * reconstruction relation. */
-  def build(spark: SparkSession, sfDir: String, indexDir: String): Unit =
-    buildFrom(spark, DataOps.emb(spark, sfDir), indexDir)
+  def name = "sq"
+  def relations = Seq("recon")
+  def input = Store.Vectors
 
   /** Build (overwrite) the store from a (vec_id, em, nrm) vectors
     * frame ([[DataOps.emb]] shape). */
@@ -61,7 +60,7 @@ object SqIndex {
     * store (pinned in SqIndexSpec; hash-audited by
     * `annSqIncremental`). */
   def appendBatch(spark: SparkSession, v: DataFrame,
-      indexDir: String, tag: String = null): Unit = {
+      indexDir: String, tag: String): Unit = {
     StoreDirs.appendOnce(DataOps.sqRecon(spark, v),
       s"$indexDir/recon", tag)
     ()
@@ -84,8 +83,8 @@ object SqIndex {
     * `numFiles`-file layout sorted by vec_id, folding the
     * one-file-set-per-[[appendBatch]] pileup; contents bit-identical
     * (SqIndexSpec). */
-  def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int = 1): Unit = {
+  override def compact(spark: SparkSession, indexDir: String,
+      numFiles: Int): Unit = {
     val recon = spark.read.parquet(s"$indexDir/recon")
       .repartition(numFiles)
       .sortWithinPartitions(col("vec_id"))
@@ -102,18 +101,6 @@ object SqIndex {
       spark.read.parquet(s"$indexDir/recon"),
       DataOps.emb(spark, sfDir))
 
-  /** One store build+mutate per (JVM, directory) — the
-    * [[PqIndex]]/[[PostingsIndex]] guard: the lifecycle entries' append
-    * half is not idempotent, so later registry calls probe, never
-    * re-mutate. */
-  private val built = new StoreDirs.OnceMap[Unit]
-
-  /** Blocking once-per-key guard (the [[PqIndex]] form): concurrent
-    * audit-tier threads for the same store must wait for the first
-    * build, never probe a half-written directory; the body runs
-    * outside the map's bin lock ([[StoreDirs.OnceMap]]). */
-  private def once(key: String)(body: => Unit): Unit = built(key)(body)
-
   /** Registry form — the full round-trip: build (write) the store,
     * then answer the standard ANN query set purely from the read-back
     * relation. Result ≡ [[DataOps.annSq]] (same oracle). */
@@ -126,7 +113,7 @@ object SqIndex {
         DataOps.emb(spark, sfDir))
     }
     val dir = StoreDirs.tmpStoreDir("graft-sq-index", sfDir)
-    once(dir)(build(spark, sfDir, dir))
+    StoreDirs.once(dir)(build(spark, sfDir, dir))
     queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
   }
 
@@ -142,7 +129,7 @@ object SqIndex {
         DataOps.sqRecon(spark, v), v)
     }
     val dir = StoreDirs.tmpStoreDir("graft-sq-incr", sfDir)
-    once(dir) {
+    StoreDirs.once(dir) {
       buildFrom(spark, v.where(col("vec_id") % 2 === 0), dir)
       appendBatch(spark, v.where(col("vec_id") % 2 === 1), dir)
     }
@@ -181,7 +168,7 @@ object SqIndex {
       return reconStats(DataOps.sqRecon(spark, v))
     }
     val dir = StoreDirs.tmpStoreDir("graft-sq-incr", sfDir)
-    once(dir) {
+    StoreDirs.once(dir) {
       buildFrom(spark, v.where(col("vec_id") % 2 === 0), dir)
       appendBatch(spark, v.where(col("vec_id") % 2 === 1), dir)
     }
@@ -199,7 +186,7 @@ object SqIndex {
         DataOps.sqRecon(spark, v.where(col("vec_id") % 2 === 0)), v)
     }
     val dir = StoreDirs.tmpStoreDir("graft-sq-del", sfDir)
-    once(dir) {
+    StoreDirs.once(dir) {
       build(spark, sfDir, dir)
       removeBatch(spark,
         v.where(col("vec_id") % 2 === 1).select(col("vec_id")), dir)

@@ -251,12 +251,21 @@ private[graft] object StoreDirs {
     * cheap [[java.util.concurrent.FutureTask]], so two DIFFERENT keys
     * that hash into the same bin (the overlapped recall-audit tiers
     * build `graft-pq-index`/`-incr`/`-del` concurrently) no longer
-    * serialize behind a minutes-long store build, and a body that
-    * re-enters the map can never deadlock on its own bin. Same-key
-    * callers still block until the winner's body completes (the
-    * build-once contract). A failed body's entry is REMOVED before
-    * the error propagates, so a later caller retries instead of
-    * replaying a cached exception — the pre-round semantics. */
+    * serialize behind a minutes-long store build, and a body may call
+    * `apply` for ANOTHER key without deadlocking on its own bin.
+    * Same-key callers block until the winner's body completes (the
+    * build-once contract).
+    *
+    * FAILURE: a failed body's entry is removed before the error
+    * propagates. Callers ALREADY BLOCKED on that entry share the
+    * winner's failure (they receive its exception; they do not run
+    * the body themselves); only callers arriving after the removal
+    * retry the body.
+    *
+    * RE-ENTRY: a body that calls `apply` with its OWN key blocks
+    * forever (it waits on the task it is running). No store body
+    * does: every [[once]] body builds and mutates its own directory
+    * and calls no other `once`. */
   private[graft] final class OnceMap[V] {
     private val m = new java.util.concurrent.ConcurrentHashMap[
       String, java.util.concurrent.FutureTask[V]]()
@@ -281,6 +290,18 @@ private[graft] object StoreDirs {
       m.keySet.removeIf(k => !p(k)); ()
     }
   }
+
+  private val built = new OnceMap[Unit]
+
+  /** The build-once guard of every store registry entry (and of
+    * [[Forget]]'s composed fixture): `body` — a store build plus its
+    * lifecycle mutation, or a bucketed-table write — runs once per
+    * (JVM, `key`); later callers probe what it wrote. Concurrent
+    * same-key callers wait for it, and a build that throws leaves no
+    * entry behind, so the next call retries instead of probing a
+    * missing or half-written directory. Keys are store directories
+    * or table names, unique per entry. */
+  def once(key: String)(body: => Unit): Unit = built(key)(body)
 
   /** This JVM's random nonce — also the default ingest writer identity
     * ([[graft.streaming.IngestPipeline]]'s lease). */

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.{CorpusSink, DsirStore, LangProfileStore,
-  MinhashIndex, PositionsIndex, PostingsIndex, StoreDirs}
+import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
 
 /**
  * The end-to-end INGEST JOB — the data-pipeline surface in the same
@@ -25,33 +24,31 @@ import graft.sources.{CorpusSink, DsirStore, LangProfileStore,
  *     (per-batch batch-join — zero stream state, the store holds every
  *     heavy relation)
  *   → [[CorpusSink.appendCurated]] (lang-partitioned parquet publish)
- *   → [[PostingsIndex.appendBatch]] + [[PositionsIndex.appendBatch]]
- *     (the K9 search index and the K10 positional index absorb the
- *     published batch — landed documents become immediately BM25- AND
- *     exact-phrase-searchable, indexed on the same redacted text that
- *     was published)
- *   → [[MinhashIndex.appendBatch]] (the dedup store absorbs the same
- *     published batch, so batch N+1 dedups against every batch ≤ N —
- *     CONTINUOUS ingest dedup, not just new-vs-bootstrap; within ONE
- *     micro-batch documents still pass independently, the documented
- *     batch-granularity scope — [[graft.pipeline.DataOps.dedupMinhash]]
- *     over a batch is the new-vs-new complement)
- *   → [[LangProfileStore.appendBatch]] + [[DsirStore.appendBatch]]
- *     (the K6/K8 trained-model stores absorb the published batch's
- *     labeled text — the language classifier and importance model the
- *     pipeline serves RETRAIN CONTINUOUSLY from what it publishes;
- *     count merges are associative, so the maintained models stay
- *     bit-identical to one-shot builds over the published corpus, and
- *     [[graft.sources.Forget.forget]]'s subtraction is their exact
- *     inverse — the append/forget loop is closed for every store this
- *     job maintains)
+ *   → every store of the [[graft.sources.Store.all]] registry absorbs
+ *     the published batch, in registry order, through its own
+ *     [[graft.sources.Store.Input]] projection: the search, positional
+ *     and dedup stores take the redacted text (landed documents become
+ *     immediately BM25- and exact-phrase-searchable, and batch N+1
+ *     dedups against every batch ≤ N — CONTINUOUS ingest dedup; within
+ *     ONE micro-batch documents still pass independently, the
+ *     documented batch-granularity scope, with
+ *     [[graft.pipeline.DataOps.dedupMinhash]] over a batch as the
+ *     new-vs-new complement), the trained-model stores take the
+ *     labeled text (the served classifier and importance model
+ *     RETRAIN CONTINUOUSLY from what the pipeline publishes; count
+ *     merges are associative, so they stay bit-identical to one-shot
+ *     builds), and the vector stores take the embeddings when the
+ *     batch carries them. [[graft.sources.Forget.forget]]'s removals
+ *     are the exact inverses, so the append/forget loop is closed for
+ *     every store this job maintains.
  *
  * with near-dup hits appended to `outDir/dups` as the audit trail.
  *
  * RESTART SAFETY: the query checkpoints under `outDir/checkpoint`,
- * every maintained store is seeded ONLY if absent (a restarted query
- * resumes from committed offsets and never re-delivers absorbed
- * batches — re-seeding would wipe them while the corpus keeps them),
+ * every seedable store is seeded ONLY if its completeness witness is
+ * absent (a restarted query resumes from committed offsets and never
+ * re-delivers absorbed batches — re-seeding would wipe them while the
+ * corpus keeps them),
  * and each batch runs a TWO-PHASE commit: (1) STAGE — the batch's
  * outputs (curated survivors, dup audit rows, fresh-id ledger delta)
  * are computed from the current store state and land under
@@ -87,18 +84,15 @@ import graft.sources.{CorpusSink, DsirStore, LangProfileStore,
  * [[finishBatch]] + store appends (pinned in StreamingSpec, including
  * the cross-batch near-dup case and the replay no-op), and the
  * maintained search index stays ≡ a one-shot build over the published
- * corpus ([[PostingsIndex.appendBatch]] invariance).
+ * corpus (the additive-append law every store keeps).
  *
- * VECTOR STORES (round 13): when the landed documents carry an
- * `embedding` column, the job also maintains the K5/K7 vector stores
- * under `outDir/pq` and `outDir/sq` — the PQ store bootstraps its
- * codebook on the FIRST published batch (FAISS-style: train on the
- * first sample, frozen-codebook `add` thereafter), the SQ store's
- * per-vector codes make the maintained relation ≡ a one-shot build.
- * Both sit behind their own committed-batch markers like every other
- * sink, and [[graft.sources.Forget.forget]]'s vec_id = doc_id
- * subtraction is their exact inverse — the append/forget loop closes
- * over ALL SEVEN maintained surfaces.
+ * VECTOR STORES: when the landed documents carry an `embedding`
+ * column, the vector stores (the registry entries whose input is not
+ * seedable) build from the FIRST published batch that carries one —
+ * the PQ store FAISS-style (train the codebook on the first sample,
+ * frozen-codebook `add` thereafter; the SQ store's per-vector codes
+ * make the maintained relation ≡ a one-shot build) — behind an intent
+ * marker that pins build-vs-append before the store mutates.
  *
  * 100 TB shape: the file source admits micro-batches by
  * `maxFilesPerTrigger`; per batch the only shuffles are the probe's
@@ -106,8 +100,8 @@ import graft.sources.{CorpusSink, DsirStore, LangProfileStore,
  * publish `repartition(lang)` and the ledger anti-join (doc_id-only
  * columns); nothing grows with stream length except the stores
  * themselves, whose file pileup the `compactEvery` maintenance hook
- * folds ([[PostingsIndex.compact]]/[[MinhashIndex.compact]] every N
- * batches — contents-identical re-layout).
+ * folds (every store's `compact` every N batches — contents-identical
+ * re-layout).
  */
 object IngestPipeline {
 
@@ -163,10 +157,11 @@ object IngestPipeline {
   /** Compose and start the DAG over a (doc_id, text, lang, source, ...)
     * document stream. The curation verdict runs IN-STREAM (stateless,
     * its benchmark gram literal is built once at plan time); the dedup
-    * probe, the partitioned publish and both store merges run per
-    * micro-batch. The K9 postings store under `outDir/index` is seeded
-    * EMPTY up front, then absorbs each published batch additively;
-    * the K4 dedup store under `indexDir` (bootstrapped by the caller)
+    * probe, the partitioned publish and the store absorbs run per
+    * micro-batch. Each registry store lives at its
+    * [[graft.sources.Store.ingestDir]]: under `outDir`, except the
+    * dedup store, which lives in the caller-bootstrapped `indexDir`
+    * (seeded empty like the others if the caller left it absent) and
     * absorbs the same batches, closing the loop that lets later
     * batches dedup against earlier ones. */
   def start(docStream: DataFrame, sfDir: String, indexDir: String,
@@ -183,55 +178,42 @@ object IngestPipeline {
     // owner is either alive or died uncleanly — exactly the two cases
     // where refusing to start is right.
     acquireLease(spark, outDir, writerId)
-    val searchDir = s"$outDir/index"
-    val posDir = s"$outDir/positions"
     // Sweep staging/ leftovers whose batch already committed: a crash
     // between the batch-level marker touch and the staging delete
     // leaves full curated/dups copies on disk forever otherwise —
     // replayed batches short-circuit on the marker and never reach the
     // in-line cleanup.
-    sweepCommittedStaging(spark, outDir)
-    // Seed each maintained store ONLY if its directory is absent (the
-    // minhash store's index-once discipline): a restarted query
-    // resumes from committed offsets and never re-delivers absorbed
-    // batches, so an unconditional re-seed would permanently wipe
-    // every previously-absorbed document from the maintained stores
-    // while the corpus keeps them. The LAST relation each build writes
-    // is the completeness witness (a crash mid-seed re-seeds — the
-    // store was empty anyway).
-    val empty = spark.range(0).select(col("id").as("doc_id"),
-      lit("").as("text"))
-    if (!StoreDirs.pathExists(spark, s"$searchDir/stats"))
-      PostingsIndex.buildFrom(spark, empty, searchDir)
-    if (!StoreDirs.pathExists(spark, s"$posDir/positions"))
-      PositionsIndex.buildFrom(spark, empty, posDir)
-    // Model stores seed empty too: counts/stats are pure sums, so the
-    // maintained model after N batches IS the one-shot build over the
-    // published corpus. (No compact hook needed — their appends rewrite
-    // the KB-sized relations wholesale, nothing piles up.)
-    val emptyLabeled = spark.range(0).select(col("id").as("doc_id"),
-      lit("").as("lang"), lit("").as("text"))
-    if (!StoreDirs.pathExists(spark, s"$outDir/lang/profiles"))
-      LangProfileStore.buildFrom(spark, emptyLabeled, s"$outDir/lang")
-    if (!StoreDirs.pathExists(spark, s"$outDir/dsir/stats"))
-      DsirStore.buildFrom(spark, emptyLabeled, s"$outDir/dsir")
+    sweepCommittedStaging(spark, outDir, indexDir)
+    // Seed each seedable store ONLY if its completeness witness is
+    // absent (the dedup store's index-once discipline): a restarted
+    // query resumes from committed offsets and never re-delivers
+    // absorbed batches, so an unconditional re-seed would permanently
+    // wipe every previously-absorbed document from the maintained
+    // stores while the corpus keeps them. A crash mid-seed re-seeds —
+    // the store was empty anyway. Seeding EMPTY keeps each store ≡ the
+    // one-shot build over the published corpus: every append merges
+    // additively.
+    val emptyPublished = spark.range(0).select(col("id").as("doc_id"),
+      lit("").as("lang"), lit("").as("clean_text"))
+    for (store <- Store.all if store.input.seedable) {
+      val dir = store.ingestDir(outDir, indexDir)
+      if (!StoreDirs.pathExists(spark, s"$dir/${store.witness}"))
+        store.buildFrom(spark, store.input.absorb(emptyPublished).get, dir)
+    }
     StreamingOps.curationStream(docStream, sfDir).writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         if (!StoreDirs.pathExists(s, s"$outDir/committed/$batchId")) {
-          processBatch(batch.toDF(), batchId, indexDir, searchDir,
-            posDir, outDir)
+          processBatch(batch.toDF(), batchId, indexDir, outDir)
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
             // Contents-identical re-layouts: a crash-replay re-compacts
-            // harmlessly, so these sit inside the batch marker.
-            PostingsIndex.compact(s, searchDir)
-            PositionsIndex.compact(s, posDir)
-            MinhashIndex.compact(s, indexDir)
-            // vector stores exist only when batches carry embeddings
-            if (StoreDirs.pathExists(s, s"$outDir/pq/codes"))
-              graft.sources.PqIndex.compact(s, s"$outDir/pq")
-            if (StoreDirs.pathExists(s, s"$outDir/sq/recon"))
-              graft.sources.SqIndex.compact(s, s"$outDir/sq")
+            // harmlessly, so these sit inside the batch marker. A
+            // vector store exists only once a batch carried embeddings.
+            for (store <- Store.all) {
+              val dir = store.ingestDir(outDir, indexDir)
+              if (StoreDirs.pathExists(s, s"$dir/${store.witness}"))
+                store.compact(s, dir)
+            }
           }
           StoreDirs.touchMarker(s, s"$outDir/committed/$batchId")
           val staging = new org.apache.hadoop.fs.Path(
@@ -297,40 +279,39 @@ object IngestPipeline {
     * committed marker exists — crash leftovers between marker touch
     * and cleanup. */
   private[graft] def sweepCommittedStaging(spark: SparkSession,
-      outDir: String): Unit = {
+      outDir: String, indexDir: String): Unit = {
     val staging = new org.apache.hadoop.fs.Path(s"$outDir/staging")
     val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(staging)) return
-    fs.listStatus(staging).foreach { st =>
+    if (fs.exists(staging)) fs.listStatus(staging).foreach { st =>
       if (StoreDirs.pathExists(spark,
           s"$outDir/committed/${st.getPath.getName}")) {
         fs.delete(st.getPath, true); ()
       }
     }
-    // Crash-leftover vector-store intent markers: the in-line cleanup
-    // in applyVectorStore misses a crash between the sink marker and
-    // its own delete, so sweep any `_intent_<batchId>` whose sink
+    // Crash-leftover build-vs-append intent markers: the in-line
+    // cleanup in processBatch misses a crash between the sink marker
+    // and its own delete, so sweep any `_intent_<batchId>` whose sink
     // committed marker exists.
-    Seq("pq", "sq").foreach { sink =>
-      val root = new org.apache.hadoop.fs.Path(s"$outDir/$sink")
+    for (store <- Store.all) {
+      val root = new org.apache.hadoop.fs.Path(
+        store.ingestDir(outDir, indexDir))
       if (fs.exists(root)) fs.listStatus(root).foreach { st =>
         val n = st.getPath.getName
+        val batchId = n.stripPrefix("_intent_")
         if (n.startsWith("_intent_") && StoreDirs.pathExists(spark,
-            s"$outDir/committed/${n.stripPrefix("_intent_")}.$sink")) {
+            s"$outDir/committed/$batchId.${store.name}")) {
           fs.delete(st.getPath, false); ()
         }
       }
     }
-    ()
   }
 
   /** One batch's TWO-PHASE commit: STAGE (ledger gate → curation tail
     * → freeze outputs under `staging/<batchId>`) then APPLY (publish +
-    * store merges + ledger append, each from the staged rows behind
+    * store absorbs + ledger append, each from the staged rows behind
     * its own marker — see the RESTART SAFETY scaladoc above). */
   private def processBatch(verdict: DataFrame, batchId: Long,
-      indexDir: String, searchDir: String, posDir: String,
-      outDir: String): Unit = {
+      indexDir: String, outDir: String): Unit = {
     val spark = verdict.sparkSession
     val seenPath = s"$outDir/seen"
     val stagingDir = s"$outDir/staging/$batchId"
@@ -365,17 +346,13 @@ object IngestPipeline {
     // per-sink markers remain as the fast path (skip the whole apply,
     // plans unbuilt); the witnesses close the marker's own window.
     val tag = batchId.toString
+    def marker(sink: String) = s"$outDir/committed/$batchId.$sink"
     def applyOnce(sink: String)(apply: => Unit): Unit =
-      if (!StoreDirs.pathExists(spark,
-          s"$outDir/committed/$batchId.$sink")) {
+      if (!StoreDirs.pathExists(spark, marker(sink))) {
         apply
-        StoreDirs.touchMarker(spark, s"$outDir/committed/$batchId.$sink")
+        StoreDirs.touchMarker(spark, marker(sink))
       }
     val published = spark.read.parquet(s"$stagingDir/curated")
-    val pubText = published.select(col("doc_id"),
-      col("clean_text").as("text"))
-    val pubLabeled = published.select(col("doc_id"), col("lang"),
-      col("clean_text").as("text"))
     applyOnce("dups") {
       StoreDirs.appendOnce(spark.read.parquet(s"$stagingDir/dups"),
         s"$outDir/dups", tag)
@@ -383,84 +360,42 @@ object IngestPipeline {
     applyOnce("corpus") {
       CorpusSink.appendCurated(published, s"$outDir/corpus", tag = tag)
     }
-    applyOnce("postings") {
-      PostingsIndex.appendBatch(spark, pubText, searchDir, tag)
-    }
-    applyOnce("positions") {
-      PositionsIndex.appendBatch(spark, pubText, posDir, tag)
-    }
-    applyOnce("minhash") {
-      MinhashIndex.appendBatch(spark, pubText, indexDir, tag)
-    }
-    applyOnce("lang") {
-      LangProfileStore.appendBatch(spark, pubLabeled, s"$outDir/lang",
-        tag)
-    }
-    applyOnce("dsir") {
-      DsirStore.appendBatch(spark, pubLabeled, s"$outDir/dsir", tag)
-    }
-    // Vector stores — maintained only when the landed batch carries an
-    // `embedding` column. The PQ store BOOTSTRAPS on the first
-    // published batch (FAISS-style: train the codebook on the first
-    // sample, then frozen-codebook `add` for every later batch — the
-    // store cannot seed empty, a codebook needs vectors to train on);
-    // SQ codes are per-vector, so build-vs-append is the same relation
-    // and the maintained store stays ≡ a one-shot build over the
-    // published corpus (PQ's codes are ≡ the sequential
-    // build(batch1)+append(batch2..) composition — the frozen-codebook
-    // contract, pinned in StreamingSpec).
-    if (published.columns.contains("embedding")) {
-      val vecs = published
-        .select(col("doc_id").as("vec_id"),
-          graft.functions.MicroVecExpr.micro(spark, col("embedding"))
-            .as("em"))
-        .withColumn("nrm",
-          graft.functions.VecDotExpr.dot(spark, col("em"), col("em")))
-      // Build-vs-append dispatch goes through an INTENT marker pinned
-      // BEFORE the store mutates: deciding by store content
-      // (pathExists(codebook)) would let a crash between a completed
-      // buildFrom and the sink marker replay as appendBatch — double-
-      // coding batch 1. With the intent recorded first, a build replay
-      // re-runs buildFrom, which is IDEMPOTENT (deterministic training,
-      // every relation lands via overwrite-semantics replaceParquet);
-      // only the generic one-sink append window remains, shared with
-      // every other store and documented above.
-      def applyVectorStore(sink: String, witness: String)(
-          build: => Unit)(append: => Unit): Unit = {
-        val intentPath = s"$outDir/$sink/_intent_$batchId"
-        applyOnce(sink) {
+    for (store <- Store.all; input <- store.input.absorb(published)) {
+      val dir = store.ingestDir(outDir, indexDir)
+      if (store.input.seedable) applyOnce(store.name) {
+        store.appendBatch(spark, input, dir, tag)
+      } else {
+        // A store that is not seeded builds from the first batch that
+        // carries its input. Build-vs-append goes through an INTENT
+        // marker pinned BEFORE the store mutates: deciding by store
+        // content alone would let a crash between a completed
+        // buildFrom and the sink marker replay as appendBatch —
+        // double-coding the batch. With the intent recorded first, a
+        // build replay re-runs buildFrom, which is IDEMPOTENT
+        // (deterministic training, every relation lands via
+        // overwrite-semantics replaceParquet).
+        val intentPath = s"$dir/_intent_$batchId"
+        applyOnce(store.name) {
           if (!StoreDirs.pathExists(spark, intentPath))
             StoreDirs.writeMarker(spark, intentPath,
-              if (StoreDirs.pathExists(spark, witness)) "append"
+              if (StoreDirs.pathExists(spark, s"$dir/${store.witness}"))
+                "append"
               else "build")
-          if (StoreDirs.readMarker(spark, intentPath) == "build") build
-          else append
+          if (StoreDirs.readMarker(spark, intentPath) == "build")
+            store.buildFrom(spark, input, dir)
+          else store.appendBatch(spark, input, dir, tag)
         }
         // The intent only pins build-vs-append BEFORE the mutation;
         // once the sink's committed marker exists a replay never reads
-        // it again, so drop it here — otherwise a long-running stream
+        // it again, so drop it — otherwise a long-running stream
         // accumulates one marker file per batch inside the store root.
-        if (StoreDirs.pathExists(spark,
-            s"$outDir/committed/$batchId.$sink"))
+        if (StoreDirs.pathExists(spark, marker(store.name)))
           StoreDirs.deletePath(spark, intentPath)
-      }
-      applyVectorStore("pq", s"$outDir/pq/codebook") {
-        graft.sources.PqIndex.buildFrom(spark, vecs, s"$outDir/pq")
-      } {
-        graft.sources.PqIndex.appendBatch(spark, vecs, s"$outDir/pq",
-          tag)
-      }
-      applyVectorStore("sq", s"$outDir/sq/recon") {
-        graft.sources.SqIndex.buildFrom(spark, vecs, s"$outDir/sq")
-      } {
-        graft.sources.SqIndex.appendBatch(spark, vecs, s"$outDir/sq",
-          tag)
       }
     }
     applyOnce("seen") {
       StoreDirs.appendOnce(freshIds, seenPath, tag)
     }
-    ()
   }
 
   /** The job form: bootstrap the dedup store from the existing corpus

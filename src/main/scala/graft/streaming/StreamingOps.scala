@@ -311,7 +311,7 @@ object StreamingOps {
     * pipeline actually operates (GDPR/CCPA requests arrive
     * continuously, not as one batch): each micro-batch of (doc_id)
     * deletion requests drives ONE composed [[graft.sources.Forget]]
-    * call across every maintained surface the pipeline publishes, and
+    * call across the corpus and every `(store, dir)` named, and
     * appends the honored ids to `outDir` as the compliance audit log
     * (request → batch_id → honored, the trail an auditor asks for).
     *
@@ -330,18 +330,14 @@ object StreamingOps {
     * every store's anti-join; per batch the corpus rewrite touches
     * only the victims' lang partitions. */
   def forgetStream(requestStream: DataFrame, corpusDir: String,
-      postingsDir: String, minhashDir: String,
-      positionsDir: Option[String] = None,
-      pqDir: Option[String] = None, sqDir: Option[String] = None,
-      langDir: Option[String] = None, dsirDir: Option[String] = None,
+      stores: Seq[(graft.sources.Store, String)],
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     requestStream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         if (!batch.isEmpty) {
           graft.sources.Forget.forget(batch.sparkSession, batch.toDF(),
-            corpusDir, postingsDir, minhashDir, positionsDir,
-            pqDir, sqDir, langDir, dsirDir)
+            corpusDir, stores)
           batch.toDF().select(col("doc_id"))
             .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(outDir)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.sources.{CorpusSink, DsirStore, Forget, LangProfileStore,
-  MinhashIndex, PostingsIndex, PqIndex, SqIndex}
+  MinhashIndex, PostingsIndex, PqIndex, SqIndex, Store}
 
 /** The composed right-to-be-forgotten ([[Forget]]) must scrub EVERY
   * surface with one call, refuse malformed requests before any store
@@ -36,14 +36,14 @@ class ForgetSpec extends SparkSpec {
       Forget.forget(spark,
         docs.limit(1).select(col("doc_id"))
           .unionAll(docs.limit(1).select(col("doc_id"))),
-        s"$dir/corpus", s"$dir/postings", s"$dir/minhash")
+        s"$dir/corpus", Store.under(dir, Seq(PostingsIndex, MinhashIndex)))
     }
     assert(dup.getMessage.contains("duplicate"))
     // an id that was never published
     val missing = intercept[IllegalArgumentException] {
       Forget.forget(spark,
         spark.range(1).select((col("id") + 999999999L).as("doc_id")),
-        s"$dir/corpus", s"$dir/postings", s"$dir/minhash")
+        s"$dir/corpus", Store.under(dir, Seq(PostingsIndex, MinhashIndex)))
     }
     assert(missing.getMessage.contains("not in the published"))
     assert(snapshot() == before)
@@ -63,7 +63,7 @@ class ForgetSpec extends SparkSpec {
     MinhashIndex.build(spark,
       docs.select(col("doc_id"), col("text")), s"$dir/minhash")
     Forget.forget(spark, Seq(1L, 2L).toDF("doc_id"),
-      s"$dir/corpus", s"$dir/postings", s"$dir/minhash")
+      s"$dir/corpus", Store.under(dir, Seq(PostingsIndex, MinhashIndex)))
     // the de partition still exists but reads back zero rows — the
     // per-partition rewrite handles the all-victims case the dynamic
     // overwrite mode would silently skip
@@ -97,8 +97,8 @@ class ForgetSpec extends SparkSpec {
       .select(col("doc_id"))
     val nVictims = victims.count()
     assert(nVictims > 0)
-    Forget.forget(spark, victims, s"$dir/corpus", s"$dir/postings",
-      s"$dir/minhash")
+    Forget.forget(spark, victims, s"$dir/corpus",
+      Store.under(dir, Seq(PostingsIndex, MinhashIndex)))
     // corpus: victims gone, everyone else intact, other partitions'
     // files bit-identical (names unchanged == no rewrite happened)
     val after = spark.read.parquet(s"$dir/corpus")
@@ -151,9 +151,8 @@ class ForgetSpec extends SparkSpec {
     // because the corpus is deleted first inside forget()
     Forget.forget(spark,
       docs.where(col("doc_id") % 2 === 1).select(col("doc_id")),
-      s"$dir/corpus", s"$dir/postings", s"$dir/minhash",
-      None, Some(s"$dir/pq"), Some(s"$dir/sq"),
-      Some(s"$dir/lang"), Some(s"$dir/dsir"))
+      s"$dir/corpus", Store.under(dir, Seq(PostingsIndex, MinhashIndex,
+        PqIndex, SqIndex, LangProfileStore, DsirStore)))
     // vector stores: model FROZEN (codebook/centroids untouched),
     // corpus relations = the full build minus the victims' rows
     assert(rel("pq/codebook") == fullCodebook)
@@ -203,8 +202,8 @@ class ForgetSpec extends SparkSpec {
     // subtraction must pick up clean_text, and the corpus rewrite must
     // hit the on-disk lang=pt%3ABR directory
     Forget.forget(spark, Seq(1L).toDF("doc_id"),
-      s"$dir/corpus", s"$dir/postings", s"$dir/minhash",
-      None, None, None, Some(s"$dir/lang"), Some(s"$dir/dsir"))
+      s"$dir/corpus", Store.under(dir, Seq(PostingsIndex, MinhashIndex,
+        LangProfileStore, DsirStore)))
     val after = spark.read.parquet(s"$dir/corpus")
     assert(after.count() == 2L)
     assert(after.select("doc_id").as[Long].collect().toSet ==

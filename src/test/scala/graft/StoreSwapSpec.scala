@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.sources.{CorpusSink, PqIndex, SqIndex, StoreDirs}
+import graft.sources.{CorpusSink, PositionsIndex, PqIndex, SqIndex,
+  StoreDirs}
 import graft.streaming.IngestPipeline
 
 /** Durability pins for the store-swap and ingest-lease discipline:
@@ -110,8 +111,7 @@ class StoreSwapSpec extends SparkSpec {
 
   test("exactly-once applies: kill-and-replay between any append and its marker replays to the sequential result") {
     import graft.pipeline.DataOps
-    import graft.sources.{DsirStore, LangProfileStore, MinhashIndex,
-      PositionsIndex, PostingsIndex}
+    import graft.sources.{LangProfileStore, PostingsIndex, Store}
     val SF = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$SF/documents.parquet")
       .select(col("doc_id"), col("text")).where(col("doc_id") < 40)
@@ -120,34 +120,36 @@ class StoreSwapSpec extends SparkSpec {
     val labeled = spark.read.parquet(s"$SF/documents.parquet")
       .select(col("doc_id"), col("lang"), col("text"))
       .where(col("doc_id") < 40)
+    // multiset contents: a replay that duplicated rows must not hide
+    // behind set equality
     def rels(dir: String, names: Seq[String]) = names.map { r =>
-      r -> spark.read.parquet(s"$dir/$r").collect().map(_.toSeq).toSet
+      r -> spark.read.parquet(s"$dir/$r").collect().map(_.toString)
+        .sorted.toSeq
     }.toMap
     def tmp(p: String) = Files.createTempDirectory(p).toString
     val tag = "7"
 
-    // ---- text stores: control (sequential) vs completed-apply replay
-    val matrix: Seq[(String, Seq[String],
-        (org.apache.spark.sql.DataFrame, String) => Unit,
-        (org.apache.spark.sql.DataFrame, String, String) => Unit)] = Seq(
-      ("mh", Seq("shingles", "bands"),
-        (b, d) => MinhashIndex.build(spark, b, d),
-        (b, d, t) => MinhashIndex.appendBatch(spark, b, d, t)),
-      ("po", Seq("postings", "doclen", "vocab", "stats"),
-        (b, d) => PostingsIndex.buildFrom(spark, b, d),
-        (b, d, t) => PostingsIndex.appendBatch(spark, b, d, t)),
-      ("ps", Seq("positions"),
-        (b, d) => PositionsIndex.buildFrom(spark, b, d),
-        (b, d, t) => PositionsIndex.appendBatch(spark, b, d, t)))
-    matrix.foreach { case (name, names, build, append) =>
-      val control = tmp(s"graft-eo-$name-c")
-      build(evens, control); append(odds, control, null)
-      val replay = tmp(s"graft-eo-$name-r")
-      build(evens, replay); append(odds, replay, tag)
+    // ---- every registry store: control (sequential) vs completed-apply
+    // replay, over the same published batches (embeddings linked by
+    // vec_id = doc_id)
+    val published = labeled.withColumnRenamed("text", "clean_text")
+      .join(spark.read.parquet(s"$SF/embeddings.parquet")
+        .select(col("vec_id").as("doc_id"), col("embedding")),
+        Seq("doc_id"))
+    for (store <- Store.all) {
+      def half(r: Int) = store.input.absorb(
+        published.where(col("doc_id") % 2 === r)).get
+      val control = tmp(s"graft-eo-${store.name}-c")
+      store.buildFrom(spark, half(0), control)
+      store.appendBatch(spark, half(1), control)
+      val replay = tmp(s"graft-eo-${store.name}-r")
+      store.buildFrom(spark, half(0), replay)
+      store.appendBatch(spark, half(1), replay, tag)
       // the crash window: apply completed, marker never touched —
       // the ingest job re-runs the whole apply with the same tag
-      append(odds, replay, tag)
-      assert(rels(replay, names) == rels(control, names), name)
+      store.appendBatch(spark, half(1), replay, tag)
+      assert(rels(replay, store.relations) ==
+        rels(control, store.relations), store.name)
     }
 
     // ---- partial crash INSIDE a multi-relation apply: postings +
@@ -186,33 +188,6 @@ class StoreSwapSpec extends SparkSpec {
     assert(rels(lr, Seq("counts", "profiles")) ==
       rels(lc, Seq("counts", "profiles")))
 
-    // ---- model-store merge + vector stores: completed-apply replays
-    val dc = tmp("graft-eo-dsir-c"); val dr = tmp("graft-eo-dsir-r")
-    DsirStore.buildFrom(spark, labeled.where(col("doc_id") % 2 === 0), dc)
-    DsirStore.appendBatch(spark, labeled.where(col("doc_id") % 2 === 1), dc)
-    DsirStore.buildFrom(spark, labeled.where(col("doc_id") % 2 === 0), dr)
-    DsirStore.appendBatch(spark,
-      labeled.where(col("doc_id") % 2 === 1), dr, tag)
-    DsirStore.appendBatch(spark,
-      labeled.where(col("doc_id") % 2 === 1), dr, tag)
-    assert(rels(dr, Seq("stats")) == rels(dc, Seq("stats")))
-    val v = DataOps.emb(spark, SF).where(col("vec_id") < 64)
-    val qc = tmp("graft-eo-pq-c"); val qr = tmp("graft-eo-pq-r")
-    PqIndex.buildFrom(spark, v.where(col("vec_id") % 2 === 0), qc)
-    PqIndex.appendBatch(spark, v.where(col("vec_id") % 2 === 1), qc)
-    PqIndex.buildFrom(spark, v.where(col("vec_id") % 2 === 0), qr)
-    PqIndex.appendBatch(spark, v.where(col("vec_id") % 2 === 1), qr, tag)
-    PqIndex.appendBatch(spark, v.where(col("vec_id") % 2 === 1), qr, tag)
-    assert(rels(qr, Seq("codebook", "codes", "centroids", "cells")) ==
-      rels(qc, Seq("codebook", "codes", "centroids", "cells")))
-    val sc = tmp("graft-eo-sq-c"); val sr = tmp("graft-eo-sq-r")
-    SqIndex.buildFrom(spark, v.where(col("vec_id") % 2 === 0), sc)
-    SqIndex.appendBatch(spark, v.where(col("vec_id") % 2 === 1), sc)
-    SqIndex.buildFrom(spark, v.where(col("vec_id") % 2 === 0), sr)
-    SqIndex.appendBatch(spark, v.where(col("vec_id") % 2 === 1), sr, tag)
-    SqIndex.appendBatch(spark, v.where(col("vec_id") % 2 === 1), sr, tag)
-    assert(rels(sr, Seq("recon")) == rels(sc, Seq("recon")))
-
     // ---- plain + partitioned ledger appends: a replayed appendOnce
     // (and a partial attempt replayed) never duplicates rows
     import spark.implicits._
@@ -231,6 +206,21 @@ class StoreSwapSpec extends SparkSpec {
     assert(spark.read.parquet(corp).select("doc_id", "lang")
       .as[(Long, String)].collect().toSet ==
       Set((1L, "en"), (2L, "de"), (3L, "en"), (4L, "fr")))
+  }
+
+  test("a registry build that throws leaves no build-once entry: the next call rebuilds") {
+    import spark.implicits._
+    val sf = Files.createTempDirectory("graft-once-sf").toString
+    // documents.parquet missing: the store build inside the guard throws
+    intercept[Exception](PositionsIndex.phraseIndexed(spark, sf))
+    Seq((1L, "the quick brown fox jumps"), (2L, "a quick brown fox naps"),
+      (3L, "one quick brown fox"), (4L, "no fox here at all"))
+      .toDF("doc_id", "text").write.parquet(s"$sf/documents.parquet")
+    // the retry builds the store instead of probing a missing directory
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(PositionsIndex.phraseIndexed(spark, sf)) ==
+      rows(graft.pipeline.DataOps.phraseSearch(spark, sf)))
   }
 
   test("markers carry content; create-if-absent refuses an existing marker") {
@@ -264,7 +254,7 @@ class StoreSwapSpec extends SparkSpec {
     Seq(1L).toDF("doc_id").write.parquet(s"$dir/staging/3/curated")
     Seq(2L).toDF("doc_id").write.parquet(s"$dir/staging/4/curated")
     StoreDirs.touchMarker(spark, s"$dir/committed/3")
-    IngestPipeline.sweepCommittedStaging(spark, dir)
+    IngestPipeline.sweepCommittedStaging(spark, dir, s"$dir/idx")
     val left = fs(dir).listStatus(new Path(s"$dir/staging"))
       .map(_.getPath.getName).toSet
     assert(left == Set("4")) // committed batch swept, in-flight kept

@@ -1290,9 +1290,8 @@ class StreamingSpec extends SparkSpec {
     assert(victimIds.nonEmpty)
     val fin = MemoryStream[Long]
     val fq = StreamingOps.forgetStream(fin.toDF().toDF("doc_id"),
-      s"$outDir/corpus", s"$outDir/index", indexDir,
-      Some(s"$outDir/positions"), Some(s"$outDir/pq"),
-      Some(s"$outDir/sq"), Some(s"$outDir/lang"), Some(s"$outDir/dsir"),
+      s"$outDir/corpus",
+      graft.sources.Store.all.map(st => st -> st.ingestDir(outDir, indexDir)),
       s"$outDir/forget-audit")
     try { fin.addData(victimIds.toSeq); fq.processAllAvailable() }
     finally fq.stop()
@@ -1661,7 +1660,7 @@ class StreamingSpec extends SparkSpec {
   test("forgetStream: two deletion-request micro-batches == one composed forget") {
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.{CorpusSink, DsirStore, Forget, MinhashIndex,
-      PostingsIndex}
+      PostingsIndex, Store}
     val docs = spark.read.parquet(s"$SF/documents.parquet")
       .select(col("doc_id"), col("lang"), col("text"))
     def buildAll(dir: String): Unit = {
@@ -1679,10 +1678,9 @@ class StreamingSpec extends SparkSpec {
     buildAll(sDir); buildAll(bDir)
     val outDir = s"$sDir/audit"
     val in = MemoryStream[Long]
-    val q = StreamingOps.forgetStream(
-      in.toDF().toDF("doc_id"), s"$sDir/corpus", s"$sDir/postings",
-      s"$sDir/minhash", None, None, None, None, Some(s"$sDir/dsir"),
-      outDir)
+    val stores = Seq(PostingsIndex, MinhashIndex, DsirStore)
+    val q = StreamingOps.forgetStream(in.toDF().toDF("doc_id"),
+      s"$sDir/corpus", Store.under(sDir, stores), outDir)
     try {
       def ids(m: Long) = docs.where(col("doc_id") % 4 === m)
         .select("doc_id").as[Long].collect().toSeq
@@ -1693,8 +1691,7 @@ class StreamingSpec extends SparkSpec {
       // reference: the SAME odd ids forgotten in ONE composed call
       Forget.forget(spark, docs.where(col("doc_id") % 2 === 1)
           .select(col("doc_id")),
-        s"$bDir/corpus", s"$bDir/postings", s"$bDir/minhash",
-        None, None, None, None, Some(s"$bDir/dsir"))
+        s"$bDir/corpus", Store.under(bDir, stores))
       def rel(root: String, p: String) =
         spark.read.parquet(s"$root/$p").collect().map(_.toSeq).toSet
       Seq("corpus", "postings/postings", "postings/doclen",
