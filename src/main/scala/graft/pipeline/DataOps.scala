@@ -67,15 +67,27 @@ object DataOps {
     * Spark's scheduler happily runs several jobs at once inside one
     * application — actions are only sequential because driver code
     * calls them sequentially). Each builder runs on its own driver
-    * thread with the session propagated, so one tier's jobs back-fill
-    * the executor slots another tier's straggler tail leaves idle
-    * instead of the audits paying the strict SUM of their tiers'
-    * wall-clocks. Results are exactly the frames a sequential loop
-    * would produce: builders are independent by contract, and the
-    * shared build-once/trained-model guards they may race on are
-    * blocking (`computeIfAbsent`). In lazy-plan (Explain) mode
-    * builders run inline so plans stay auditable and construction
-    * runs no job. */
+    * thread ([[graft.DriverThreads.runAll]], session and local
+    * properties carried over), so one tier's jobs back-fill the
+    * executor slots another tier's straggler tail leaves idle instead
+    * of the audits paying the strict SUM of their tiers' wall-clocks.
+    * Results are exactly the frames a sequential loop would produce:
+    * builders are independent by contract, and the shared
+    * build-once/trained-model guards they may race on are blocking
+    * ([[graft.sources.StoreDirs.OnceMap]]). In lazy-plan (Explain)
+    * mode builders run inline so plans stay auditable and construction
+    * runs no job.
+    *
+    * FAILURE: the tiers' jobs carry one job tag (nested builds inherit
+    * it). From the first failing tier until every sibling has ENDED,
+    * the tag's running jobs are cancelled every 100 ms, so a sibling
+    * between jobs cannot keep submitting work after the call returns.
+    * Then every RDD persisted since the call began is unpersisted (a
+    * cancelled builder never reaches [[finish]]) and every model
+    * [[cachedModel]] trained since then is evicted (it may sit on
+    * those blocks), and the first failure is rethrown. The cleanup is
+    * call-scoped: it assumes no unrelated driver thread persists
+    * frames during the call. */
   private val parBuildSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** In-flight job cap for [[parBuild]]: defaults to the tier count
@@ -93,47 +105,32 @@ object DataOps {
     if (envCap > 0) math.min(envCap, n) else n
   }
 
-  private def parBuild(builders: Seq[() => DataFrame]): Seq[DataFrame] =
+  private[graft] def parBuild(
+      builders: Seq[() => DataFrame]): Seq[DataFrame] =
     if (java.lang.Boolean.getBoolean("graft.lazyPlans") ||
         builders.lengthCompare(2) < 0)
       builders.map(_())
     else {
       val session = SparkSession.active
       val sc = session.sparkContext
-      // Tiers run under one cancellable job group (guide §1.5): if a
-      // tier fails, the others' RUNNING Spark jobs are cancelled with
-      // the group instead of bleeding into the next query's timing.
-      val group = s"graft-parBuild-${parBuildSeq.incrementAndGet()}"
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(parPoolSize(builders.length))
-      try {
-        val futs = builders.map { b =>
-          pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            def call(): DataFrame = {
-              SparkSession.setActiveSession(session)
-              sc.setJobGroup(group, group, interruptOnCancel = true)
-              try b() finally sc.clearJobGroup()
-            }
-          })
-        }
-        try futs.map { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
+      val tag = s"graft-parBuild-${parBuildSeq.incrementAndGet()}"
+      val persisted = sc.getPersistentRDDs.keySet
+      val models = trainedModels.keys
+      try graft.DriverThreads.runAll(session,
+        builders.map(b => () => {
+          sc.addJobTag(tag)
+          sc.setInterruptOnCancel(true)
+          b()
+        }),
+        parPoolSize(builders.length),
+        whileFailing = () => sc.cancelJobsWithTag(tag))
+      catch {
+        case t: Throwable =>
+          sc.getPersistentRDDs.foreach { case (id, rdd) =>
+            if (!persisted(id)) rdd.unpersist(blocking = true)
           }
-        } catch {
-          case t: Throwable =>
-            // Failure path: cancel queued AND running sibling tiers —
-            // a leaked tier would keep submitting jobs while the bench
-            // times the next query.
-            futs.foreach(_.cancel(true))
-            sc.cancelJobGroup(group)
-            throw t
-        }
-      } finally {
-        pool.shutdownNow()
-        ()
+          trainedModels.retainKeys(models)
+          throw t
       }
     }
 

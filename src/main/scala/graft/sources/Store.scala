@@ -121,7 +121,8 @@ object Store {
     override def seedable: Boolean = false
   }
 
-  /** The seven stores, in the ingest job's apply order. */
+  /** The seven stores. The ingest job seeds, absorbs and compacts them
+    * concurrently; [[Forget]] removes in this order. */
   val all: Seq[Store] = Seq(PostingsIndex, PositionsIndex, MinhashIndex,
     LangProfileStore, DsirStore, PqIndex, SqIndex)
 

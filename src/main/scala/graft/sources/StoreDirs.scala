@@ -262,17 +262,33 @@ private[graft] object StoreDirs {
     * the body themselves); only callers arriving after the removal
     * retry the body.
     *
-    * RE-ENTRY: a body that calls `apply` with its OWN key blocks
-    * forever (it waits on the task it is running). No store body
-    * does: every [[once]] body builds and mutates its own directory
-    * and calls no other `once`. */
+    * RE-ENTRY: a body that calls `apply` with its OWN key on the
+    * thread running it would wait on its own task forever; it throws
+    * `IllegalStateException` instead (a thread-local set holds the
+    * keys the current thread is running), and that failure drops the
+    * entry like any other. A body that hands its own key to ANOTHER
+    * thread and waits for it still deadlocks. No store body re-enters:
+    * every [[once]] body builds and mutates its own directory and
+    * calls no other `once`. */
   private[graft] final class OnceMap[V] {
     private val m = new java.util.concurrent.ConcurrentHashMap[
       String, java.util.concurrent.FutureTask[V]]()
+    private val running = ThreadLocal.withInitial[
+      java.util.Set[String]](() => new java.util.HashSet[String]())
     def apply(key: String)(body: => V): V = {
+      if (running.get.contains(key))
+        throw new IllegalStateException(
+          s"OnceMap: the body for '$key' re-entered apply with its own " +
+          "key; it would wait on itself forever")
       val task = m.computeIfAbsent(key,
         _ => new java.util.concurrent.FutureTask[V](
-          new java.util.concurrent.Callable[V] { def call(): V = body }))
+          new java.util.concurrent.Callable[V] {
+            def call(): V = {
+              val mine = running.get
+              mine.add(key)
+              try body finally mine.remove(key)
+            }
+          }))
       task.run() // no-op if another thread already ran / is running it
       try task.get()
       catch {
@@ -283,6 +299,11 @@ private[graft] object StoreDirs {
           m.remove(key, task)
           throw e
       }
+    }
+    /** The keys present now (completed or running). */
+    def keys: Set[String] = {
+      import scala.jdk.CollectionConverters._
+      m.keySet.asScala.toSet
     }
     /** Evict entries whose key fails the predicate (the trained-model
       * cache's context-epoch sweep). */

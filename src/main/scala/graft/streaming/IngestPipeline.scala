@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.DriverThreads
 import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
 
 /**
@@ -25,7 +26,8 @@ import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
  *     heavy relation)
  *   → [[CorpusSink.appendCurated]] (lang-partitioned parquet publish)
  *   → every store of the [[graft.sources.Store.all]] registry absorbs
- *     the published batch, in registry order, through its own
+ *     the published batch, concurrently with the publish and with each
+ *     other, through its own
  *     [[graft.sources.Store.Input]] projection: the search, positional
  *     and dedup stores take the redacted text (landed documents become
  *     immediately BM25- and exact-phrase-searchable, and batch N+1
@@ -51,16 +53,21 @@ import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
  * corpus keeps them),
  * and each batch runs a TWO-PHASE commit: (1) STAGE — the batch's
  * outputs (curated survivors, dup audit rows, fresh-id ledger delta)
- * are computed from the current store state and land under
- * `outDir/staging/<batchId>` behind a `_staged` marker; until that
- * marker exists no sink has mutated, so a crash mid-stage recomputes
- * from identical inputs. (2) APPLY — each sink/store applies FROM THE
+ * are computed from the current store state and land, written
+ * concurrently, under `outDir/staging/<batchId>` behind a `_staged`
+ * marker touched only after all three landed; until that marker
+ * exists no sink has mutated, so a crash mid-stage recomputes from
+ * identical inputs. (2) APPLY — each sink/store applies FROM THE
  * FROZEN STAGED DATA behind its own `committed/<batchId>.<sink>`
- * marker, then the batch-level `committed/<batchId>` marker closes the
- * batch and drops the staging directory. A crash between applies
- * resumes exactly at the first unmarked sink, reading the same staged
- * rows — NOT recomputing them against stores the earlier applies
- * already mutated (the dedup probe would otherwise self-match the
+ * marker; the applies run concurrently on driver threads
+ * ([[graft.DriverThreads]]: a failing apply never interrupts its
+ * siblings, which run to their end), and only once every one has
+ * succeeded does the batch-level `committed/<batchId>` marker close
+ * the batch and drop the staging directory. Applies run in no order,
+ * so a crash or a failed apply can leave ANY subset of sinks marked;
+ * a replay re-applies every unmarked sink from the same staged rows —
+ * NOT recomputing them against stores the landed applies already
+ * mutated (the dedup probe would otherwise self-match the
  * half-absorbed batch). All markers and the ledger go through the
  * Hadoop FileSystem API, and every store rewrite inside the applies is
  * write-then-rename ([[graft.sources.StoreDirs.replaceParquet]]), so
@@ -78,6 +85,11 @@ import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
  * kill-and-replay matrix in StoreSwapSpec). The `seen` ledger
  * additionally drops re-LANDED doc_ids (same document, different
  * batch), which the markers cannot see.
+ *
+ * Overlapping the applies is safe because of exactly this: each is
+ * idempotent and reads and writes nothing another apply touches, so
+ * every replay order converges to the same stores (the sink property
+ * Structured Streaming's exactly-once delivery rests on).
  *
  * The composed DAG is therefore SEQUENTIALLY deterministic: two
  * micro-batches ≡ replaying the same two batches through
@@ -101,7 +113,8 @@ import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
  * columns); nothing grows with stream length except the stores
  * themselves, whose file pileup the `compactEvery` maintenance hook
  * folds (every store's `compact` every N batches — contents-identical
- * re-layout).
+ * re-layout). The overlapped staged writes and applies let one sink's
+ * small jobs fill the executor slots another sink's job leaves idle.
  */
 object IngestPipeline {
 
@@ -195,11 +208,14 @@ object IngestPipeline {
     // additively.
     val emptyPublished = spark.range(0).select(col("id").as("doc_id"),
       lit("").as("lang"), lit("").as("clean_text"))
-    for (store <- Store.all if store.input.seedable) {
-      val dir = store.ingestDir(outDir, indexDir)
-      if (!StoreDirs.pathExists(spark, s"$dir/${store.witness}"))
-        store.buildFrom(spark, store.input.absorb(emptyPublished).get, dir)
-    }
+    // Each store seeds its own directory, so the seeds overlap.
+    DriverThreads.overlap(spark,
+      for (store <- Store.all if store.input.seedable) yield () => {
+        val dir = store.ingestDir(outDir, indexDir)
+        if (!StoreDirs.pathExists(spark, s"$dir/${store.witness}"))
+          store.buildFrom(spark, store.input.absorb(emptyPublished).get,
+            dir)
+      })
     StreamingOps.curationStream(docStream, sfDir).writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
@@ -209,11 +225,12 @@ object IngestPipeline {
             // Contents-identical re-layouts: a crash-replay re-compacts
             // harmlessly, so these sit inside the batch marker. A
             // vector store exists only once a batch carried embeddings.
-            for (store <- Store.all) {
+            // Each re-lays out its own directory, so they overlap.
+            DriverThreads.overlap(s, Store.all.map(store => () => {
               val dir = store.ingestDir(outDir, indexDir)
               if (StoreDirs.pathExists(s, s"$dir/${store.witness}"))
                 store.compact(s, dir)
-            }
+            }))
           }
           StoreDirs.touchMarker(s, s"$outDir/committed/$batchId")
           val staging = new org.apache.hadoop.fs.Path(
@@ -307,9 +324,10 @@ object IngestPipeline {
   }
 
   /** One batch's TWO-PHASE commit: STAGE (ledger gate → curation tail
-    * → freeze outputs under `staging/<batchId>`) then APPLY (publish +
-    * store absorbs + ledger append, each from the staged rows behind
-    * its own marker — see the RESTART SAFETY scaladoc above). */
+    * → freeze outputs under `staging/<batchId>`, the three writes
+    * overlapped) then APPLY (publish + store absorbs + ledger append,
+    * overlapped, each from the staged rows behind its own marker — see
+    * the RESTART SAFETY scaladoc above). */
   private def processBatch(verdict: DataFrame, batchId: Long,
       indexDir: String, outDir: String): Unit = {
     val spark = verdict.sparkSession
@@ -325,10 +343,13 @@ object IngestPipeline {
             "left_anti")
         else verdict).persist()
       val (curated, dups) = finishBatch(fresh, indexDir)
-      StoreDirs.replaceParquet(curated, s"$stagingDir/curated")
-      StoreDirs.replaceParquet(dups, s"$stagingDir/dups")
-      StoreDirs.replaceParquet(fresh.select(col("doc_id")),
-        s"$stagingDir/fresh_ids")
+      // Independent relations, written concurrently; `_staged` is
+      // touched only once all three landed.
+      DriverThreads.overlap(spark, Seq(
+        () => StoreDirs.replaceParquet(curated, s"$stagingDir/curated"),
+        () => StoreDirs.replaceParquet(dups, s"$stagingDir/dups"),
+        () => StoreDirs.replaceParquet(fresh.select(col("doc_id")),
+          s"$stagingDir/fresh_ids")))
       StoreDirs.touchMarker(spark, s"$stagingDir/_staged")
       fresh.unpersist()
       ()
@@ -353,14 +374,12 @@ object IngestPipeline {
         StoreDirs.touchMarker(spark, marker(sink))
       }
     val published = spark.read.parquet(s"$stagingDir/curated")
-    applyOnce("dups") {
-      StoreDirs.appendOnce(spark.read.parquet(s"$stagingDir/dups"),
-        s"$outDir/dups", tag)
-    }
-    applyOnce("corpus") {
-      CorpusSink.appendCurated(published, s"$outDir/corpus", tag = tag)
-    }
-    for (store <- Store.all; input <- store.input.absorb(published)) {
+    // `committed/` exists before the fan-out, so the concurrent marker
+    // touches never race on creating it.
+    val committed = new org.apache.hadoop.fs.Path(s"$outDir/committed")
+    committed.getFileSystem(spark.sessionState.newHadoopConf())
+      .mkdirs(committed)
+    def absorb(store: Store, input: DataFrame): Unit = {
       val dir = store.ingestDir(outDir, indexDir)
       if (store.input.seedable) applyOnce(store.name) {
         store.appendBatch(spark, input, dir, tag)
@@ -393,9 +412,19 @@ object IngestPipeline {
           StoreDirs.deletePath(spark, intentPath)
       }
     }
-    applyOnce("seen") {
-      StoreDirs.appendOnce(freshIds, seenPath, tag)
-    }
+    DriverThreads.overlap(spark, Seq[() => Unit](
+      () => applyOnce("dups") {
+        StoreDirs.appendOnce(spark.read.parquet(s"$stagingDir/dups"),
+          s"$outDir/dups", tag)
+      },
+      () => applyOnce("corpus") {
+        CorpusSink.appendCurated(published, s"$outDir/corpus", tag = tag)
+      }) ++
+      (for (store <- Store.all; input <- store.input.absorb(published))
+        yield () => absorb(store, input)) :+
+      (() => applyOnce("seen") {
+        StoreDirs.appendOnce(freshIds, seenPath, tag)
+      }))
   }
 
   /** The job form: bootstrap the dedup store from the existing corpus

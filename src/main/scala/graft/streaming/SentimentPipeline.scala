@@ -182,7 +182,10 @@ object SentimentPipeline {
   /** R1 wire parse (SentimentAnalysis.scala:45-48): split-limit-3, text
     * keeps its commas. A 2-field line yields text = "" (the reference's
     * `drop(2).mkString` on a short array); a 1-field line yields a null
-    * user (PERMISSIVE, where the reference would throw — SURVEY.md §1).
+    * user (PERMISSIVE, where the reference would throw — SURVEY.md §1);
+    * an empty line yields channel "", a null user and text "". Trailing
+    * commas are dropped first, as Java's `split(",")` does. No line is
+    * dropped, and static and streaming input parse alike.
     */
   def parseWire(lines: DataFrame): DataFrame = {
     // get() (not getItem) so short lines yield nulls instead of ANSI

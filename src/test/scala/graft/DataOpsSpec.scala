@@ -2289,4 +2289,32 @@ class DataOpsSpec extends SparkSpec {
         (1L to rows.length).toSeq, s"query $q ranks")
     }
   }
+
+  test("parBuild: a failing tier ends every sibling and leaks no job or cache") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.size
+    val err = intercept[IllegalStateException] {
+      DataOps.parBuild(Seq(
+        () => { Thread.sleep(1000); throw new IllegalStateException("tier") },
+        () => {
+          // A sibling that persists an intermediate and then keeps
+          // submitting jobs (~60 s of them) unless it is cancelled.
+          val cached = spark.range(0, 1000, 1, 4).toDF("id").persist()
+          cached.count()
+          for (_ <- 1 to 600)
+            cached.rdd.mapPartitions { it => Thread.sleep(100); it }.count()
+          cached
+        }))
+    }
+    assert(err.getMessage == "tier")
+    // The status store follows the listener bus, which lags the
+    // scheduler by milliseconds; a sibling that outlived the call would
+    // keep a job active far longer than this wait.
+    eventually(timeout(Span(5, Seconds))) {
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    }
+    assert(sc.getPersistentRDDs.size <= persistedBefore)
+  }
 }

@@ -259,4 +259,20 @@ class StoreSwapSpec extends SparkSpec {
       .map(_.getPath.getName).toSet
     assert(left == Set("4")) // committed batch swept, in-flight kept
   }
+
+  test("OnceMap: a body that re-enters its own key throws instead of blocking") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val once = new StoreDirs.OnceMap[Int]
+    // Off the test thread under a timeout: a body that waits on itself
+    // fails the test instead of hanging the suite.
+    val reentered = Await.result(
+      Future(scala.util.Try(once("k")(once("k")(1) + 1))), 60.seconds)
+    assert(reentered.failed.get.isInstanceOf[IllegalStateException])
+    // the failure dropped the entry: the next caller runs the body
+    assert(once("k")(7) == 7)
+    // a body may still call apply for ANOTHER key
+    assert(once("a")(once("b")(2) + 1) == 3)
+  }
 }

@@ -741,16 +741,29 @@ class StreamingSpec extends SparkSpec {
 
   test("parseWire keeps commas in text; short lines degrade PERMISSIVEly") {
     val lines = Seq("ch0,alice,hello, world", "ch1,bob,", "ch2,carol",
-      "solo", "ch3,dave,a,,", "ch4,eve,x,,y").toDF("value")
-    val got = SentimentPipeline.parseWire(lines)
-      .as[(String, String, String)].collect().toSeq
-    assert(got == Seq(
+      "solo", "ch3,dave,a,,", "ch4,eve,x,,y", "")
+    val expected = Seq(
       ("ch0", "alice", "hello, world"),
       ("ch1", "bob", ""),
       ("ch2", "carol", ""),
       ("solo", null, ""),
       ("ch3", "dave", "a"),    // Java split: trailing empties dropped
-      ("ch4", "eve", "x,,y"))) // interior empties kept
+      ("ch4", "eve", "x,,y"),  // interior empties kept
+      ("", null, ""))          // an empty line is kept, not dropped
+    val got = SentimentPipeline.parseWire(lines.toDF("value"))
+      .as[(String, String, String)].collect().toSeq
+    assert(got == expected)
+    // the streaming parse follows the same policy
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[String]
+    val name = freshQueryName("wire")
+    val q = SentimentPipeline.parseWire(in.toDF()).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
+    try { in.addData(lines); q.processAllAvailable() }
+    finally q.stop()
+    val streamed = spark.table(name).as[(String, String, String)]
+      .collect().toSeq
+    assert(streamed.sortBy(_.toString) == expected.sortBy(_.toString))
   }
 
   test("parseArgs: ParameterTool-style defaults and overrides") {
@@ -1240,6 +1253,83 @@ class StreamingSpec extends SparkSpec {
       assert(graft.sources.PqIndex.queryAgainst(spark, q,
         s"$outDir/pq", SF).count() > 0)
     } finally q2.stop()
+  }
+
+  test("IngestPipeline: a failing apply leaves its siblings committed; the restart converges to the uninterrupted run") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.{MinhashIndex, Store, StoreDirs}
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars",
+      "embedding")
+    val docs = spark.read.parquet(s"$SF/documents.parquet")
+    val embByVec = spark.read.parquet(s"$SF/embeddings.parquet")
+      .select((col("vec_id") % 500).as("ek"), col("embedding"))
+    val docsV = docs.withColumn("ek", col("doc_id") % 500)
+      .join(embByVec, Seq("ek")).drop("ek")
+    def quarter(m: Long) = docsV.where(col("doc_id") % 4 === m)
+      .select(cols.map(col): _*)
+      .as[(Long, String, String, String, Long, Seq[Float])]
+      .collect().toSeq
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def dirs() = {
+      val idx = tmp("graft-ingest-fidx")
+      MinhashIndex.build(spark,
+        docs.where(col("doc_id") % 2 === 0).select("doc_id", "text"), idx)
+      (idx, tmp("graft-ingest-fout"))
+    }
+    def start(in: MemoryStream[(Long, String, String, String, Long,
+        Seq[Float])], idx: String, out: String) =
+      IngestPipeline.start(in.toDF().toDF(cols: _*), SF, idx, out)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(tmp("graft-ingest-fs")).getFileSystem(conf)
+    def exists(p: String) = StoreDirs.pathExists(spark, p)
+    // control: both batches, uninterrupted
+    val (cIdx, cOut) = dirs()
+    val cIn = MemoryStream[(Long, String, String, String, Long, Seq[Float])]
+    val cq = start(cIn, cIdx, cOut)
+    try {
+      cIn.addData(quarter(1)); cq.processAllAvailable()
+      cIn.addData(quarter(3)); cq.processAllAvailable()
+    } finally cq.stop()
+    // batch 0 commits; then the lang store loses its counts relation,
+    // so batch 1's lang apply throws while its siblings run
+    val (idx, out) = dirs()
+    val aside = tmp("graft-ingest-lang-aside") + "/lang"
+    val in1 = MemoryStream[(Long, String, String, String, Long, Seq[Float])]
+    val q1 = start(in1, idx, out)
+    try {
+      in1.addData(quarter(1)); q1.processAllAvailable()
+      assert(exists(s"$out/committed/0"))
+      FileUtil.copy(fs, new Path(s"$out/lang"), fs, new Path(aside),
+        false, conf)
+      fs.delete(new Path(s"$out/lang/counts"), true)
+      in1.addData(quarter(3))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q1.processAllAvailable())
+    } finally q1.stop()
+    assert(!exists(s"$out/committed/1"))
+    assert(!exists(s"$out/committed/1.lang"))
+    // every sibling ran to completion instead of being interrupted
+    for (sink <- Seq("dups", "corpus", "seen") ++
+        Store.all.map(_.name).filterNot(_ == "lang"))
+      assert(exists(s"$out/committed/1.$sink"), sink)
+    // restore lang and restart on the same checkpoint: batch 1 replays
+    // from its staged rows and only the unmarked sink applies
+    fs.delete(new Path(s"$out/lang"), true)
+    FileUtil.copy(fs, new Path(aside), fs, new Path(s"$out/lang"),
+      false, conf)
+    val in2 = MemoryStream[(Long, String, String, String, Long, Seq[Float])]
+    in2.addData(quarter(1)); in2.addData(quarter(3))
+    val q2 = start(in2, idx, out)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(exists(s"$out/committed/1"))
+    // multiset contents: a double-applied sink must not hide behind
+    // set equality
+    def rows(p: String) =
+      spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+    for (store <- Store.all; r <- store.relations)
+      assert(rows(s"${store.ingestDir(out, idx)}/$r") ==
+        rows(s"${store.ingestDir(cOut, cIdx)}/$r"), s"${store.name}/$r")
   }
 
   test("forgetStream closes the loop over INGEST-maintained vector stores") {
