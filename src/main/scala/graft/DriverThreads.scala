@@ -11,13 +11,13 @@ import org.apache.spark.sql.execution.SQLExecution
 /** Overlap INDEPENDENT driver-side work on driver threads. Spark's
   * scheduler runs several jobs of one application at once; actions are
   * only sequential because driver code calls them sequentially. The
-  * ingest job's staged writes and sink applies, and
-  * [[graft.pipeline.DataOps]]' audit tiers, are such independent
+  * ingest job's staged writes and sink applies, and the registry
+  * audits' tiers ([[graft.exec.Exec.parBuild]]), are such independent
   * groups. */
 private[graft] object DriverThreads {
 
-  /** Run `thunks` concurrently, one pool thread each (at most `threads`
-    * when positive), and return their results in order. The pool lives
+  /** Run `thunks` concurrently, one pool thread each, and return their
+    * results in order. The pool lives
     * for this call only. Each thunk is submitted through
     * `SQLExecution.withThreadLocalCaptured`, so it sees the caller's
     * active session and local properties: job group and tags, and the
@@ -27,18 +27,16 @@ private[graft] object DriverThreads {
     * interrupts a sibling, which may be in the middle of a rename; the
     * first failure (in time) is rethrown once all have ended, later
     * ones ride along as suppressed. From the first failure until the
-    * siblings end, `whileFailing` runs every 100 ms ([[graft.pipeline
-    * .DataOps]] cancels the siblings' Spark jobs there). An interrupt
+    * siblings end, `whileFailing` runs every 100 ms ([[graft.exec.Exec
+    * .parBuild]] cancels the siblings' Spark jobs there). An interrupt
     * of the waiting thread does not abandon the siblings either: it is
     * restored once they have ended. */
   def runAll[T](spark: SparkSession, thunks: Seq[() => T],
-      threads: Int = 0, whileFailing: () => Unit = () => ()): Seq[T] =
+      whileFailing: () => Unit = () => ()): Seq[T] =
     if (thunks.lengthCompare(2) < 0) thunks.map(_())
     else {
       val session = castToImpl(spark)
-      val pool = Executors.newFixedThreadPool(
-        if (threads > 0) math.min(threads, thunks.length)
-        else thunks.length)
+      val pool = Executors.newFixedThreadPool(thunks.length)
       val first = new AtomicReference[Throwable]()
       var interrupted = false
       try {

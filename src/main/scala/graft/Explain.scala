@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   * reviewed. Usage: `runMain graft.Explain <sfDir> [queryName...]`. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    // Keep builders fully lazy so their physical plans stay auditable
-    // (DataOps queries otherwise materialize via localCheckpoint for
-    // cache hygiene, which would collapse the plan to an RDD scan).
+    // Plan-only mode ([[graft.exec.Exec]]) keeps builders fully lazy so
+    // their physical plans stay auditable (queries otherwise materialize
+    // via localCheckpoint for cache hygiene, which would collapse the
+    // plan to an RDD scan).
     System.setProperty("graft.lazyPlans", "true")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =

@@ -6,6 +6,7 @@ import org.apache.spark.ml.feature.{HashingTF, Tokenizer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
 import graft.nlp.NlpFunctions.tokens
 import graft.pipeline.ParityQueries
 
@@ -80,13 +81,12 @@ object MlSentiment {
     // no-token-block left join — without the marker the W1 concat +
     // lexicon-scoring subplan ([[ParityQueries.sentimented]]) executes
     // a second time just to list the block keys.
-    val blocks = labeledBlocks(spark, sfDir).persist()
+    val blocks = Exec.persist(labeledBlocks(spark, sfDir))
     // Persisted: the token relation feeds the count aggregate and the
     // scoring join.
-    val toks = blocks
+    val toks = Exec.persist(blocks
       .select(col("wsec"), col("channel"), col("username"), col("label"),
-        explode(tokens(col("text"))).as("t"))
-      .persist()
+        explode(tokens(col("text"))).as("t")))
     val cls = toks.groupBy(col("t"))
       .agg(sum(col("label")).as("cpos"),
         sum(lit(1L) - col("label")).as("cneg"))
@@ -103,7 +103,7 @@ object MlSentiment {
       .agg(sum(col("w")).as("score"))
     // Materialize the small result and release the token relation —
     // the shared registry cache-hygiene discipline.
-    graft.pipeline.DataOps.finish(
+    Exec.finish(
       blocks.select(keys.map(col): _*)
         .join(score, keys, "left")
         .select(col("wsec"), col("channel"), col("username"),
@@ -124,12 +124,11 @@ object MlSentiment {
     * (LogisticRegression exposes no seed param — its init is
     * deterministic zeros; nothing random to pin.) */
   def x1SentimentLbfgs(spark: SparkSession, sfDir: String): DataFrame = {
-    val blocks = labeledBlocks(spark, sfDir)
+    val blocks = Exec.persist(labeledBlocks(spark, sfDir)
       .select(col("wsec"), col("channel"), col("username"), col("text"),
         col("label").cast("double").as("label"))
       .repartition(8, col("channel"), col("username"), col("wsec"))
-      .sortWithinPartitions("channel", "username", "wsec")
-      .persist()
+      .sortWithinPartitions("channel", "username", "wsec"))
     val pipeline = new Pipeline().setStages(Array(
       new Tokenizer().setInputCol("text").setOutputCol("words"),
       new HashingTF().setInputCol("words").setOutputCol("features")

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
+import graft.exec.Exec.{cachedModel, finish, parBuild, parPinned, pin,
+  warm}
 import graft.functions.HashFns._
 import graft.model.Model.{MediaFeature, MediaRecord, MediaThumb}
 import graft.nlp.Lexicons
@@ -36,126 +39,6 @@ object DataOps {
 
   private def docs(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/documents.parquet")
-
-  /** Cache hygiene for the multi-branch dedup queries: materialize the
-    * (small) result via eager `localCheckpoint` and release the internal
-    * persisted intermediates immediately, so a long-lived session using
-    * these builders accumulates NO cached plans — callers get a
-    * lineage-free frame and never need `clearCache()`.
-    *
-    * Debug switch: `-Dgraft.lazyPlans=true` (set by [[graft.Explain]])
-    * skips the materialization so the full physical plan stays auditable;
-    * in that mode nothing executes, so the persist markers also never
-    * allocate storage. */
-  private[graft] def finish(out: DataFrame, caches: DataFrame*): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) out
-    else {
-      val r = out.localCheckpoint(true)
-      caches.foreach(_.unpersist())
-      r
-    }
-
-  /** Persist unless in lazy-plan (Explain) mode — paired with
-    * [[finish]]: a builder that must run an eager action (e.g. a size
-    * assert) before returning would otherwise leave a cache allocated in
-    * a mode where finish() never releases it. */
-  private def persistUnlessLazy(df: DataFrame): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) df
-    else df.persist()
-
-  /** Overlap INDEPENDENT eager tier builds (optimization guide §2.6:
-    * Spark's scheduler happily runs several jobs at once inside one
-    * application — actions are only sequential because driver code
-    * calls them sequentially). Each builder runs on its own driver
-    * thread ([[graft.DriverThreads.runAll]], session and local
-    * properties carried over), so one tier's jobs back-fill the
-    * executor slots another tier's straggler tail leaves idle instead
-    * of the audits paying the strict SUM of their tiers' wall-clocks.
-    * Results are exactly the frames a sequential loop would produce:
-    * builders are independent by contract, and the shared
-    * build-once/trained-model guards they may race on are blocking
-    * ([[graft.sources.StoreDirs.OnceMap]]). In lazy-plan (Explain)
-    * mode builders run inline so plans stay auditable and construction
-    * runs no job.
-    *
-    * FAILURE: the tiers' jobs carry one job tag (nested builds inherit
-    * it). From the first failing tier until every sibling has ENDED,
-    * the tag's running jobs are cancelled every 100 ms, so a sibling
-    * between jobs cannot keep submitting work after the call returns.
-    * Then every RDD persisted since the call began is unpersisted (a
-    * cancelled builder never reaches [[finish]]) and every model
-    * [[cachedModel]] trained since then is evicted (it may sit on
-    * those blocks), and the first failure is rethrown. The cleanup is
-    * call-scoped: it assumes no unrelated driver thread persists
-    * frames during the call. */
-  private val parBuildSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** In-flight job cap for [[parBuild]]: defaults to the tier count
-    * (measured fastest at sf0.1 — OPTIMIZATION_r17.md records the 3-
-    * vs-7 pairing); `-Dgraft.parBuildThreads=N` or
-    * `GRAFT_PAR_BUILD_THREADS=N` caps it for shared clusters where
-    * many concurrent jobs would fight for executors (guide §2.6's
-    * "2-3 in flight" conservatism). */
-  private def parPoolSize(n: Int): Int = {
-    val cap = Integer.getInteger("graft.parBuildThreads", 0).intValue()
-    val envCap =
-      if (cap > 0) cap
-      else sys.env.get("GRAFT_PAR_BUILD_THREADS")
-        .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(0)
-    if (envCap > 0) math.min(envCap, n) else n
-  }
-
-  private[graft] def parBuild(
-      builders: Seq[() => DataFrame]): Seq[DataFrame] =
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans") ||
-        builders.lengthCompare(2) < 0)
-      builders.map(_())
-    else {
-      val session = SparkSession.active
-      val sc = session.sparkContext
-      val tag = s"graft-parBuild-${parBuildSeq.incrementAndGet()}"
-      val persisted = sc.getPersistentRDDs.keySet
-      val models = trainedModels.keys
-      try graft.DriverThreads.runAll(session,
-        builders.map(b => () => {
-          sc.addJobTag(tag)
-          sc.setInterruptOnCancel(true)
-          b()
-        }),
-        parPoolSize(builders.length),
-        whileFailing = () => sc.cancelJobsWithTag(tag))
-      catch {
-        case t: Throwable =>
-          sc.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!persisted(id)) rdd.unpersist(blocking = true)
-          }
-          trainedModels.retainKeys(models)
-          throw t
-      }
-    }
-
-  /** [[parBuild]] with each tier eagerly pinned (localCheckpoint) on
-    * its own thread — for BOUNDED tier relations (per-query top-k
-    * heads, guarded-sample pair reports) whose evaluation would
-    * otherwise run strictly serially inside the one final audit job;
-    * the pin also keeps a tier's subplan from re-executing once per
-    * counting branch (n_cand aggregate + truth semi-join) where
-    * exchange reuse happens not to cover it. Never applied to
-    * corpus-sized relations. */
-  private def parPinned(builders: Seq[() => DataFrame]): Seq[DataFrame] =
-    parBuild(builders.map(b => () => {
-      val df = b()
-      if (java.lang.Boolean.getBoolean("graft.lazyPlans")) df
-      else df.localCheckpoint(true)
-    }))
-
-  /** Force a persist-marked frame's cache NOW (one count job) so
-    * parallel tier builders read a warm cache instead of racing to
-    * compute the same partitions. No-op in lazy-plan mode. */
-  private def warm(df: DataFrame): DataFrame = {
-    if (!java.lang.Boolean.getBoolean("graft.lazyPlans")) df.count()
-    df
-  }
 
   /** Whitespace words of `text`, empties dropped (the shingling unit) —
     * the native [[graft.functions.WordGramsExpr]] with n = 1 (property-
@@ -252,8 +135,8 @@ object DataOps {
     // Persisted: the shingle relation feeds four plan branches (signature,
     // both verify sides, sizes) and the band relation two (the bucket
     // self-join); without persistence Spark re-executes each occurrence.
-    val sh = shingleRowsOf(spark, d).withColumn("hp", hashP(col("sh")))
-      .persist()
+    val sh = Exec.persist(
+      shingleRowsOf(spark, d).withColumn("hp", hashP(col("sh"))))
     val mins = (0 until MinhashK).map(i =>
       min(permHash(i, col("hp"))).as(s"m$i"))
     val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
@@ -270,11 +153,10 @@ object DataOps {
     // catch banded LSH misses — in that ~2^-64 event this engine and the
     // string-keyed oracle differ; LSH candidates are probabilistic by
     // design, so parity is with-high-probability, not bit-guaranteed.
-    val bands = sig
+    val bands = Exec.persist(sig
       .select(col("doc_id"), explode(bandArr).as("bk"))
       .select(col("doc_id"),
-        xxhash64(col("bk.band"), col("bk.bkey")).as("bh"))
-      .persist()
+        xxhash64(col("bk.band"), col("bk.bkey")).as("bh")))
     // (Round 17 probed the dedupNgramSource candidate-pin here — a
     // paired A/B read it neutral-to-negative for this operator, whose
     // verify carries scalar shingle rows rather than per-doc arrays,
@@ -333,7 +215,7 @@ object DataOps {
     // Persisted: the one-row count feeds both the in-plan guard and the
     // output row — without it the documents scan + count would execute
     // once per use (exchange reuse does not span the persist boundary).
-    val ndocs = persistUnlessLazy(ids0.agg(count(lit(1)).as("n_docs")))
+    val ndocs = Exec.persist(ids0.agg(count(lit(1)).as("n_docs")))
     // The size-cap guard rides INSIDE the plan (assert_true over the
     // broadcast count) instead of an eager driver-side count(), so
     // CONSTRUCTING this query runs no job (plan-only paths — explain,
@@ -346,10 +228,9 @@ object DataOps {
             "all-pairs ground truth would go quadratic; shrink the " +
             "sample rate")).isNull,
         col("doc_id")).as("doc_id"))
-    val sh = shingleRows(spark, sfDir)
+    val sh = Exec.persist(shingleRows(spark, sfDir)
       .join(ids, Seq("doc_id"), "left_semi")
-      .withColumn("hp", hashP(col("sh")))
-      .persist()
+      .withColumn("hp", hashP(col("sh"))))
     // exact ground truth: common-shingle pairs + Jaccard >= 0.5 — the
     // SAME relation [[dedupRecallEval]] scores against (same 'recall:'
     // mod-5 sample, same threshold), so it shares that audit's
@@ -432,14 +313,14 @@ object DataOps {
     val ids0 = docs(spark, sfDir).select(col("doc_id"))
       .where(pmod(graft.functions.HashFns.hash60(
         concat(lit("recall:"), col("doc_id"))), lit(5L)) === 0L)
-    val ndocs = persistUnlessLazy(ids0.agg(count(lit(1)).as("n_docs")))
+    val ndocs = Exec.persist(ids0.agg(count(lit(1)).as("n_docs")))
     val ids = ids0.crossJoin(broadcast(ndocs))
       .select(when(assert_true(col("n_docs") <= lit(MaxRecallEvalDocs),
           lit(s"recall-eval sample has >$MaxRecallEvalDocs docs — the " +
             "all-pairs ground truth would go quadratic; shrink the " +
             "sample rate")).isNull,
         col("doc_id")).as("doc_id"))
-    val d = persistUnlessLazy(docs(spark, sfDir)
+    val d = Exec.persist(docs(spark, sfDir)
       .join(ids, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("source"), col("text")))
     // exact ground truth: common-shingle pairs + Jaccard >= 0.5 (the
@@ -449,7 +330,7 @@ object DataOps {
     // 4096-doc sample) runs once per JVM; the TIERS, the audit's actual
     // product, re-run per call.
     val truth = cachedModel(s"dedupTruth:$sfDir") {
-      val sh = shingleRowsOf(spark, d).persist()
+      val sh = Exec.persist(shingleRowsOf(spark, d))
       val nsh = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
       val t = pin(sh.as("sa").join(sh.as("sb"),
           col("sa.sh") === col("sb.sh") &&
@@ -526,16 +407,14 @@ object DataOps {
     * Returns (labels, rounds). */
   private[graft] def connectedComponents(spark: SparkSession,
       pairs: DataFrame): (DataFrame, Int) = {
-    val lazyMode = java.lang.Boolean.getBoolean("graft.lazyPlans")
-    val edges0 = pairs.select(col("doc_a"), col("doc_b"))
+    val edges = Exec.persist(pairs.select(col("doc_a"), col("doc_b"))
       .union(pairs.select(col("doc_b").as("doc_a"),
-        col("doc_a").as("doc_b")))
-    val edges = if (lazyMode) edges0 else edges0.persist()
+        col("doc_a").as("doc_b"))))
     def roundStep(labels: DataFrame): DataFrame =
       componentRound(edges, labels)
     val init = edges.select(col("doc_a").as("doc_id")).distinct()
       .withColumn("rep", col("doc_id"))
-    if (lazyMode) {
+    if (Exec.planOnly) {
       // Plan-audit mode: a fixed 2-round unrolling as a PURE plan — no
       // counts, no checkpoints, zero jobs at construction. The unrolled
       // round bodies are exactly the executed ones, so plan audits
@@ -642,7 +521,7 @@ object DataOps {
     * close is one equi-join back on the (a<b) undirected pair set.
     * Output (doc_a, doc_b, doc_c), id-sorted. */
   def dupTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = persistUnlessLazy(
+    val p = Exec.persist(
       dedupMinhash(spark, sfDir).select(col("doc_a"), col("doc_b")))
     val deg = p.select(col("doc_a").as("v"))
       .union(p.select(col("doc_b").as("v")))
@@ -699,25 +578,20 @@ object DataOps {
     * corpus. Oracle: the [[dedupMinhash]] pair CTE inlined + the rounds
     * unrolled as generated CTEs (the mmrDiversify discipline). */
   def dupCommunities(spark: SparkSession, sfDir: String): DataFrame = {
-    val lazyMode = java.lang.Boolean.getBoolean("graft.lazyPlans")
     val pairs = dedupMinhash(spark, sfDir)
       .select(col("doc_a"), col("doc_b"))
-    val edges0 = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-    val edges = if (lazyMode) edges0 else edges0.persist()
+    val edges = Exec.persist(
+      pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+        .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b"))))
     def step(labels: DataFrame): DataFrame =
       edges.join(labels.select(col("node").as("b"), col("lab")), Seq("b"))
         .groupBy(col("a"), col("lab")).agg(count(lit(1)).as("c"))
         .groupBy(col("a"))
         .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
         .select(col("a").as("node"), (-col("m.nl")).as("lab"))
-    var labels = edges.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("lab"))
-    if (!lazyMode) labels = labels.localCheckpoint(true)
-    (1 to LpaIters).foreach { _ =>
-      labels =
-        if (lazyMode) step(labels) else step(labels).localCheckpoint(true)
-    }
+    var labels = pin(edges.select(col("a").as("node")).distinct()
+      .select(col("node"), col("node").as("lab")))
+    (1 to LpaIters).foreach { _ => labels = pin(step(labels)) }
     val sizes = labels.groupBy(col("lab"))
       .agg(count(lit(1)).as("n_members"))
     finish(labels.join(sizes, Seq("lab"))
@@ -775,7 +649,7 @@ object DataOps {
   private[graft] def dedupSimhashFrom(spark: SparkSession,
       d: DataFrame): DataFrame = {
     // Persisted: feeds the chunk self-join (twice) and both verify sides.
-    val sig = simhashSigsFrom(spark, d).persist()
+    val sig = Exec.persist(simhashSigsFrom(spark, d))
     val chunkArr = array((0 until SimhashChunks).map(c =>
       struct(lit(c).as("c"),
         shiftright(col("simhash"), SimhashChunkBits * c)
@@ -826,11 +700,10 @@ object DataOps {
     // both self-join sides) read a filled cache instead of racing to
     // duplicate the tokenize (paired with the cand pin below: part of
     // the measured 6.1–6.8 → 3.0–3.5 s round-17 win).
-    val tok = d
+    val tok = Exec.persist(d
       .select(col("doc_id"), col("source"),
         explode(graft.functions.WordGramsExpr.grams(spark, col("text"), 1,
-          distinct = true)).as("w"))
-      .persist()
+          distinct = true)).as("w")))
     warm(tok)
     val ntok = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("nt"))
     val freq = tok.groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -882,7 +755,7 @@ object DataOps {
     // the relation the verify was already paying a shuffle for — so
     // the extra materialization is |pairs|·3 scalars, never corpus-
     // sized text.
-    val cand = persistUnlessLazy(pref.as("a").join(pref.as("b"),
+    val cand = Exec.persist(pref.as("a").join(pref.as("b"),
         col("a.wh") === col("b.wh") &&
           col("a.source") === col("b.source") &&
           col("a.doc_id") < col("b.doc_id") &&
@@ -1028,7 +901,7 @@ object DataOps {
       g: Int = SubstringRunDefault): DataFrame = {
     // Persisted: the run relation feeds the per-doc totals, the anti
     // join and (via the semi join) the token explode.
-    val runs = persistUnlessLazy(substringRuns(spark, sfDir, g))
+    val runs = Exec.persist(substringRuns(spark, sfDir, g))
     val flagged = runs.groupBy(col("doc_id"), col("n_tok"))
       .agg(sum(col("e") - col("s") + 1L).as("dup_tokens"))
     val toks = docs(spark, sfDir)
@@ -1130,45 +1003,6 @@ object DataOps {
     cachedModel(s"ivf:$sfDir:c=$IvfC:t=$LloydT")(
       centroidsFrom(emb(spark, sfDir)))
 
-  /** SESSION-SCOPED TRAINED-MODEL CACHE — the buildOnce discipline the
-    * persistent stores already follow, extended to the FRESH-MODEL
-    * family: [[centroids]] and [[pqCodebook]] train the identical
-    * (sfDir, C/K, T=[[LloydT]]) quantizer inside every query that uses
-    * one (annIvf, annPq, annIvfPq, embedPq, embedKmeans, dedupEmbed,
-    * semdedup, embedOutliers, annRecallEval, the store builds — 8+
-    * call sites per sweep), each paying T Lloyd passes over the corpus
-    * for a bit-identical KB-sized result. Training is DETERMINISTIC
-    * (hash-stratified seeds, exact integer means), so memoizing the
-    * trained frame per (input, params) key changes no result — only
-    * removes the re-training: the first caller trains and
-    * localCheckpoint-pins the model; every later caller broadcasts the
-    * pinned rows. Keys are sfDir paths + hyperparameters; models
-    * trained on ARBITRARY frames (store lifecycle splits, scaled bench
-    * tiers) keep training fresh through [[centroidsFrom]]/[[pqTrain]].
-    * Disabled under `graft.lazyPlans` so Explain still shows the full
-    * training subplan. */
-  private val trainedModels =
-    new graft.sources.StoreDirs.OnceMap[DataFrame]
-
-  /** Entries are keyed by the OWNING SparkContext's (applicationId,
-    * startTime) so a stopped-and-restarted session in the same JVM
-    * (embedding, multi-session test runs) neither resolves a cached
-    * frame to dead localCheckpoint RDD blocks nor pins them forever:
-    * any entry from another context epoch is evicted on the next cache
-    * touch (the map holds KB-scale models, so the sweep is a no-op in
-    * the steady single-context case). Training runs OUTSIDE the map's
-    * bin lock ([[graft.sources.StoreDirs.OnceMap]] — round-16 ADVICE),
-    * so overlapped tiers training DIFFERENT models never serialize on
-    * a shared hash bin; same-key callers still block on the winner. */
-  private def cachedModel(key: String)(train: => DataFrame): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) train
-    else {
-      val sc = SparkSession.active.sparkContext
-      val epoch = s"${sc.applicationId}:${sc.startTime}:"
-      trainedModels.retainKeys(_.startsWith(epoch))
-      trainedModels(epoch + key)(train.localCheckpoint(true))
-    }
-
   private[graft] def centroidsFrom(v: DataFrame, c: Int = IvfC,
       rounds: Int = LloydT): DataFrame = {
     val seeds = v
@@ -1212,14 +1046,6 @@ object DataOps {
     cents
   }
 
-  /** Pin a TINY deterministic frame (the 16 refined centroids):
-    * materialize it once per query build so its subplan — a seed pick
-    * plus a full Lloyd assignment pass — doesn't re-execute under every
-    * branch that broadcasts it. Same lazy-plans gate as [[finish]]. */
-  private[graft] def pin(df: DataFrame): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) df
-    else df.localCheckpoint(true)
-
   /** (vec_id, cid, rnk): each vector's cells ranked by cosine to the
     * given centroids (desc, cid asc) — broadcast the C centroids, never
     * shuffle the big side. */
@@ -1243,10 +1069,9 @@ object DataOps {
     * ~2·N²/C instead of N² — the knob (C, probes) scales with N. */
   def dedupEmbed(spark: SparkSession, sfDir: String): DataFrame = {
     // Persisted: the cell assignment feeds both sides of the bucket join.
-    val assign = cellRanks(spark, sfDir,
+    val assign = Exec.persist(cellRanks(spark, sfDir,
         centroids(spark, sfDir)).where(col("rnk") <= 2)
-      .select(col("vec_id"), col("cid"))
-      .persist()
+      .select(col("vec_id"), col("cid")))
     embedPairTail(emb(spark, sfDir), assign)
   }
 
@@ -1300,7 +1125,7 @@ object DataOps {
     val sample = v.where(
       pmod(hash60(col("vec_id").cast("string")), lit(sampleMod)) === 0)
     val cents = pin(centroidsFrom(sample, c, rounds = 1))
-    val assign = persistUnlessLazy(v.crossJoin(broadcast(cents))
+    val assign = Exec.persist(v.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cid"),
         cosRaw(dot(col("em"), col("cem")), col("nrm"), col("cn")).as("cs"))
       .groupBy(col("vec_id"))
@@ -1342,14 +1167,14 @@ object DataOps {
     val ids0 = v.select(col("vec_id"))
       .where(pmod(graft.functions.HashFns.hash60(
         concat(lit("erecall:"), col("vec_id"))), lit(2L)) === 0L)
-    val nv = persistUnlessLazy(ids0.agg(count(lit(1)).as("n_docs")))
+    val nv = Exec.persist(ids0.agg(count(lit(1)).as("n_docs")))
     val ids = ids0.crossJoin(broadcast(nv))
       .select(when(assert_true(col("n_docs") <= lit(MaxRecallEvalDocs),
           lit(s"embed-recall sample has >$MaxRecallEvalDocs vectors — " +
             "the all-pairs ground truth would go quadratic; shrink " +
             "the sample rate")).isNull,
         col("vec_id")).as("vec_id"))
-    val vs = persistUnlessLazy(v.join(ids, Seq("vec_id"), "left_semi"))
+    val vs = Exec.persist(v.join(ids, Seq("vec_id"), "left_semi"))
     val truth = cachedModel(s"embedDedupTruth:$sfDir") {
       vs.as("va").join(vs.as("vb"),
           col("va.vec_id") < col("vb.vec_id"))
@@ -1381,9 +1206,10 @@ object DataOps {
         // its own embedding and the trained model, so filter-then-rank
         // ≡ rank-then-filter), replacing a full-corpus N·C window +
         // semi-join with a sample-sized one over the warm cache.
-        val fixedAssign = cellRanksFrom(vs, centroids(spark, sfDir))
+        val fixedAssign = Exec.persist(
+          cellRanksFrom(vs, centroids(spark, sfDir))
           .where(col("rnk") <= 2)
-          .select(col("vec_id"), col("cid")).persist()
+          .select(col("vec_id"), col("cid")))
         embedPairTail(vs, fixedAssign)
       },
       () => {
@@ -1394,7 +1220,7 @@ object DataOps {
         val trainSample = v.where(
           pmod(hash60(col("vec_id").cast("string")), lit(sampleMod)) === 0)
         val cents = pin(centroidsFrom(trainSample, c, rounds = 1))
-        val scaledAssign = persistUnlessLazy(
+        val scaledAssign = Exec.persist(
           vs.crossJoin(broadcast(cents))
             .select(col("vec_id"), col("cid"),
               cosRaw(dot(col("em"), col("cem")), col("nrm"), col("cn"))
@@ -1426,17 +1252,14 @@ object DataOps {
   /** The shared scaled-C knobs ([[semdedupScaled]] /
     * [[dedupEmbedScaled]]): C holds the mean cell size at
     * [[SemCellTarget]], the training-sample modulus targets ~32
-    * vectors per cell. Under `graft.lazyPlans` (Explain / the codegen
-    * lint) returns placeholders: the PLAN SHAPE is identical for any
-    * (C, mod) values — they only parameterize a modulus literal — and
-    * plan construction must run no job (the count). */
-  private def scaledCellKnobs(v: DataFrame): (Int, Long) =
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) (IvfC, 1L)
-    else {
-      val n = math.max(1L, v.count())
-      val cc = math.max(IvfC.toLong, n / SemCellTarget).toInt
-      (cc, math.max(1L, n / (32L * cc)))
-    }
+    * vectors per cell. Plan-only, [[Exec.count]]'s stand-in yields the
+    * minimum knobs: the PLAN SHAPE is identical for any (C, mod) — they
+    * only parameterize a modulus literal. */
+  private def scaledCellKnobs(v: DataFrame): (Int, Long) = {
+    val n = math.max(1L, Exec.count(v))
+    val cc = math.max(IvfC.toLong, n / SemCellTarget).toInt
+    (cc, math.max(1L, n / (32L * cc)))
+  }
 
   /** K-MEANS CLUSTER READOUT over the embedding space — the health/shape
     * statistic a SemDeDup-style curation or an IVF index build reads
@@ -1494,9 +1317,10 @@ object DataOps {
     * bucket join of every dedup operator here, the verdict is one
     * distinct + left join on vec_id. */
   def semdedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val assign = cellRanks(spark, sfDir, centroids(spark, sfDir))
+    val assign = Exec.persist(
+      cellRanks(spark, sfDir, centroids(spark, sfDir))
       .where(col("rnk") === 1)
-      .select(col("vec_id"), col("cid")).persist()
+      .select(col("vec_id"), col("cid")))
     semdedupVerdict(emb(spark, sfDir), assign)
   }
 
@@ -1558,7 +1382,7 @@ object DataOps {
     val sample = v.where(
       pmod(hash60(col("vec_id").cast("string")), lit(sampleMod)) === 0)
     val cents = pin(centroidsFrom(sample, c, rounds = 1))
-    val assign = persistUnlessLazy(v.crossJoin(broadcast(cents))
+    val assign = Exec.persist(v.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cid"),
         cosRaw(dot(col("em"), col("cem")), col("nrm"), col("cn")).as("cs"))
       .groupBy(col("vec_id"))
@@ -2309,7 +2133,7 @@ object DataOps {
     * one hash aggregate; the final top-10 is TakeOrderedAndProject
     * (bounded). */
   def tfidfSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    val dt = persistUnlessLazy(docTokenCounts(spark, sfDir))
+    val dt = Exec.persist(docTokenCounts(spark, sfDir))
     val vocab = vocabOfCounts(dt)
     val ndocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
     finish(tfidfScoreStage(dt, retrievalQueryHead(vocab, ndocs)), dt)
@@ -2378,7 +2202,7 @@ object DataOps {
     * cnt) relation joined with the per-doc length on the
     * co-partitionable doc_id; top-10 = bounded TakeOrderedAndProject. */
   def bm25Search(spark: SparkSession, sfDir: String): DataFrame = {
-    val dt = persistUnlessLazy(docTokenCounts(spark, sfDir))
+    val dt = Exec.persist(docTokenCounts(spark, sfDir))
     val dls = dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl"))
     val vocab = vocabOfCounts(dt)
     val ndocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
@@ -2457,7 +2281,7 @@ object DataOps {
     * exact-integer BM25 top-10. Output (q_id, doc_id, score_micro, rnk,
     * n_terms_hit); q_id 1's rows ≡ [[bm25Search]] by construction. */
   def bm25Serve(spark: SparkSession, sfDir: String): DataFrame = {
-    val dt = persistUnlessLazy(docTokenCounts(spark, sfDir))
+    val dt = Exec.persist(docTokenCounts(spark, sfDir))
     val dls = dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl"))
     val ndocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
     val sdl = dls.agg(sum(col("dl")).as("sdl"))
@@ -2502,7 +2326,7 @@ object DataOps {
     // strictly serially. Stages are [[tfidfScoreStage]] /
     // [[bm25ScoreStage]] VERBATIM over the shared inputs, so the rows
     // are identical by construction.
-    val dt = warm(persistUnlessLazy(docTokenCounts(spark, sfDir)))
+    val dt = warm(Exec.persist(docTokenCounts(spark, sfDir)))
     val dls = dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl"))
     val ndocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
     val sdl = dls.agg(sum(col("dl")).as("sdl"))
@@ -2660,7 +2484,7 @@ object DataOps {
     * in one vocab-bounded aggregate whose L·K result BROADCASTS; the
     * distance frame is N·L rows of pure arithmetic. */
   def langIdNgram(spark: SparkSession, sfDir: String): DataFrame = {
-    val gc = persistUnlessLazy(ctGramCounts(spark, docs(spark, sfDir)))
+    val gc = Exec.persist(ctGramCounts(spark, docs(spark, sfDir)))
     // Pinned (localCheckpoint): the L·K-row profile feeds BOTH the
     // matched join's broadcast and the language list — without the pin
     // its corpus-sized aggregate subplan would execute twice.
@@ -2991,7 +2815,7 @@ object DataOps {
     * aggregates on the selection relation (selection-proportional,
     * ~2n/W per doc). */
   def winnowOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val sel = persistUnlessLazy(winnowingCols(docs(spark, sfDir))
+    val sel = Exec.persist(winnowingCols(docs(spark, sfDir))
       .select(col("doc_id"), col("gram_hash")).distinct())
     val rare = sel.join(
       sel.groupBy(col("gram_hash")).agg(count(lit(1)).as("hdf"))
@@ -3106,7 +2930,7 @@ object DataOps {
       sfDir: String): DataFrame =
     cachedModel(s"pq:$sfDir:m=$PqM:k=$PqK:t=$LloydT") {
       val v = emb(spark, sfDir)
-      val el = pqElements(v).persist()
+      val el = Exec.persist(pqElements(v))
       val refined = pqTrain(v, el)
       el.unpersist() // every Lloyd round is already pinned eagerly
       refined
@@ -3114,7 +2938,7 @@ object DataOps {
 
   private[graft] def pqParts(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame, DataFrame) = {
-    val el = pqElements(emb(spark, sfDir)).persist()
+    val el = Exec.persist(pqElements(emb(spark, sfDir)))
     val refined = pqCodebook(spark, sfDir)
     (el, refined, pqAssign(el, refined))
   }
@@ -3125,7 +2949,7 @@ object DataOps {
     * branches. */
   private[graft] def pqPartsFrom(
       v: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val el = pqElements(v).persist()
+    val el = Exec.persist(pqElements(v))
     val refined = pqTrain(v, el)
     (el, refined, pqAssign(el, refined))
   }
@@ -3324,7 +3148,7 @@ object DataOps {
     // Persisted projection barrier: CollapseProject would otherwise
     // inline sq8_recon into the post-join select and recompute the
     // reconstruction PER (vector, query) PAIR — Q× the scan's work.
-    val recon = persistUnlessLazy(sqRecon(spark, emb(spark, sfDir)))
+    val recon = Exec.persist(sqRecon(spark, emb(spark, sfDir)))
     finish(sqProbe(spark, annQueries(spark, sfDir), recon,
       emb(spark, sfDir)), recon)
   }
@@ -3367,12 +3191,12 @@ object DataOps {
     val q = annQueries(spark, sfDir)
     val v = emb(spark, sfDir)
     val cents = centroids(spark, sfDir)
-    val ranks = persistUnlessLazy(
+    val ranks = Exec.persist(
       cellRanks(spark, sfDir, cents).where(col("rnk") === 1)
         .select(col("vec_id"), col("cid")))
     val (el, refined, coded0) = pqParts(spark, sfDir)
-    val coded = persistUnlessLazy(coded0)
-    val recon = persistUnlessLazy(sqRecon(spark, v))
+    val coded = Exec.persist(coded0)
+    val recon = Exec.persist(sqRecon(spark, v))
     // Evaluate the five tier probes on overlapped driver threads
     // ([[parBuild]]): the audit's cost is max(tier) instead of the
     // strict serial sum the one-final-job shape used to pay. The
@@ -3494,13 +3318,13 @@ object DataOps {
     * numbers in BASELINE.md. */
   def annIvfScaled(spark: SparkSession, sfDir: String): DataFrame = {
     val v = emb(spark, sfDir)
-    val (c, nProbes, sampleMod) = scaledIvfKnobs(spark, v)
+    val (c, nProbes, sampleMod) = scaledIvfKnobs(v)
     val cents = cachedModel(s"ivfScaled:$sfDir:c=$c:t=$LloydT") {
       val sample = v.where(
         pmod(hash60(col("vec_id").cast("string")), lit(sampleMod)) === 0)
       pin(centroidsFrom(sample, c))
     }
-    val assign = persistUnlessLazy(v.crossJoin(broadcast(cents))
+    val assign = Exec.persist(v.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cid"),
         cosRaw(dot(col("em"), col("cem")), col("nrm"), col("cn")).as("cs"))
       .groupBy(col("vec_id"))
@@ -3510,11 +3334,8 @@ object DataOps {
       nProbes), assign)
   }
 
-  private def scaledIvfKnobs(spark: SparkSession,
-      v: DataFrame): (Int, Int, Long) = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans"))
-      return (IvfC, 4, 1L) // plan-shape-identical, no count job
-    val n = math.max(1L, v.count())
+  private def scaledIvfKnobs(v: DataFrame): (Int, Int, Long) = {
+    val n = math.max(1L, Exec.count(v))
     val c = math.max(IvfC.toLong, isqrt(n)).toInt
     (c, math.max(4, c / 4), math.max(1L, n / (32L * c)))
   }
@@ -3534,28 +3355,25 @@ object DataOps {
     * KB-scale broadcast). */
   def annPqScaled(spark: SparkSession, sfDir: String): DataFrame = {
     val v = emb(spark, sfDir)
-    val (k, sampleMod, shortlist) = scaledPqKnobs(spark, v)
+    val (k, sampleMod, shortlist) = scaledPqKnobs(v)
     val refined =
       cachedModel(s"pqScaled:$sfDir:m=$PqM:k=$k:t=$LloydT") {
         val sample = v.where(
           pmod(hash60(col("vec_id").cast("string")), lit(sampleMod))
             === 0)
-        val sel = pqElements(sample).persist()
+        val sel = Exec.persist(pqElements(sample))
         val cb = pqTrain(sample, sel, k) // every round pinned eagerly
         sel.unpersist()
         cb
       }
-    val el = pqElements(v).persist()
+    val el = Exec.persist(pqElements(v))
     val coded = pqAssign(el, refined)
     finish(pqProbe(spark, annQueries(spark, sfDir), refined, coded, v,
       shortlist), el)
   }
 
-  private def scaledPqKnobs(spark: SparkSession,
-      v: DataFrame): (Int, Long, Int) = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans"))
-      return (PqK, 1L, PqShortlist)
-    val n = math.max(1L, v.count())
+  private def scaledPqKnobs(v: DataFrame): (Int, Long, Int) = {
+    val n = math.max(1L, Exec.count(v))
     val k = math.min(64L, math.max(PqK.toLong, isqrt(n))).toInt
     // The re-rank shortlist scales as √N too: when ADC ranking is
     // noisy (the dim-permuted replica fixture is its worst case) the
@@ -3690,7 +3508,7 @@ object DataOps {
     * dedupNgramSource would need a pair join for costs one aggregate
     * when only the df=1 verdict is wanted. */
   def docNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    val g = persistUnlessLazy(docs(spark, sfDir)
+    val g = Exec.persist(docs(spark, sfDir)
       .select(col("doc_id"),
         explode(contamGramHashes(col("text"))).as("gh")))
     val gdf = g.groupBy(col("gh")).agg(count(lit(1)).as("gdf"))
@@ -3715,14 +3533,14 @@ object DataOps {
         explode(contamGramHashes(col("text"))).as("gh"))
     // Persisted: the bench gram set feeds both the cap-check count and
     // the broadcast join — one computation, released via finish().
-    val bench = persistUnlessLazy(
+    val bench = Exec.persist(
       gramRows.where(col("doc_id") % 97 === 0)
         .select(col("gh")).distinct())
     // Size-cap guard rides IN the plan (assert_true over the broadcast
     // count), mirroring minhashRecallEval — constructing this query runs
     // no job; an oversized benchmark side fails while the broadcast
     // exchange is built, before any probe work.
-    val nb = persistUnlessLazy(bench.agg(count(lit(1)).as("n_grams")))
+    val nb = Exec.persist(bench.agg(count(lit(1)).as("n_grams")))
     val benchGuarded = bench.crossJoin(broadcast(nb))
       .select(when(assert_true(col("n_grams") <= lit(MaxBenchmarkGrams),
           lit(s"decontamination benchmark side has >$MaxBenchmarkGrams " +
@@ -3779,12 +3597,12 @@ object DataOps {
     // Persisted: the bench gram set feeds the cap-check count, the
     // position derivation AND the exact-verify tier — one computation,
     // released via finish().
-    val bench = persistUnlessLazy(
+    val bench = Exec.persist(
       gramRows.where(col("doc_id") % 97 === 0)
         .select(col("gh")).distinct())
     // In-plan size-cap guard (same pattern as decontaminate): fails in
     // the broadcast build, runs no job at construction.
-    val nb = persistUnlessLazy(bench.agg(count(lit(1)).as("n_grams")))
+    val nb = Exec.persist(bench.agg(count(lit(1)).as("n_grams")))
     val benchG = bench.crossJoin(broadcast(nb))
       .select(when(assert_true(col("n_grams") <= lit(MaxBenchmarkGrams),
           lit(s"decontamination benchmark side has >$MaxBenchmarkGrams " +
@@ -4171,7 +3989,7 @@ object DataOps {
         }
         counters.keysIterator
       }.toDF("token").distinct()
-    val pc = persistUnlessLazy(cands)
+    val pc = Exec.persist(cands)
     val tok = docs(spark, sfDir)
       .select(explode(graft.functions.WordGramsExpr.grams(spark,
         col("text"), 1, distinct = false)).as("token"))
@@ -4233,7 +4051,7 @@ object DataOps {
 
   def cmsFrequency(spark: SparkSession, sfDir: String): DataFrame = {
     def bucket(r: Int, tok: Column): Column = cmsBucket(r, tok)
-    val tok = persistUnlessLazy(docs(spark, sfDir)
+    val tok = Exec.persist(docs(spark, sfDir)
       .select(explode(graft.functions.WordGramsExpr.grams(spark,
         col("text"), 1, distinct = false)).as("token")))
     val sketch = tok
@@ -4328,7 +4146,7 @@ object DataOps {
     * vocabulary scales with the corpus, the head is fixed) and the two
     * corpus totals ride along as broadcast one-row scalars. */
   def pmiBigrams(spark: SparkSession, sfDir: String): DataFrame = {
-    val dt = persistUnlessLazy(docTokenCounts(spark, sfDir))
+    val dt = Exec.persist(docTokenCounts(spark, sfDir))
     val uni = dt.groupBy(col("token")).agg(sum(col("cnt")).as("tf"))
     val nUni = uni.agg(sum(col("tf")).as("n_uni"))
     val bg = docs(spark, sfDir)
@@ -4495,7 +4313,7 @@ object DataOps {
     * shuffled hash join at web scale), then one per-doc sum — no window,
     * no raw-text rescan. */
   def unigramSurprisal(spark: SparkSession, sfDir: String): DataFrame = {
-    val dt = persistUnlessLazy(docTokenCounts(spark, sfDir))
+    val dt = Exec.persist(docTokenCounts(spark, sfDir))
     val vocab = dt.groupBy(col("token")).agg(sum(col("cnt")).as("tf"))
     val total = vocab.agg(sum(col("tf")).as("tot"))
     val per = dt
@@ -4535,7 +4353,7 @@ object DataOps {
     * cumulative window walks that reduced relation; thresholds are an
     * L-row frame broadcast back into the scoring scan. */
   def qualityBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    val sc = persistUnlessLazy(unigramSurprisal(spark, sfDir)
+    val sc = Exec.persist(unigramSurprisal(spark, sfDir)
       .select(col("doc_id"), col("bits_per_tok_micro").as("score"))
       .join(docs(spark, sfDir).select(col("doc_id"), col("lang")),
         Seq("doc_id")))
@@ -4576,7 +4394,7 @@ object DataOps {
     * bounded vocabularies, shuffled hash joins at open-web scale); one
     * per-doc sum — the [[unigramSurprisal]] shape one n higher. */
   def bigramSurprisal(spark: SparkSession, sfDir: String): DataFrame = {
-    val db = persistUnlessLazy(docs(spark, sfDir)
+    val db = Exec.persist(docs(spark, sfDir)
       .select(col("doc_id"), explode(graft.functions.WordGramsExpr.grams(
         spark, col("text"), 2, distinct = false)).as("bg"))
       .groupBy(col("doc_id"), col("bg"))
@@ -5157,7 +4975,7 @@ object DataOps {
     * bounded by document length, not corpus size. Output
     * (doc_id, token, tf, idf_bits, score, rk). */
   def keywordsTfidf(spark: SparkSession, sfDir: String): DataFrame = {
-    val dt = persistUnlessLazy(docTokenCounts(spark, sfDir))
+    val dt = Exec.persist(docTokenCounts(spark, sfDir))
     val dfreq = dt.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val ndocs = docs(spark, sfDir).agg(count(lit(1)).as("n"))
     val scored = dt.join(dfreq, Seq("token"))
@@ -5201,7 +5019,7 @@ object DataOps {
     * its DISTINCT over-represented vocabulary (the zipfFit argument) —
     * nothing after the first aggregate touches raw rows. */
   def sourceKeywords(spark: SparkSession, sfDir: String): DataFrame = {
-    val st = persistUnlessLazy(docs(spark, sfDir)
+    val st = Exec.persist(docs(spark, sfDir)
       .select(col("source"), explode(words(col("text"))).as("t"))
       .groupBy(col("source"), col("t")).agg(count(lit(1)).as("cnt")))
     val rs = st.groupBy(col("source")).agg(sum(col("cnt")).as("r"))
@@ -5267,7 +5085,7 @@ object DataOps {
       .where(length(col("token")) <= MaxTypoTokenLen)
     // (i, j) deletion-position pairs, 0 = "no deletion at this slot":
     // (0,0) = the token itself; (0,j) = delete j; (i<j) = delete both.
-    val variants = persistUnlessLazy(vocab
+    val variants = Exec.persist(vocab
       .select(col("token"), col("tf"),
         explode(sequence(lit(0), length(col("token")))).as("i"))
       .select(col("token"), col("tf"), col("i"),
@@ -5446,7 +5264,7 @@ object DataOps {
     // Persisted: the histogram pass and both union branches below read
     // this projection — without the persist each re-runs the full-text
     // regexp tokenization + md5. Narrow (4 longs + source), text dropped.
-    val d = persistUnlessLazy(docs(spark, sfDir)
+    val d = Exec.persist(docs(spark, sfDir)
       .select(col("doc_id"), col("source"),
         bpeTokens(col("text")).as("tokens"),
         hash60(concat(lit("mix|"), col("doc_id").cast("string"))).as("h"))
@@ -5509,7 +5327,7 @@ object DataOps {
     * text scan). */
   def dsirWeights(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val dbl = persistUnlessLazy(d
+    val dbl = Exec.persist(d
       .select(col("doc_id"), col("lang"),
         explode(graft.functions.WordGramsExpr.grams(spark, col("text"), 2,
           distinct = false)).as("bg"))
@@ -5591,7 +5409,7 @@ object DataOps {
     * own source-pair combinations — bounded by S² per token, S = source
     * count); per-source sizes broadcast into the closing projection. */
   def sourceJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val st = persistUnlessLazy(docs(spark, sfDir)
+    val st = Exec.persist(docs(spark, sfDir)
       .select(col("source"), explode(words(col("text"))).as("token"))
       .distinct())
     val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("vs"))

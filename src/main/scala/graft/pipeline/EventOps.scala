@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
+
 /**
  * Event-stream analytics operators over the `events` table — the
  * capability tier a stream-analytics user expects NEXT to the reference's
@@ -528,12 +530,9 @@ object EventOps {
     * does. Here the type-graph frames are trivially broadcast-sized, so
     * AQE picks broadcast joins and the loop costs ~nothing. */
   def eventPagerank(spark: SparkSession, sfDir: String): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      if (java.lang.Boolean.getBoolean("graft.lazyPlans")) df
-      else df.localCheckpoint(true)
-    val edges = pin(eventTransitions(spark, sfDir)
+    val edges = Exec.pin(eventTransitions(spark, sfDir)
       .select(col("from_type"), col("to_type"), col("prob_ppm")))
-    val nodes = pin(edges.select(col("from_type").as("node"))
+    val nodes = Exec.pin(edges.select(col("from_type").as("node"))
       .union(edges.select(col("to_type").as("node"))).distinct())
     val nn = nodes.agg(count(lit(1)).as("n"))
     var ranks = nodes.crossJoin(broadcast(nn))
@@ -545,7 +544,7 @@ object EventOps {
         .select(col("to_type").as("node"),
           expr("r * prob_ppm div 1000000").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      ranks = pin(nodes.join(contrib, Seq("node"), "left")
+      ranks = Exec.pin(nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(nn))
         .select(col("node"),
           (expr("150000 div n") +
@@ -692,7 +691,7 @@ object EventOps {
     * a bounded TakeOrderedAndProject — every post-aggregate frame is
     * tiny at any corpus size. */
   def eventSkewProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = DataOps.finish(RelOps.events(spark, sfDir)
+    val counts = Exec.finish(RelOps.events(spark, sfDir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("cnt")))
     val quants = counts.groupBy(col("cnt").as("mv"))
       .agg(count(lit(1)).as("k"))
@@ -741,7 +740,7 @@ object EventOps {
         round(col("value") * lit(1000000.0)).cast("long").as("v"))
     // pinned: the per-user cohort frame feeds both the size aggregate
     // and the purchase join
-    val cohorts = DataOps.finish(e.where(col("event_type") === "signup")
+    val cohorts = Exec.finish(e.where(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("day")).as("cohort")))
     val users = cohorts.groupBy(col("cohort"))
       .agg(count(lit(1)).as("n_users"))
@@ -784,7 +783,7 @@ object EventOps {
   def sessionSummary(spark: SparkSession, sfDir: String): DataFrame = {
     // pinned: the session frame feeds three branches (counters + two
     // histograms) — without the pin each re-runs the sessionize windows
-    val s = DataOps.finish(sessionize(spark, sfDir))
+    val s = Exec.finish(sessionize(spark, sfDir))
     def pick(df: DataFrame, vcol: String): DataFrame =
       df.groupBy(col(vcol).as("mv")).agg(count(lit(1)).as("cnt"))
         .withColumn("cum", sum(col("cnt")).over(
@@ -831,7 +830,7 @@ object EventOps {
   def dauStickiness(spark: SparkSession, sfDir: String): DataFrame = {
     // pinned: the dimension-sized distinct pair set feeds FOUR branches
     // (dau, wau, mau, bounds) — without the pin each re-scans the corpus
-    val du = DataOps.finish(RelOps.events(spark, sfDir)
+    val du = Exec.finish(RelOps.events(spark, sfDir)
       .select(expr(s"(ts div 1000) div $DayUs").as("day"), col("user_id"))
       .distinct())
     val bounds = du.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -879,7 +878,7 @@ object EventOps {
         round(col("value") * lit(1000000.0)).cast("long").as("v"))
     // reproducible "now": the corpus' max event time (1-row broadcast)
     val anchor = e.agg(max(col("tus")).as("anchor_tus"))
-    val base = DataOps.finish(
+    val base = Exec.finish(
       e.where(col("event_type") === "purchase")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("f_cnt"), sum(col("v")).as("m_micro"),
@@ -1117,7 +1116,7 @@ object EventOps {
     // pinned: the interval frame feeds both delta selects, which each
     // feed both chunkedRunningSum phases — without the pin the
     // sessionize windows re-run four times over the raw events
-    val iv = DataOps.finish(RelOps.events(spark, sfDir)
+    val iv = Exec.finish(RelOps.events(spark, sfDir)
       .select(col("user_id"), expr("ts div 1000").as("tus"),
         col("event_id"))
       .withColumn("prev_tus", lag(col("tus"), 1).over(byUser))

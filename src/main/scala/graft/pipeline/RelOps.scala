@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
+
 /**
  * General relational surface over the driver's star schema + event table
  * (SURVEY.md §2.6: joins / sorts / grouped aggregation exist "for free"
@@ -94,7 +96,7 @@ object RelOps {
     * the part-frequency relation (the pmiBigrams broadcast-the-head
     * discipline); the corpus total rides as a 1-row broadcast. */
   def basketPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val b = DataOps.finish(t(spark, sfDir, "lineitem")
+    val b = Exec.finish(t(spark, sfDir, "lineitem")
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"))
       .distinct())
     val freq = b.groupBy(col("pkey")).agg(count(lit(1)).as("cp"))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.exec.Exec
 import graft.pipeline.DataOps
 
 /**
@@ -109,23 +110,23 @@ object DsirStore extends Store {
     * read-back relation. Result ≡ [[DataOps.dsirWeights]] (same
     * oracle): nothing may be lost between the trained model and the
     * serving store. */
-  def dsirStored(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: audit the score plan over fresh
-      // model relations (plan-identical to the store read by design).
-      val dbl = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("lang"), col("text"))
-      val withB = DataOps.dsirBuckets(spark, d)
-        .join(dbl.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      return DataOps.dsirScore(d.select(col("doc_id")),
-        DataOps.dsirBuckets(spark, d),
-        DataOps.dsirStatsFromBuckets(withB))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-dsir-store", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    scoreAgainst(spark, d, dir)
+  def dsirStored(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(freshScore(spark, sfDir, input.fromSfDir(spark, sfDir)))(
+      scoreAgainst(spark, Store.Text.fromSfDir(spark, sfDir),
+        built(spark, sfDir)))
+
+  /** The registry entries' plan-only stand-in: the full corpus scored
+    * against statistics trained in-plan on the labeled `train` rows,
+    * plan-identical to the store read by design. */
+  private def freshScore(spark: SparkSession, sfDir: String,
+      train: DataFrame): DataFrame = {
+    val d = Store.Text.fromSfDir(spark, sfDir)
+    val withB = DataOps.dsirBuckets(spark,
+        train.select(col("doc_id"), col("text")))
+      .join(train.select(col("doc_id"), col("lang")), Seq("doc_id"))
+    DataOps.dsirScore(d.select(col("doc_id")),
+      DataOps.dsirBuckets(spark, d),
+      DataOps.dsirStatsFromBuckets(withB))
   }
 
   /** Registry form of the INCREMENTAL path: train from the even-doc_id
@@ -133,21 +134,12 @@ object DsirStore extends Store {
     * the merged store. Bucket sums make the merged store ≡ a one-shot
     * full-corpus build, so the result shares [[DataOps.dsirWeights]]'s
     * oracle verbatim. */
-  def dsirIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: the merged store is the full
-      // self-trained model by construction — audit that plan.
-      return dsirStored(spark, sfDir)
-    }
-    val dbl = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("text"))
-    val dir = StoreDirs.tmpStoreDir("graft-dsir-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, dbl.where(col("doc_id") % 2 === 0), dir)
-      appendBatch(spark, dbl.where(col("doc_id") % 2 === 1), dir)
-    }
-    scoreAgainst(spark, dbl.select(col("doc_id"), col("text")), dir)
-  }
+  def dsirIncremental(spark: SparkSession, sfDir: String): DataFrame =
+    // Plan-only: the merged store is the full self-trained model by
+    // construction — audit that plan.
+    Exec.planOnlyOr(dsirStored(spark, sfDir))(
+      scoreAgainst(spark, Store.Text.fromSfDir(spark, sfDir),
+        appended(spark, sfDir)))
 
   /** STORE TELEMETRY — the K4/K9 statsOf discipline on the importance
     * model: one row (n_buckets, sum_raw, sum_tgt), read purely off the
@@ -163,29 +155,20 @@ object DsirStore extends Store {
   }
 
   /** Registry form of the telemetry — over the APPEND-MAINTAINED store
-    * (shares [[dsirIncremental]]'s buildOnce build-evens+append-odds
+    * (shares [[dsirIncremental]]'s [[appended]]
     * store, ≡ a one-shot full-corpus build by bucket-sum merging): the
     * oracle recomputes the numbers from the documents table, auditing
     * that incremental maintenance left the statistics equal to corpus
     * truth. */
   def dsirStats(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, sum}
-    val dbl = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("text"))
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: same aggregates over the fresh
-      // statistics (plan-identical to the store read by design).
-      return batchStats(spark, dbl)
+    // Plan-only: the same aggregates over the fresh statistics
+    // (plan-identical to the store read by design).
+    Exec.planOnlyOr(batchStats(spark, input.fromSfDir(spark, sfDir))
         .agg(count(lit(1)).as("n_buckets"),
           sum(col("raw_cnt")).cast("long").as("sum_raw"),
-          sum(col("tgt_cnt")).cast("long").as("sum_tgt"))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-dsir-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, dbl.where(col("doc_id") % 2 === 0), dir)
-      appendBatch(spark, dbl.where(col("doc_id") % 2 === 1), dir)
-    }
-    statsOf(spark, dir)
+          sum(col("tgt_cnt")).cast("long").as("sum_tgt")))(
+      statsOf(spark, appended(spark, sfDir)))
   }
 
   /** Registry form of the DELETION path: train on the FULL corpus,
@@ -195,26 +178,9 @@ object DsirStore extends Store {
     * model; unseen buckets hit the smoothing floor), but their counts
     * no longer shape the statistics. Oracle: the dsirWeights mirror
     * with its training CTEs filtered to even ids. */
-  def dsirRemoved(spark: SparkSession, sfDir: String): DataFrame = {
-    val dbl = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("text"))
-    val d = dbl.select(col("doc_id"), col("text"))
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: evens-trained stats scoring the
-      // full corpus (plan-identical to the shrunken store by design).
-      val evens = dbl.where(col("doc_id") % 2 === 0)
-      val withB = DataOps.dsirBuckets(spark,
-          evens.select(col("doc_id"), col("text")))
-        .join(evens.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      return DataOps.dsirScore(d.select(col("doc_id")),
-        DataOps.dsirBuckets(spark, d),
-        DataOps.dsirStatsFromBuckets(withB))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-dsir-del", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, dbl, dir)
-      removeBatch(spark, dbl.where(col("doc_id") % 2 === 1), dir)
-    }
-    scoreAgainst(spark, d, dir)
-  }
+  def dsirRemoved(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(freshScore(spark, sfDir,
+        input.fromSfDir(spark, sfDir).where(col("doc_id") % 2 === 0)))(
+      scoreAgainst(spark, Store.Text.fromSfDir(spark, sfDir),
+        removed(spark, sfDir)))
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
 import graft.pipeline.DataOps
 
 /**
@@ -92,12 +93,12 @@ object Forget {
       } else None
     CorpusSink.deleteDocs(spark, ids, corpusDir)
     for ((store, dir) <- stores) {
-      val keys = store.input match {
+      val rows = store.input match {
         case Store.Text => ids
         case Store.Vectors => ids.select(col("doc_id").as("vec_id"))
         case Store.Labeled => victims.get
       }
-      store.removeBatch(spark, keys, dir)
+      store.removeBatch(spark, store.input.keys(rows), dir)
     }
   }
 
@@ -126,64 +127,56 @@ object Forget {
     * surviving any partition (or a survivor lost by the rewrite)
     * breaks count, id-sum or char-sum against the survivors-only
     * oracle. */
-  def corpusForget(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: the surviving corpus IS the even
-      // half — audit that rollup plan.
-      return spark.read.parquet(s"$sfDir/documents.parquet")
+  def corpusForget(spark: SparkSession, sfDir: String): DataFrame =
+    // Plan-only: the surviving corpus IS the even half — audit that
+    // rollup plan.
+    Exec.planOnlyOr(spark.read.parquet(s"$sfDir/documents.parquet")
         .where(col("doc_id") % 2 === 0)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
+          sum(length(col("text"))).cast("long").as("sum_chars"))) {
+      spark.read.parquet(s"${forgottenDirs(spark, sfDir)}/corpus")
+        .groupBy(col("lang").cast("string").as("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
           sum(length(col("text"))).cast("long").as("sum_chars"))
     }
-    spark.read.parquet(s"${forgottenDirs(spark, sfDir)}/corpus")
-      .groupBy(col("lang").cast("string").as("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-        sum(length(col("text"))).cast("long").as("sum_chars"))
-  }
 
   /** Registry entry: the standard BM25 probe over the composed-forget
     * postings store ≡ a from-scratch survivors-only build (the
     * [[PostingsIndex.bm25Removed]] oracle) — the search surface's
     * proof that the SAME forget call that rewrote the corpus also
     * scrubbed postings, lengths, vocabulary and head statistics. */
-  def forgetSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return PostingsIndex.bm25Removed(spark, sfDir)
+  def forgetSearch(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(PostingsIndex.bm25Removed(spark, sfDir)) {
+      PostingsIndex.probeStandardBm25(spark,
+        s"${forgottenDirs(spark, sfDir)}/postings")
     }
-    PostingsIndex.probeStandardBm25(spark,
-      s"${forgottenDirs(spark, sfDir)}/postings")
-  }
 
   /** Registry entry: the standard phrase probed against the
     * composed-forget positional store ≡ the survivors-filtered
     * [[PositionsIndex.phraseRemoved]] oracle — no forgotten document
     * may still report an exact-phrase hit. */
-  def forgetPhrase(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return PositionsIndex.phraseRemoved(spark, sfDir)
+  def forgetPhrase(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(PositionsIndex.phraseRemoved(spark, sfDir)) {
+      PositionsIndex.phraseAgainst(spark,
+        DataOps.phraseParts(spark,
+          spark.read.parquet(s"$sfDir/documents.parquet")
+            .select(col("doc_id"), col("text"))),
+        s"${forgottenDirs(spark, sfDir)}/positions")
     }
-    PositionsIndex.phraseAgainst(spark,
-      DataOps.phraseParts(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"))),
-      s"${forgottenDirs(spark, sfDir)}/positions")
-  }
 
   /** Registry entry: the victims probed as a fresh snapshot against
     * the composed-forget dedup store ≡ [[MinhashIndex.dedupIndexed]]'s
     * oracle — no victim may self-match (its bands are gone), and the
     * surviving even half must still answer exactly. */
-  def forgetDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return MinhashIndex.dedupRemoved(spark, sfDir)
+  def forgetDedup(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(MinhashIndex.dedupRemoved(spark, sfDir)) {
+      MinhashIndex.dedupAgainst(spark,
+        spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("text"))
+          .where(col("doc_id") % 2 === 1),
+        s"${forgottenDirs(spark, sfDir)}/minhash")
     }
-    MinhashIndex.dedupAgainst(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 2 === 1),
-      s"${forgottenDirs(spark, sfDir)}/minhash")
-  }
 
   /** Registry entry: the standard query set probed against the
     * composed-forget PQ vector store ≡ the [[PqIndex.annPqRemoved]]
@@ -191,24 +184,20 @@ object Forget {
     * survivors) — the SAME forget call that rewrote the corpus also
     * dropped the victims' codes and cell assignments, so no forgotten
     * document can surface as a nearest neighbor. */
-  def forgetVectors(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return PqIndex.annPqRemoved(spark, sfDir)
+  def forgetVectors(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(PqIndex.annPqRemoved(spark, sfDir)) {
+      PqIndex.queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+        s"${forgottenDirs(spark, sfDir)}/pq", sfDir)
     }
-    PqIndex.queryAgainst(spark, DataOps.annQueries(spark, sfDir),
-      s"${forgottenDirs(spark, sfDir)}/pq", sfDir)
-  }
 
   /** Registry entry: the SQ-tier twin of [[forgetVectors]] ≡ the
     * [[SqIndex.annSqRemoved]] oracle (reconstruction relation filtered
     * to the survivors). */
-  def forgetSq(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return SqIndex.annSqRemoved(spark, sfDir)
+  def forgetSq(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(SqIndex.annSqRemoved(spark, sfDir)) {
+      SqIndex.queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+        s"${forgottenDirs(spark, sfDir)}/sq", sfDir)
     }
-    SqIndex.queryAgainst(spark, DataOps.annQueries(spark, sfDir),
-      s"${forgottenDirs(spark, sfDir)}/sq", sfDir)
-  }
 
   /** Registry entry: the victims classified (as a fresh unlabeled
     * batch, text re-read from the sf directory — the published corpus
@@ -217,29 +206,25 @@ object Forget {
     * count subtraction left NOTHING of the victims in any language's
     * profile. The victims' labeled text for the subtraction itself was
     * fetched by [[forget]] before the corpus rewrite. */
-  def forgetClassifier(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return LangProfileStore.langIdRemoved(spark, sfDir)
+  def forgetClassifier(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(LangProfileStore.langIdRemoved(spark, sfDir)) {
+      LangProfileStore.classifyAgainst(spark,
+        spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("lang"), col("text"))
+          .where(col("doc_id") % 2 === 1),
+        s"${forgottenDirs(spark, sfDir)}/lang")
     }
-    LangProfileStore.classifyAgainst(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .where(col("doc_id") % 2 === 1),
-      s"${forgottenDirs(spark, sfDir)}/lang")
-  }
 
   /** Registry entry: the full corpus scored against the composed-forget
     * importance store ≡ the evens-trained [[DsirStore.dsirRemoved]]
     * oracle — forgotten documents still score (DSIR weighs any text
     * against the frozen model) but their counts no longer shape the
     * bucket statistics. */
-  def forgetImportance(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DsirStore.dsirRemoved(spark, sfDir)
+  def forgetImportance(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DsirStore.dsirRemoved(spark, sfDir)) {
+      DsirStore.scoreAgainst(spark,
+        spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("text")),
+        s"${forgottenDirs(spark, sfDir)}/dsir")
     }
-    DsirStore.scoreAgainst(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text")),
-      s"${forgottenDirs(spark, sfDir)}/dsir")
-  }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.exec.Exec
 import graft.pipeline.DataOps
 
 /**
@@ -43,7 +44,7 @@ object LangProfileStore extends Store {
     * labeled corpus frame. */
   def buildFrom(spark: SparkSession, corpus: DataFrame,
       storeDir: String): Unit = {
-    val gc = DataOps.ctGramCounts(spark, corpus).persist()
+    val gc = Exec.persist(DataOps.ctGramCounts(spark, corpus))
     val lc = DataOps.ctLangCounts(gc).localCheckpoint(true)
     StoreDirs.replaceParquet(lc, s"$storeDir/counts")
     StoreDirs.replaceParquet(DataOps.ctProfilesOfLangCounts(lc),
@@ -131,22 +132,26 @@ object LangProfileStore extends Store {
     * to even ids, score CTE to odd), so the round-trip through parquet
     * is hash-audited, not just spec-pinned. */
   def langIdStored(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("text"))
+    val d = input.fromSfDir(spark, sfDir)
     val train = d.where(col("doc_id") % 2 === 0)
     val probe = d.where(col("doc_id") % 2 === 1)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: score plan over the fresh
-      // profile relation (plan-identical to the store read by design).
-      return DataOps.ctScoreCounts(DataOps.ctGramCounts(spark, probe),
-        DataOps.ctProfilesFromCounts(DataOps.ctGramCounts(spark, train)))
+    // Plan-only: the score plan over the fresh profile relation
+    // (plan-identical to the store read by design).
+    Exec.planOnlyOr(DataOps.ctScoreCounts(DataOps.ctGramCounts(spark, probe),
+      DataOps.ctProfilesFromCounts(DataOps.ctGramCounts(spark, train)))) {
+      val dir = StoreDirs.tmpStoreDir("graft-lang-store", sfDir)
+      StoreDirs.once(dir)(buildFrom(spark, train, dir))
+      classifyFrom(spark, probe, dir)
     }
-    val dir = StoreDirs.tmpStoreDir("graft-lang-store", sfDir)
-    StoreDirs.once(dir)(buildFrom(spark, train, dir))
-    // langIdNgram's cache hygiene: the probe gram counts feed the doc
-    // profile, its size aggregate and the label join.
-    val gc = DataOps.ctGramCounts(spark, probe).persist()
-    DataOps.finish(DataOps.ctScoreCounts(gc,
+  }
+
+  /** [[classifyAgainst]] under langIdNgram's cache hygiene: the gram
+    * counts feed the doc profile, its size aggregate and the label
+    * join. */
+  private def classifyFrom(spark: SparkSession, d: DataFrame,
+      dir: String): DataFrame = {
+    val gc = Exec.persist(DataOps.ctGramCounts(spark, d))
+    Exec.finish(DataOps.ctScoreCounts(gc,
       spark.read.parquet(s"$dir/profiles")), gc)
   }
 
@@ -156,23 +161,12 @@ object LangProfileStore extends Store {
     * then classify the FULL corpus purely from the merged store.
     * Count sums make the merged store ≡ a one-shot full-corpus build,
     * so the result shares [[DataOps.langIdNgram]]'s oracle verbatim. */
-  def langIdIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: the merged store is the full
-      // self-trained model by construction — audit that plan.
-      return DataOps.langIdNgram(spark, sfDir)
-    }
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("text"))
-    val dir = StoreDirs.tmpStoreDir("graft-lang-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
-      appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
-    }
-    val gc = DataOps.ctGramCounts(spark, d).persist()
-    DataOps.finish(DataOps.ctScoreCounts(gc,
-      spark.read.parquet(s"$dir/profiles")), gc)
-  }
+  def langIdIncremental(spark: SparkSession, sfDir: String): DataFrame =
+    // Plan-only: the merged store is the full self-trained model by
+    // construction — audit that plan.
+    Exec.planOnlyOr(DataOps.langIdNgram(spark, sfDir))(
+      classifyFrom(spark, input.fromSfDir(spark, sfDir),
+        appended(spark, sfDir)))
 
   /** STORE TELEMETRY — the K4/K9 statsOf discipline on the trained
     * classifier: one row (n_langs, n_count_rows, sum_c,
@@ -192,7 +186,7 @@ object LangProfileStore extends Store {
   }
 
   /** Registry form of the telemetry — over the APPEND-MAINTAINED store
-    * (shares [[langIdIncremental]]'s buildOnce build-evens+append-odds
+    * (shares [[langIdIncremental]]'s [[appended]]
     * store, which count-sum merging makes ≡ a one-shot full-corpus
     * build): the oracle recomputes the numbers from the documents
     * table, auditing that incremental maintenance left the trained
@@ -200,25 +194,17 @@ object LangProfileStore extends Store {
   def langStats(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, count,
       count_distinct, lit, sum}
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: same aggregates over the fresh
-      // count/profile relations (plan-identical to the store read).
+    Exec.planOnlyOr {
+      // The same aggregates over the fresh count/profile relations
+      // (plan-identical to the store read).
       val lc = DataOps.ctLangCounts(DataOps.ctGramCounts(spark,
         spark.read.parquet(s"$sfDir/documents.parquet")))
-      return lc.agg(count_distinct(col("lang")).as("n_langs"),
+      lc.agg(count_distinct(col("lang")).as("n_langs"),
           count(lit(1)).as("n_count_rows"),
           sum(col("c")).cast("long").as("sum_c"))
         .crossJoin(broadcast(DataOps.ctProfilesOfLangCounts(lc)
           .agg(count(lit(1)).as("n_profile_rows"))))
-    }
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("text"))
-    val dir = StoreDirs.tmpStoreDir("graft-lang-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
-      appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
-    }
-    statsOf(spark, dir)
+    }(statsOf(spark, appended(spark, sfDir)))
   }
 
   /** Registry form of the DELETION path: train on the FULL corpus,
@@ -228,20 +214,9 @@ object LangProfileStore extends Store {
     * CTE filtered to even ids, score CTE to odd) — the claim count
     * deletion must prove: nothing of the victims remains in any
     * language's profile. */
-  def langIdRemoved(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("text"))
-    val odds = d.where(col("doc_id") % 2 === 1)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return langIdStored(spark, sfDir)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-lang-del", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, d, dir)
-      removeBatch(spark, odds, dir)
-    }
-    val gc = DataOps.ctGramCounts(spark, odds).persist()
-    DataOps.finish(DataOps.ctScoreCounts(gc,
-      spark.read.parquet(s"$dir/profiles")), gc)
-  }
+  def langIdRemoved(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(langIdStored(spark, sfDir))(
+      classifyFrom(spark,
+        input.fromSfDir(spark, sfDir).where(col("doc_id") % 2 === 1),
+        removed(spark, sfDir)))
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
 import graft.nlp.NlpFunctions.MICRO
 import graft.pipeline.DataOps
 
@@ -46,7 +47,7 @@ object MinhashIndex extends Store {
   /** Build (overwrite) the index from a (doc_id, text) corpus frame. */
   def build(spark: SparkSession, corpus: DataFrame,
       indexDir: String): Unit = {
-    val sh = DataOps.shingleHashes(spark, corpus).persist()
+    val sh = Exec.persist(DataOps.shingleHashes(spark, corpus))
     StoreDirs.replaceParquet(sh, s"$indexDir/shingles")
     StoreDirs.replaceParquet(DataOps.minhashBandsOf(sh),
       s"$indexDir/bands")
@@ -72,7 +73,7 @@ object MinhashIndex extends Store {
     * folds the pileup. */
   def appendBatch(spark: SparkSession, batch: DataFrame,
       indexDir: String, tag: String): Unit = {
-    val sh = DataOps.shingleHashes(spark, batch).persist()
+    val sh = Exec.persist(DataOps.shingleHashes(spark, batch))
     StoreDirs.appendOnce(sh, s"$indexDir/shingles", tag)
     StoreDirs.appendOnce(DataOps.minhashBandsOf(sh),
       s"$indexDir/bands", tag)
@@ -123,26 +124,17 @@ object MinhashIndex extends Store {
 
   /** Registry form of the telemetry: build the full-corpus store once,
     * read the one-row health readout purely from it. */
-  def minhashStats(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: same aggregates over fresh
-      // relations (plan-identical to the store read by design).
-      val sh = DataOps.shingleHashes(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text")))
-      return sh.agg(count_distinct(col("doc_id")).as("n_docs"),
+  def minhashStats(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr {
+      // The same aggregates over fresh relations (plan-identical to the
+      // store read by design).
+      val sh = DataOps.shingleHashes(spark, input.fromSfDir(spark, sfDir))
+      sh.agg(count_distinct(col("doc_id")).as("n_docs"),
           count(lit(1)).as("n_shingles"))
         .crossJoin(broadcast(DataOps.minhashBandsOf(sh).agg(
           count(lit(1)).as("n_band_rows"),
           count_distinct(col("bh")).as("n_buckets"))))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-mh-stats", sfDir)
-    StoreDirs.once(dir) {
-      build(spark, spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text")), dir)
-    }
-    statsOf(spark, dir)
-  }
+    }(statsOf(spark, built(spark, sfDir)))
 
   /** Registry form of the INCREMENTAL path (the `bm25Incremental`
     * discipline on the dedup store): build the index from the
@@ -152,21 +144,17 @@ object MinhashIndex extends Store {
     * oracle replays the split definitionally: new = %3==2, indexed =
     * %3<2) — the exact claim incremental maintenance must prove. */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+    val docs = input.fromSfDir(spark, sfDir)
     val nw = docs.where(col("doc_id") % 3 === 2)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      val shIdx = DataOps.shingleHashes(spark,
-        docs.where(col("doc_id") % 3 < 2))
-      return probe(spark, DataOps.shingleHashes(spark, nw),
-        DataOps.minhashBandsOf(shIdx), shIdx)
+    val indexed = docs.where(col("doc_id") % 3 < 2)
+    Exec.planOnlyOr(freshProbe(spark, indexed, nw)) {
+      val dir = StoreDirs.tmpStoreDir("graft-mh-incr", sfDir)
+      StoreDirs.once(dir) {
+        build(spark, docs.where(col("doc_id") % 3 === 0), dir)
+        appendBatch(spark, docs.where(col("doc_id") % 3 === 1), dir)
+      }
+      dedupAgainst(spark, nw, dir)
     }
-    val dir = StoreDirs.tmpStoreDir("graft-mh-incr", sfDir)
-    StoreDirs.once(dir) {
-      build(spark, docs.where(col("doc_id") % 3 === 0), dir)
-      appendBatch(spark, docs.where(col("doc_id") % 3 === 1), dir)
-    }
-    dedupAgainst(spark, nw, dir)
   }
 
   /** DELETION — physically forget a doc_id set from the index (the K9
@@ -196,21 +184,11 @@ object MinhashIndex extends Store {
     * result ≡ [[dedupIndexed]] (same oracle): deletion left exactly the
     * even-half index and no victim can match itself. */
   def dedupRemoved(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+    val docs = input.fromSfDir(spark, sfDir)
     val nw = docs.where(col("doc_id") % 2 === 1)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      val shIdx = DataOps.shingleHashes(spark,
-        docs.where(col("doc_id") % 2 === 0))
-      return probe(spark, DataOps.shingleHashes(spark, nw),
-        DataOps.minhashBandsOf(shIdx), shIdx)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-mh-del", sfDir)
-    StoreDirs.once(dir) {
-      build(spark, docs, dir)
-      removeBatch(spark, nw.select(col("doc_id")), dir)
-    }
-    dedupAgainst(spark, nw, dir)
+    val survivors = docs.where(col("doc_id") % 2 === 0)
+    Exec.planOnlyOr(freshProbe(spark, survivors, nw))(
+      dedupAgainst(spark, nw, removed(spark, sfDir)))
   }
 
   /** Near-duplicates of `newDocs` AGAINST the stored corpus: banded
@@ -223,15 +201,25 @@ object MinhashIndex extends Store {
       indexDir: String): DataFrame = {
     // Persisted: the snapshot shingle relation feeds its bands, the
     // verify join and its size aggregate.
-    val shNew = DataOps.shingleHashes(spark, newDocs).persist()
+    val shNew = Exec.persist(DataOps.shingleHashes(spark, newDocs))
     probe(spark, shNew,
       spark.read.parquet(s"$indexDir/bands"),
       spark.read.parquet(s"$indexDir/shingles"))
   }
 
+  /** [[dedupAgainst]]'s plan with the index built in-plan from
+    * `indexed` instead of read from a store: the registry entries'
+    * plan-only stand-in. */
+  private def freshProbe(spark: SparkSession, indexed: DataFrame,
+      newDocs: DataFrame): DataFrame = {
+    val shIdx = DataOps.shingleHashes(spark, indexed)
+    probe(spark, DataOps.shingleHashes(spark, newDocs),
+      DataOps.minhashBandsOf(shIdx), shIdx)
+  }
+
   /** The probe plan proper — snapshot shingles vs an indexed corpus's
     * band/shingle relations (read from the store by [[dedupAgainst]],
-    * built in-plan by [[dedupIndexed]]'s Explain path). */
+    * built in-plan by [[freshProbe]]). */
   private def probe(spark: SparkSession, shNew: DataFrame,
       bandsIdx: DataFrame, shIdx: DataFrame): DataFrame = {
     val bandsNew = DataOps.minhashBandsOf(shNew)
@@ -250,7 +238,7 @@ object MinhashIndex extends Store {
         col("old_id") === col("b.doc_id") && col("a.h") === col("b.h"))
       .groupBy(col("new_id"), col("old_id"))
       .agg(count(lit(1)).as("inter"))
-    DataOps.finish(inter
+    Exec.finish(inter
       .join(nshNew, Seq("new_id"))
       .join(nshIdx, Seq("old_id"))
       .select(col("new_id").as("doc_id"), col("old_id").as("dup_of"),
@@ -272,20 +260,20 @@ object MinhashIndex extends Store {
     * under a ~2^-64 collision, the documented whp contract; the verify
     * compares 60-bit shingle hashes exactly as the store does). */
   def dedupIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+    val docs = input.fromSfDir(spark, sfDir)
     val old = docs.where(col("doc_id") % 2 === 0)
     val nw = docs.where(col("doc_id") % 2 === 1)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: probe plan over fresh index
-      // relations (plan-identical to the store read by design).
-      val shIdx = DataOps.shingleHashes(spark, old)
-      return probe(spark, DataOps.shingleHashes(spark, nw),
-        DataOps.minhashBandsOf(shIdx), shIdx)
-    }
+    Exec.planOnlyOr(freshProbe(spark, old, nw))(
+      dedupAgainst(spark, nw, evensBuilt(spark, sfDir, old)))
+  }
+
+  /** [[dedupIndexed]]'s store: built from the even ids only (its oracle
+    * replays that split), shared with [[dedupBucketed]]. */
+  private def evensBuilt(spark: SparkSession, sfDir: String,
+      evens: DataFrame): String = {
     val dir = StoreDirs.tmpStoreDir("graft-mh-index", sfDir)
-    StoreDirs.once(dir)(build(spark, old, dir))
-    dedupAgainst(spark, nw, dir)
+    StoreDirs.once(dir)(build(spark, evens, dir))
+    dir
   }
 
   /** CLUSTER LAYOUT — `bands/` persisted as a bucketed-by-`bh`,
@@ -311,38 +299,32 @@ object MinhashIndex extends Store {
     * — the probe stage ([[probe]]) verbatim, layout-only change. */
   def dedupAgainstBucketed(spark: SparkSession, newDocs: DataFrame,
       table: String, indexDir: String): DataFrame = {
-    val shNew = DataOps.shingleHashes(spark, newDocs).persist()
+    val shNew = Exec.persist(DataOps.shingleHashes(spark, newDocs))
     probe(spark, shNew, spark.table(table),
       spark.read.parquet(s"$indexDir/shingles"))
   }
 
   /** Registry form of the BUCKETED layout — [[dedupIndexed]]'s
-    * buildOnce store with its band relation re-laid out bucketed once,
+    * evens-only store with its band relation re-laid out bucketed once,
     * probed by the same odd-half snapshot. Result ≡ [[dedupIndexed]]
     * (same oracle) — the K4 cluster-layout claim hash-audited
     * end-to-end, beside K9's `bm25Bucketed` and K10's
     * `phraseBucketed`. */
   def dedupBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+    val docs = input.fromSfDir(spark, sfDir)
     val old = docs.where(col("doc_id") % 2 === 0)
     val nw = docs.where(col("doc_id") % 2 === 1)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: the directory probe's plan is
-      // the candidate/verify shape; the bucketed scan differs only in
-      // layout.
-      val shIdx = DataOps.shingleHashes(spark, old)
-      return probe(spark, DataOps.shingleHashes(spark, nw),
-        DataOps.minhashBandsOf(shIdx), shIdx)
+    // Plan-only: the directory probe's plan is the candidate/verify
+    // shape; the bucketed scan differs only in layout.
+    Exec.planOnlyOr(freshProbe(spark, old, nw)) {
+      val dir = evensBuilt(spark, sfDir, old)
+      val table = "graft_bands_bkt_" +
+        java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
+      StoreDirs.once(table) {
+        writeBucketedBands(spark, dir, table,
+          path = Some(StoreDirs.tmpStoreDir("graft-bands-bktdata", sfDir)))
+      }
+      dedupAgainstBucketed(spark, nw, table, dir)
     }
-    val dir = StoreDirs.tmpStoreDir("graft-mh-index", sfDir)
-    StoreDirs.once(dir)(build(spark, old, dir))
-    val table = "graft_bands_bkt_" +
-      java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
-    StoreDirs.once(table) {
-      writeBucketedBands(spark, dir, table,
-        path = Some(StoreDirs.tmpStoreDir("graft-bands-bktdata", sfDir)))
-    }
-    dedupAgainstBucketed(spark, nw, table, dir)
   }
 }

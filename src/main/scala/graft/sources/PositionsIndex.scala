@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
 import graft.pipeline.DataOps
 
 /**
@@ -119,51 +120,30 @@ object PositionsIndex extends Store {
     * trigram phrase purely from the read-back relation. Result ≡
     * [[DataOps.phraseSearch]] (same oracle): nothing was lost between
     * the tokenized corpus and the serving store. */
-  def phraseIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: probe plan over the fresh
-      // positional relation (plan-identical to the store read).
-      return DataOps.phraseSearch(spark, sfDir)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pos-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    phraseAgainst(spark, standardParts(spark, sfDir), dir)
-  }
+  def phraseIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.phraseSearch(spark, sfDir))(
+      phraseAgainst(spark, standardParts(spark, sfDir),
+        built(spark, sfDir)))
 
-  /** Registry form of the proximity probe — the SAME buildOnce store
+  /** Registry form of the proximity probe — the SAME [[built]] store
     * as [[phraseIndexed]] answers the standard windowed-co-occurrence
     * query purely from the read-back relation. Result ≡
     * [[DataOps.proximitySearch]] (same oracle): one positional store,
     * two query families. */
-  def proximityIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.proximitySearch(spark, sfDir)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pos-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    proximityAgainst(spark,
-      DataOps.proximityTerms(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"))), dir)
-  }
+  def proximityIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.proximitySearch(spark, sfDir))(
+      proximityAgainst(spark,
+        DataOps.proximityTerms(spark, input.fromSfDir(spark, sfDir)),
+        built(spark, sfDir)))
 
   /** Registry form of the INCREMENTAL path: build from the even half,
     * [[appendBatch]] the odd half, probe — positions are per-doc, so
     * the merged store IS the one-shot build (phraseSearch's oracle
     * verbatim). */
-  def phraseIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.phraseSearch(spark, sfDir)
-    }
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val dir = StoreDirs.tmpStoreDir("graft-pos-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
-      appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
-    }
-    phraseAgainst(spark, standardParts(spark, sfDir), dir)
-  }
+  def phraseIncremental(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.phraseSearch(spark, sfDir))(
+      phraseAgainst(spark, standardParts(spark, sfDir),
+        appended(spark, sfDir)))
 
   /** STORE TELEMETRY — the K4/K9 statsOf discipline on the positional
     * store: one row (n_docs, n_terms, n_positions, sum_pos), read
@@ -181,26 +161,15 @@ object PositionsIndex extends Store {
       sum(col("pos")).cast("long").as("sum_pos"))
 
   /** Registry form of the telemetry — over the APPEND-MAINTAINED store
-    * (shares [[phraseIncremental]]'s buildOnce build-evens+append-odds
+    * (shares [[phraseIncremental]]'s [[appended]]
     * store, ≡ a one-shot build since positions are per-document): the
     * oracle recomputes the numbers from the documents table, auditing
     * that incremental maintenance left the positional relation equal
     * to corpus truth. */
-  def positionsStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: same aggregates over the fresh
-      // positional relation (plan-identical to the store read).
-      return positionsStatsOf(DataOps.positionsOf(spark, d))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pos-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
-      appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
-    }
-    statsOf(spark, dir)
-  }
+  def positionsStats(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(positionsStatsOf(
+      DataOps.positionsOf(spark, input.fromSfDir(spark, sfDir))))(
+      statsOf(spark, appended(spark, sfDir)))
 
   /** CLUSTER LAYOUT — `positions/` persisted as a bucketed-by-`t`,
     * per-bucket-sorted table ([[graft.ops.ScaleOps.writeBucketed]] —
@@ -258,37 +227,34 @@ object PositionsIndex extends Store {
 
   /** Registry form of the BUCKETED layout — the oracle-checked proof
     * that the 100 TB positional layout serves the standard phrase
-    * byte-identically: [[phraseIndexed]]'s buildOnce store re-laid out
+    * byte-identically: [[phraseIndexed]]'s [[built]] store re-laid out
     * bucketed-by-`t` ONCE, then probed with the standard modal
     * trigram's parts AS LITERALS (the serving shape — the 3-row
     * collect is bounded and loudly asserted, the [[PostingsIndex
     * .bm25Bucketed]] discipline). Result ≡ [[DataOps.phraseSearch]]
     * (same oracle). */
-  def phraseBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: the directory probe's plan is
-      // the matching shape; the bucketed scan differs only in layout.
-      return DataOps.phraseSearch(spark, sfDir)
+  def phraseBucketed(spark: SparkSession, sfDir: String): DataFrame =
+    // Plan-only: the directory probe's plan is the matching shape; the
+    // bucketed scan differs only in layout.
+    Exec.planOnlyOr(DataOps.phraseSearch(spark, sfDir)) {
+      val dir = built(spark, sfDir)
+      val table = "graft_positions_bkt_" +
+        java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
+      StoreDirs.once(table) {
+        writeBucketedPositions(spark, dir, table,
+          path = Some(StoreDirs.tmpStoreDir("graft-pos-bktdata", sfDir)))
+      }
+      val partRows = standardParts(spark, sfDir)
+        .select(col("g"), col("i"), col("t")).collect()
+      require(partRows.length <= 3,
+        s"standard phrase must be <= 3 parts, got ${partRows.length}")
+      import spark.implicits._
+      val parts = partRows.toSeq
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
+        .toDF("g", "i", "t")
+      phraseAgainstBucketed(spark,
+        partRows.map(_.getString(2)).distinct.toSeq, parts, table)
     }
-    val dir = StoreDirs.tmpStoreDir("graft-pos-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    val table = "graft_positions_bkt_" +
-      java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
-    StoreDirs.once(table) {
-      writeBucketedPositions(spark, dir, table,
-        path = Some(StoreDirs.tmpStoreDir("graft-pos-bktdata", sfDir)))
-    }
-    val partRows = standardParts(spark, sfDir)
-      .select(col("g"), col("i"), col("t")).collect()
-    require(partRows.length <= 3,
-      s"standard phrase must be <= 3 parts, got ${partRows.length}")
-    import spark.implicits._
-    val parts = partRows.toSeq
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
-      .toDF("g", "i", "t")
-    phraseAgainstBucketed(spark,
-      partRows.map(_.getString(2)).distinct.toSeq, parts, table)
-  }
 
   /** Registry form of the DELETION path: build over the full corpus,
     * [[removeBatch]] the odd half, probe — the phrase head stays the
@@ -297,19 +263,11 @@ object PositionsIndex extends Store {
     * (oracle = the phraseSearch mirror with its positional side
     * filtered to the survivors). */
   def phraseRemoved(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.phraseProbeStage(
+    val d = input.fromSfDir(spark, sfDir)
+    Exec.planOnlyOr(DataOps.phraseProbeStage(
         DataOps.positionsOf(spark, d.where(col("doc_id") % 2 === 0)),
-        DataOps.phraseParts(spark, d))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pos-del", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, d, dir)
-      removeBatch(spark,
-        d.where(col("doc_id") % 2 === 1).select(col("doc_id")), dir)
-    }
-    phraseAgainst(spark, standardParts(spark, sfDir), dir)
+        DataOps.phraseParts(spark, d)))(
+      phraseAgainst(spark, DataOps.phraseParts(spark, d),
+        removed(spark, sfDir)))
   }
 }

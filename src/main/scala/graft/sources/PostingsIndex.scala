@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
 import graft.pipeline.DataOps
 
 /**
@@ -46,10 +47,10 @@ object PostingsIndex extends Store {
   /** Build (overwrite) the store from a (doc_id, text) corpus frame. */
   def buildFrom(spark: SparkSession, corpus: DataFrame,
       indexDir: String): Unit = {
-    val dt = DataOps.docTokenCountsOf(spark, corpus).persist()
+    val dt = Exec.persist(DataOps.docTokenCountsOf(spark, corpus))
     StoreDirs.replaceParquet(dt, s"$indexDir/postings")
-    val dls = dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl"))
-      .persist()
+    val dls = Exec.persist(
+      dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl")))
     StoreDirs.replaceParquet(dls, s"$indexDir/doclen")
     StoreDirs.replaceParquet(DataOps.vocabOfCounts(dt),
       s"$indexDir/vocab")
@@ -78,10 +79,10 @@ object PostingsIndex extends Store {
     * the corpus-sized postings. */
   def appendBatch(spark: SparkSession, batch: DataFrame,
       indexDir: String, tag: String): Unit = {
-    val dt = DataOps.docTokenCountsOf(spark, batch).persist()
+    val dt = Exec.persist(DataOps.docTokenCountsOf(spark, batch))
     StoreDirs.appendOnce(dt, s"$indexDir/postings", tag)
-    val dls = dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl"))
-      .persist()
+    val dls = Exec.persist(
+      dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl")))
     StoreDirs.appendOnce(dls, s"$indexDir/doclen", tag)
     // Each merge reads only its OWN relation + the batch, so the
     // per-relation absorbed witnesses make any kill-and-replay land on
@@ -125,8 +126,8 @@ object PostingsIndex extends Store {
   def removeBatch(spark: SparkSession, docIds: DataFrame,
       indexDir: String): Unit = {
     val ids = docIds.select(col("doc_id"))
-    val dtDel = spark.read.parquet(s"$indexDir/postings")
-      .join(broadcast(ids), Seq("doc_id"), "left_semi").persist()
+    val dtDel = Exec.persist(spark.read.parquet(s"$indexDir/postings")
+      .join(broadcast(ids), Seq("doc_id"), "left_semi"))
     val mergedVocab = spark.read.parquet(s"$indexDir/vocab")
       .unionByName(DataOps.vocabOfCounts(dtDel)
         .select(col("token"), (-col("tf")).as("tf"), (-col("df")).as("df")))
@@ -187,30 +188,18 @@ object PostingsIndex extends Store {
     * filters its CTEs to even ids) — the claim physical deletion must
     * prove: nothing of the victims remains in postings, vocabulary,
     * lengths or the query head's own statistics. */
-  def bm25Removed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: probe plan over fresh even-half
-      // relations (plan-identical to the shrunken store by design).
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 2 === 0)
+  def bm25Removed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr {
+      // The probe plan over fresh even-half relations (plan-identical
+      // to the shrunken store by design).
+      val d = input.fromSfDir(spark, sfDir).where(col("doc_id") % 2 === 0)
       val dt = DataOps.docTokenCountsOf(spark, d)
       val dls = dt.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl"))
       val ndocs = d.agg(count(lit(1)).as("n"))
       val sdl = dls.agg(sum(col("dl")).as("sdl"))
-      return DataOps.bm25ScoreStage(dt, dls, ndocs, sdl,
+      DataOps.bm25ScoreStage(dt, dls, ndocs, sdl,
         DataOps.retrievalQueryHead(DataOps.vocabOfCounts(dt), ndocs))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-postings-del", sfDir)
-    StoreDirs.once(dir) {
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      buildFrom(spark, d, dir)
-      removeBatch(spark, d.where(col("doc_id") % 2 === 1)
-        .select(col("doc_id")), dir)
-    }
-    probeStandardBm25(spark, dir)
-  }
+    }(probeStandardBm25(spark, removed(spark, sfDir)))
 
   /** STORE TELEMETRY — the health readout an index operator watches
     * across append/remove cycles: one row (n_docs, n_terms,
@@ -243,14 +232,13 @@ object PostingsIndex extends Store {
   /** Registry form: build (once per JVM, shared with
     * [[bm25Indexed]]/[[tfidfIndexed]]) and read the telemetry row
     * purely from the store. */
-  def postingsStats(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: same aggregates over fresh
-      // relations (plan-identical to the store read by design).
+  def postingsStats(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr {
+      // The same aggregates over fresh relations (plan-identical to the
+      // store read by design).
       val dt = DataOps.docTokenCounts(spark, sfDir)
-      val n = spark.read.parquet(s"$sfDir/documents.parquet")
+      spark.read.parquet(s"$sfDir/documents.parquet")
         .agg(count(lit(1)).as("n"))
-      return n
         .crossJoin(broadcast(DataOps.vocabOfCounts(dt)
           .agg(count(lit(1)).as("n_terms"))))
         .crossJoin(broadcast(dt.agg(count(lit(1)).as("n_postings"),
@@ -261,11 +249,7 @@ object PostingsIndex extends Store {
             |     else cast(cast(sdl as decimal(38,0)) * 1000000 div n
             |               as bigint) end""".stripMargin)
             .as("avg_dl_micro"))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-postings-index", sfDir)
-    buildOnce(spark, sfDir, dir)
-    statsOf(spark, dir)
-  }
+    }(statsOf(spark, built(spark, sfDir)))
 
   /** The standard deterministic 3-term query head computed purely from
     * the READ-BACK store (same arithmetic as the batch operators' fresh
@@ -394,28 +378,14 @@ object PostingsIndex extends Store {
       queries.select(col("q_id"), col("token"))
         .join(queryWeights(spark, queries, indexDir), Seq("token")))
 
-  /** One store build per (JVM, directory): the second registry entry
-    * (and any later probe) reuses the first's store — exactly the
-    * build-once contract the store exists to prove. */
-  private def buildOnce(spark: SparkSession, sfDir: String,
-      indexDir: String): Unit =
-    StoreDirs.once(indexDir)(build(spark, sfDir, indexDir))
-
   /** Registry form — the full round-trip: build (write) the postings
     * store for the sf directory ONCE, then answer the standard query
     * purely from the read-back relations. Result ≡ [[DataOps.bm25Search]]
     * (same oracle) — the claim a persistent index must prove: nothing
     * was lost between the tokenized corpus and the serving store. */
-  def bm25Indexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: audit the probe plan over fresh
-      // relations (plan-identical to the store read by design).
-      return DataOps.bm25Search(spark, sfDir)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-postings-index", sfDir)
-    buildOnce(spark, sfDir, dir)
-    probeStandardBm25(spark, dir)
-  }
+  def bm25Indexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.bm25Search(spark, sfDir))(
+      probeStandardBm25(spark, built(spark, sfDir)))
 
   /** The standard-head BM25 probe over a store directory. */
   private[sources] def probeStandardBm25(spark: SparkSession,
@@ -429,7 +399,7 @@ object PostingsIndex extends Store {
 
   /** Registry form of the BUCKETED layout — the oracle-checked proof
     * that the 100 TB postings layout serves the standard query
-    * byte-identically: [[bm25Indexed]]'s buildOnce store re-laid out
+    * byte-identically: [[bm25Indexed]]'s [[built]] store re-laid out
     * bucketed-by-token ONCE ([[writeBucketedPostings]] — an external
     * table under the scratch dir), then probed with the standard
     * head's terms AS LITERALS (the serving shape: a user query is
@@ -437,29 +407,26 @@ object PostingsIndex extends Store {
     * The 3-term collect is driver-side by construction (LIMIT 3 —
     * bounded, loudly asserted). Result ≡ [[DataOps.bm25Search]] (same
     * oracle). */
-  def bm25Bucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: the directory probe's plan is
-      // the scoring shape; the bucketed scan differs only in layout.
-      return DataOps.bm25Search(spark, sfDir)
+  def bm25Bucketed(spark: SparkSession, sfDir: String): DataFrame =
+    // Plan-only: the directory probe's plan is the scoring shape; the
+    // bucketed scan differs only in layout.
+    Exec.planOnlyOr(DataOps.bm25Search(spark, sfDir)) {
+      val dir = built(spark, sfDir)
+      val table = "graft_postings_bkt_" +
+        java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
+      // one bucketed-table write per (JVM, sf directory) — the
+      // build-once discipline on the CLUSTER LAYOUT
+      StoreDirs.once(table) {
+        writeBucketedPostings(spark, dir, table,
+          path = Some(StoreDirs.tmpStoreDir("graft-postings-bktdata",
+            sfDir)))
+      }
+      val terms = standardQuery(spark, dir).select(col("token"))
+        .collect().map(_.getString(0)).toSeq
+      require(terms.length <= 3,
+        s"standard query head must be <= 3 terms, got ${terms.length}")
+      bm25AgainstBucketed(spark, terms, table, dir)
     }
-    val dir = StoreDirs.tmpStoreDir("graft-postings-index", sfDir)
-    buildOnce(spark, sfDir, dir)
-    val table = "graft_postings_bkt_" +
-      java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
-    // one bucketed-table write per (JVM, sf directory) — the
-    // buildOnce discipline on the CLUSTER LAYOUT
-    StoreDirs.once(table) {
-      writeBucketedPostings(spark, dir, table,
-        path = Some(StoreDirs.tmpStoreDir("graft-postings-bktdata",
-          sfDir)))
-    }
-    val terms = standardQuery(spark, dir).select(col("token"))
-      .collect().map(_.getString(0)).toSeq
-    require(terms.length <= 3,
-      s"standard query head must be <= 3 terms, got ${terms.length}")
-    bm25AgainstBucketed(spark, terms, table, dir)
-  }
 
   /** Registry form of the INCREMENTAL path: build the store from the
     * even-doc_id half of the corpus, [[appendBatch]] the odd half as
@@ -467,19 +434,9 @@ object PostingsIndex extends Store {
     * merged store. Result ≡ [[DataOps.bm25Search]] over the FULL corpus
     * (same oracle) — the exact claim incremental maintenance must
     * prove: the additive merge loses nothing vs a from-scratch build. */
-  def bm25Incremental(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.bm25Search(spark, sfDir)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-postings-incr", sfDir)
-    StoreDirs.once(dir) {
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      buildFrom(spark, d.where(col("doc_id") % 2 === 0), dir)
-      appendBatch(spark, d.where(col("doc_id") % 2 === 1), dir)
-    }
-    probeStandardBm25(spark, dir)
-  }
+  def bm25Incremental(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.bm25Search(spark, sfDir))(
+      probeStandardBm25(spark, appended(spark, sfDir)))
 
   /** Registry form of HYBRID FUSION served from the store — both
     * rankers ([[bm25Indexed]]'s probe and [[tfidfIndexed]]'s) run off
@@ -487,30 +444,24 @@ object PostingsIndex extends Store {
     * ([[DataOps.rrfStage]] verbatim): the production hybrid-search
     * shape (one index, N rankers, one fused list). Result ≡
     * [[DataOps.rrfFusion]] (same oracle). */
-  def rrfIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.rrfFusion(spark, sfDir)
+  def rrfIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.rrfFusion(spark, sfDir)) {
+      val dir = built(spark, sfDir)
+      DataOps.rrfStage(
+        DataOps.tfidfScoreStage(
+          spark.read.parquet(s"$dir/postings"),
+          standardQuery(spark, dir)),
+        probeStandardBm25(spark, dir))
     }
-    val dir = StoreDirs.tmpStoreDir("graft-postings-index", sfDir)
-    buildOnce(spark, sfDir, dir)
-    DataOps.rrfStage(
-      DataOps.tfidfScoreStage(
-        spark.read.parquet(s"$dir/postings"),
-        standardQuery(spark, dir)),
-      probeStandardBm25(spark, dir))
-  }
 
   /** Registry form of the tf-idf probe — shares [[bm25Indexed]]'s store
     * (one build, two rankers served), ≡ [[DataOps.tfidfSearch]] (same
     * oracle). */
-  def tfidfIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.tfidfSearch(spark, sfDir)
+  def tfidfIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.tfidfSearch(spark, sfDir)) {
+      val dir = built(spark, sfDir)
+      DataOps.tfidfScoreStage(
+        spark.read.parquet(s"$dir/postings"),
+        standardQuery(spark, dir))
     }
-    val dir = StoreDirs.tmpStoreDir("graft-postings-index", sfDir)
-    buildOnce(spark, sfDir, dir)
-    DataOps.tfidfScoreStage(
-      spark.read.parquet(s"$dir/postings"),
-      standardQuery(spark, dir))
-  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, explode, min,
   sqrt, struct}
 
+import graft.exec.Exec
 import graft.pipeline.DataOps
 
 /**
@@ -64,7 +65,7 @@ object PqIndex extends Store {
   override def build(spark: SparkSession, sfDir: String,
       indexDir: String): Unit = {
     val v = DataOps.emb(spark, sfDir)
-    val el = DataOps.pqElements(v).persist()
+    val el = Exec.persist(DataOps.pqElements(v))
     val refined = DataOps.pqCodebook(spark, sfDir)
     StoreDirs.replaceParquet(refined, s"$indexDir/codebook")
     StoreDirs.replaceParquet(DataOps.pqAssign(el, refined),
@@ -85,7 +86,7 @@ object PqIndex extends Store {
     val (el, refined, coded) = DataOps.pqPartsFrom(v)
     StoreDirs.replaceParquet(refined, s"$indexDir/codebook")
     StoreDirs.replaceParquet(coded, s"$indexDir/codes")
-    val cents = DataOps.pin(DataOps.centroidsFrom(v))
+    val cents = Exec.pin(DataOps.centroidsFrom(v))
     StoreDirs.replaceParquet(cents, s"$indexDir/centroids")
     StoreDirs.replaceParquet(DataOps.cellRanksFrom(v, cents)
       .where(col("rnk") === 1)
@@ -104,7 +105,7 @@ object PqIndex extends Store {
     * PqIndexSpec; hash-audited by `annPqIncremental`). */
   def appendBatch(spark: SparkSession, v: DataFrame,
       indexDir: String, tag: String): Unit = {
-    val el = DataOps.pqElements(v).persist()
+    val el = Exec.persist(DataOps.pqElements(v))
     StoreDirs.appendOnce(DataOps.pqAssign(el,
         spark.read.parquet(s"$indexDir/codebook")),
       s"$indexDir/codes", tag)
@@ -169,18 +170,15 @@ object PqIndex extends Store {
     * (same oracle), which is exactly the claim a persistent index must
     * prove: nothing was lost between the trained model and the serving
     * store. */
-  def annPqIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: audit the probe plan over fresh
-      // model relations (plan-identical to the store read by design).
+  def annPqIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr {
+      // The probe plan over fresh model relations (plan-identical to
+      // the store read by design).
       val (_, refined, coded) = DataOps.pqParts(spark, sfDir)
-      return DataOps.pqProbe(spark, DataOps.annQueries(spark, sfDir),
+      DataOps.pqProbe(spark, DataOps.annQueries(spark, sfDir),
         refined, coded, DataOps.emb(spark, sfDir))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
-  }
+    }(queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+      built(spark, sfDir), sfDir))
 
   /** Composed IVF+PQ probe against the stored model — the FAISS IVFPQ
     * SERVING path from the persistent store: stored centroids build
@@ -300,54 +298,46 @@ object PqIndex extends Store {
     * purely from the pruned bucketed scan. Result ≡ [[DataOps.annIvfPq]]
     * restricted to that query (oracle = the annIvfPq mirror filtered to
     * the minimum standard q_id). */
-  def annServeBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: the composed probe's plan is the
-      // ADC/re-rank shape; the bucketed scan differs only in layout.
-      return DataOps.annIvfPq(spark, sfDir).where(col("q_id") === 0L)
+  def annServeBucketed(spark: SparkSession, sfDir: String): DataFrame =
+    // Plan-only: the composed probe's plan is the ADC/re-rank shape;
+    // the bucketed scan differs only in layout.
+    Exec.planOnlyOr(
+        DataOps.annIvfPq(spark, sfDir).where(col("q_id") === 0L)) {
+      val dir = built(spark, sfDir)
+      val table = "graft_codes_bkt_" +
+        java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
+      StoreDirs.once(table) {
+        writeBucketedCodes(spark, dir, table,
+          path = Some(StoreDirs.tmpStoreDir("graft-codes-bktdata", sfDir)))
+      }
+      val q = DataOps.annQueries(spark, sfDir)
+      val headId = q.agg(min(col("q_id"))).head().getLong(0)
+      val q1 = q.where(col("q_id") === headId)
+      val cents = spark.read.parquet(s"$dir/centroids")
+      val probeCells = q1.crossJoin(broadcast(cents))
+        .select(col("cid"),
+          (graft.functions.VecDotExpr.dot(spark, col("qem"), col("cem"))
+            .cast("double") /
+            (sqrt(col("qn").cast("double")) *
+              sqrt(col("cn").cast("double")))).as("cs"))
+        .orderBy(col("cs").desc, col("cid").asc)
+        .limit(DataOps.IvfPqProbes)
+        .select(col("cid")).collect().map(_.getLong(0)).toSeq
+      require(probeCells.length <= DataOps.IvfPqProbes,
+        s"probe list must be <= ${DataOps.IvfPqProbes} cells, got " +
+          s"${probeCells.length}")
+      ivfPqAgainstBucketedCells(spark, q1, probeCells, table, dir, sfDir)
     }
-    val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    val table = "graft_codes_bkt_" +
-      java.lang.Integer.toHexString(dir.hashCode).takeRight(8)
-    StoreDirs.once(table) {
-      writeBucketedCodes(spark, dir, table,
-        path = Some(StoreDirs.tmpStoreDir("graft-codes-bktdata", sfDir)))
-    }
-    val q = DataOps.annQueries(spark, sfDir)
-    val headId = q.agg(min(col("q_id"))).head().getLong(0)
-    val q1 = q.where(col("q_id") === headId)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val probeCells = q1.crossJoin(broadcast(cents))
-      .select(col("cid"),
-        (graft.functions.VecDotExpr.dot(spark, col("qem"), col("cem"))
-          .cast("double") /
-          (sqrt(col("qn").cast("double")) *
-            sqrt(col("cn").cast("double")))).as("cs"))
-      .orderBy(col("cs").desc, col("cid").asc)
-      .limit(DataOps.IvfPqProbes)
-      .select(col("cid")).collect().map(_.getLong(0)).toSeq
-    require(probeCells.length <= DataOps.IvfPqProbes,
-      s"probe list must be <= ${DataOps.IvfPqProbes} cells, got " +
-        s"${probeCells.length}")
-    ivfPqAgainstBucketedCells(spark, q1, probeCells, table, dir, sfDir)
-  }
 
   /** Registry form of the composed probe — shares [[annPqIndexed]]'s
     * store (one build, BOTH ANN probes served: the flat ADC scan and
     * the cell-pruned composed path — what makes the K5 store a real
     * FAISS-style index, not a single-query cache). Result ≡
     * [[DataOps.annIvfPq]] (same oracle). */
-  def annIvfPqIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: probe plan over fresh model
-      // relations (plan-identical to the store read by design).
-      return DataOps.annIvfPq(spark, sfDir)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    ivfPqAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
-  }
+  def annIvfPqIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(DataOps.annIvfPq(spark, sfDir))(
+      ivfPqAgainst(spark, DataOps.annQueries(spark, sfDir),
+        built(spark, sfDir), sfDir))
 
   /** STORE TELEMETRY — the K4/K9 [[PostingsIndex.statsOf]] discipline
     * on the vector store: one row (n_vectors, n_code_rows,
@@ -380,19 +370,19 @@ object PqIndex extends Store {
   }
 
   /** Registry form of the telemetry: shares [[annPqIndexed]]'s
-    * buildOnce store (one build — the two ANN probes and the health
+    * [[built]] store (one build — the two ANN probes and the health
     * readout all serve from it), reads the one-row audit purely from
     * the store relations. */
   def pqStats(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, count_distinct, lit,
       sum}
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: same aggregates over the fresh
-      // model relations (plan-identical to the store read by design).
+    Exec.planOnlyOr {
+      // The same aggregates over the fresh model relations
+      // (plan-identical to the store read by design).
       val v = DataOps.emb(spark, sfDir)
-      val (el, refined, coded) = DataOps.pqPartsFrom(v)
+      val (_, refined, coded) = DataOps.pqPartsFrom(v)
       val cents = DataOps.centroidsFrom(v)
-      return coded
+      coded
         .agg(count_distinct(col("vec_id")).as("n_vectors"),
           count(lit(1)).as("n_code_rows"),
           sum(col("cid")).cast("long").as("sum_code_cid"))
@@ -403,10 +393,7 @@ object PqIndex extends Store {
         .crossJoin(broadcast(DataOps.cellRanksFrom(v, cents)
           .where(col("rnk") === 1)
           .agg(count(lit(1)).as("n_cells"))))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pq-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    statsOf(spark, dir)
+    }(statsOf(spark, built(spark, sfDir)))
   }
 
   /** Registry form of the INCREMENTAL path: train + build the store
@@ -417,23 +404,17 @@ object PqIndex extends Store {
     * filter to even vec_ids, its coding/probe run over the full
     * corpus — the exact claim FAISS-style `add` must prove (appended
     * vectors are first-class probe results without a retrain). */
-  def annPqIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = DataOps.emb(spark, sfDir)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: even-trained codebook coding the
-      // full corpus (plan-identical to the merged store by design).
+  def annPqIncremental(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr {
+      // The even-trained codebook coding the full corpus
+      // (plan-identical to the merged store by design).
+      val v = DataOps.emb(spark, sfDir)
       val even = v.where(col("vec_id") % 2 === 0)
       val refined = DataOps.pqTrain(even, DataOps.pqElements(even))
-      return DataOps.pqProbe(spark, DataOps.annQueries(spark, sfDir),
+      DataOps.pqProbe(spark, DataOps.annQueries(spark, sfDir),
         refined, DataOps.pqAssign(DataOps.pqElements(v), refined), v)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pq-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, v.where(col("vec_id") % 2 === 0), dir)
-      appendBatch(spark, v.where(col("vec_id") % 2 === 1), dir)
-    }
-    queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
-  }
+    }(queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+      appended(spark, sfDir), sfDir))
 
   /** Registry form of the DELETION path: build the store over the full
     * corpus, [[removeBatch]] the odd vec_ids as "the forget request",
@@ -442,20 +423,12 @@ object PqIndex extends Store {
     * never retrains), so the oracle is the annPq mirror with only its
     * CODES filtered to the survivors: no victim may surface in any
     * shortlist, while surviving codes keep their full-corpus codebook. */
-  def annPqRemoved(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
+  def annPqRemoved(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr {
       val (_, refined, coded) = DataOps.pqParts(spark, sfDir)
-      return DataOps.pqProbe(spark, DataOps.annQueries(spark, sfDir),
+      DataOps.pqProbe(spark, DataOps.annQueries(spark, sfDir),
         refined, coded.where(col("vec_id") % 2 === 0),
         DataOps.emb(spark, sfDir))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-pq-del", sfDir)
-    StoreDirs.once(dir) {
-      build(spark, sfDir, dir)
-      removeBatch(spark,
-        DataOps.emb(spark, sfDir).where(col("vec_id") % 2 === 1)
-          .select(col("vec_id")), dir)
-    }
-    queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
-  }
+    }(queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+      removed(spark, sfDir), sfDir))
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
+import graft.exec.Exec
 import graft.pipeline.DataOps
 
 /**
@@ -104,37 +105,28 @@ object SqIndex extends Store {
   /** Registry form — the full round-trip: build (write) the store,
     * then answer the standard ANN query set purely from the read-back
     * relation. Result ≡ [[DataOps.annSq]] (same oracle). */
-  def annSqIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: audit the probe plan over the
-      // fresh reconstruction (plan-identical to the store read).
-      return DataOps.sqProbe(spark, DataOps.annQueries(spark, sfDir),
-        DataOps.sqRecon(spark, DataOps.emb(spark, sfDir)),
-        DataOps.emb(spark, sfDir))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-sq-index", sfDir)
-    StoreDirs.once(dir)(build(spark, sfDir, dir))
-    queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
-  }
+  def annSqIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(freshProbe(spark, sfDir, DataOps.emb(spark, sfDir)))(
+      queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+        built(spark, sfDir), sfDir))
+
+  /** The registry entries' plan-only stand-in: the probe plan over a
+    * fresh reconstruction of `coded` (plan-identical to the store read
+    * by design). */
+  private def freshProbe(spark: SparkSession, sfDir: String,
+      coded: DataFrame): DataFrame =
+    DataOps.sqProbe(spark, DataOps.annQueries(spark, sfDir),
+      DataOps.sqRecon(spark, coded), DataOps.emb(spark, sfDir))
 
   /** Registry form of the INCREMENTAL path: build from the even-vec_id
     * half, [[appendBatch]] the odd half, probe the standard query set
     * from the merged store. Per-vector codes make the merged relation
     * IDENTICAL to a one-shot build, so the result shares
     * [[DataOps.annSq]]'s oracle verbatim. */
-  def annSqIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = DataOps.emb(spark, sfDir)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.sqProbe(spark, DataOps.annQueries(spark, sfDir),
-        DataOps.sqRecon(spark, v), v)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-sq-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, v.where(col("vec_id") % 2 === 0), dir)
-      appendBatch(spark, v.where(col("vec_id") % 2 === 1), dir)
-    }
-    queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
-  }
+  def annSqIncremental(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(freshProbe(spark, sfDir, DataOps.emb(spark, sfDir)))(
+      queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+        appended(spark, sfDir), sfDir))
 
   /** STORE TELEMETRY — the K4/K9 statsOf discipline on the SQ8 store:
     * one row (n_vectors, n_elems, sum_r254), read purely off the
@@ -155,42 +147,23 @@ object SqIndex extends Store {
   }
 
   /** Registry form of the telemetry — over the APPEND-MAINTAINED store
-    * (shares [[annSqIncremental]]'s buildOnce build-evens+append-odds
+    * (shares [[annSqIncremental]]'s [[appended]]
     * store): the oracle recomputes the numbers from the full embeddings
     * table, so the entry audits that incremental maintenance left the
     * store equal to corpus truth — a missed or double append breaks
     * the checksum, not just the row count. */
-  def sqStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = DataOps.emb(spark, sfDir)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      // Explain mode must run no job: same aggregates over the fresh
-      // reconstruction (plan-identical to the store read by design).
-      return reconStats(DataOps.sqRecon(spark, v))
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-sq-incr", sfDir)
-    StoreDirs.once(dir) {
-      buildFrom(spark, v.where(col("vec_id") % 2 === 0), dir)
-      appendBatch(spark, v.where(col("vec_id") % 2 === 1), dir)
-    }
-    statsOf(spark, dir)
-  }
+  def sqStats(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(
+      reconStats(DataOps.sqRecon(spark, DataOps.emb(spark, sfDir))))(
+      statsOf(spark, appended(spark, sfDir)))
 
   /** Registry form of the DELETION path: build over the full corpus,
     * [[removeBatch]] the odd vec_ids, probe — no victim may surface in
     * any shortlist (oracle = the annSq mirror with its codes filtered
     * to the survivors). */
-  def annSqRemoved(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = DataOps.emb(spark, sfDir)
-    if (java.lang.Boolean.getBoolean("graft.lazyPlans")) {
-      return DataOps.sqProbe(spark, DataOps.annQueries(spark, sfDir),
-        DataOps.sqRecon(spark, v.where(col("vec_id") % 2 === 0)), v)
-    }
-    val dir = StoreDirs.tmpStoreDir("graft-sq-del", sfDir)
-    StoreDirs.once(dir) {
-      build(spark, sfDir, dir)
-      removeBatch(spark,
-        v.where(col("vec_id") % 2 === 1).select(col("vec_id")), dir)
-    }
-    queryAgainst(spark, DataOps.annQueries(spark, sfDir), dir, sfDir)
-  }
+  def annSqRemoved(spark: SparkSession, sfDir: String): DataFrame =
+    Exec.planOnlyOr(freshProbe(spark, sfDir,
+        DataOps.emb(spark, sfDir).where(col("vec_id") % 2 === 0)))(
+      queryAgainst(spark, DataOps.annQueries(spark, sfDir),
+        removed(spark, sfDir), sfDir))
 }

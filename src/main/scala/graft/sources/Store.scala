@@ -65,6 +65,37 @@ trait Store {
 
   /** One-row telemetry read purely off the store relations. */
   def statsOf(spark: SparkSession, dir: String): DataFrame
+
+  /** The registry fixtures. Each returns the store's scratch directory
+    * for an sf directory's [[input]], built once per (JVM, store, kind,
+    * sf directory) through [[StoreDirs.once]], so every registry entry
+    * of one kind probes the same build. The entries' oracles replay
+    * these exact splits by id parity. [[built]] is [[build]]. */
+  final def built(spark: SparkSession, sfDir: String): String =
+    fixture("built", sfDir)(build(spark, sfDir, _))
+
+  /** Built from the even ids, then the odd ids appended. */
+  final def appended(spark: SparkSession, sfDir: String): String =
+    fixture("appended", sfDir) { dir =>
+      val rows = input.fromSfDir(spark, sfDir)
+      buildFrom(spark, rows.where(col(input.id) % 2 === 0), dir)
+      appendBatch(spark, rows.where(col(input.id) % 2 === 1), dir)
+    }
+
+  /** Built from every id, then the odd ids removed. */
+  final def removed(spark: SparkSession, sfDir: String): String =
+    fixture("removed", sfDir) { dir =>
+      build(spark, sfDir, dir)
+      removeBatch(spark, input.keys(input.fromSfDir(spark, sfDir)
+        .where(col(input.id) % 2 === 1)), dir)
+    }
+
+  private def fixture(kind: String, sfDir: String)(
+      body: String => Unit): String = {
+    val dir = StoreDirs.tmpStoreDir(s"graft-$name-$kind", sfDir)
+    StoreDirs.once(dir)(body(dir))
+    dir
+  }
 }
 
 object Store {
@@ -80,6 +111,12 @@ object Store {
     /** Seeded empty at ingest start; otherwise built from the first
       * batch that carries the input. */
     def seedable: Boolean = true
+    /** The id column of the input rows. */
+    def id: String = "doc_id"
+    /** The removal key [[removeBatch]] takes, projected from victim
+      * rows in the input's shape ([[Forget]] and [[removed]] both
+      * call it). */
+    def keys(rows: DataFrame): DataFrame = rows.select(col(id))
   }
 
   /** (doc_id, text); removes by (doc_id). */
@@ -101,6 +138,8 @@ object Store {
     def fromSfDir(spark: SparkSession, sfDir: String): DataFrame =
       spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("lang"), col("text"))
+    override def keys(rows: DataFrame): DataFrame =
+      rows.select(col("doc_id"), col("lang"), col("text"))
   }
 
   /** (vec_id, em, nrm) under vec_id = doc_id; removes by (vec_id).
@@ -119,6 +158,7 @@ object Store {
     def fromSfDir(spark: SparkSession, sfDir: String): DataFrame =
       graft.pipeline.DataOps.emb(spark, sfDir)
     override def seedable: Boolean = false
+    override def id: String = "vec_id"
   }
 
   /** The seven stores. The ingest job seeds, absorbs and compacts them

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.exec.Exec
 import graft.functions.HashFns
 import graft.pipeline.DataOps
 
@@ -1259,7 +1260,7 @@ class DataOpsSpec extends SparkSpec {
       .as[(Long, Long, Boolean)].collect().toSeq
     // one verdict per vector, cells from the shared clustering
     val assign = DataOps.cellRanks(spark, SF,
-        DataOps.pin(DataOps.centroids(spark, SF)))
+        Exec.pin(DataOps.centroids(spark, SF)))
       .where(col("rnk") === 1)
       .select(col("vec_id"), col("cid")).as[(Long, Long)].collect().toMap
     assert(out.size == assign.size && out.map(_._1).toSet == assign.keySet)
@@ -2296,7 +2297,7 @@ class DataOpsSpec extends SparkSpec {
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.size
     val err = intercept[IllegalStateException] {
-      DataOps.parBuild(Seq(
+      Exec.parBuild(Seq(
         () => { Thread.sleep(1000); throw new IllegalStateException("tier") },
         () => {
           // A sibling that persists an intermediate and then keeps
