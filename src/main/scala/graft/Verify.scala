@@ -19,13 +19,7 @@ object Verify {
     // Optional extra args: run only the named queries (dev spot-checks
     // with scripts/oracle_compare.py); the driver passes exactly two.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, sfDir, outDir, only)
     finally spark.stop()

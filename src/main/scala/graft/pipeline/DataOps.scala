@@ -4934,16 +4934,20 @@ object DataOps {
     * to no other). Output (doc_id, clean_text, n_redacted) — the
     * masked corpus plus the count a release report aggregates. */
   def piiRedactCols(d: DataFrame): DataFrame =
-    d.select(col("doc_id"),
+    d.select(col("doc_id") +: piiRedacted(col("text")): _*)
+
+  /** [[piiRedactCols]]' two output columns over any text column:
+    * `clean_text` and `n_redacted`. */
+  private[graft] def piiRedacted(text: Column): Seq[Column] = Seq(
+    regexp_replace(
       regexp_replace(
-        regexp_replace(
-          regexp_replace(col("text"), lit(EmailRe), lit("<EMAIL>")),
-          lit(IpRe), lit("<IP>")),
-        lit(PhoneRe), lit("<PHONE>")).as("clean_text"),
-      (regexp_count(col("text"), lit(EmailRe)) +
-        regexp_count(col("text"), lit(IpRe)) +
-        regexp_count(col("text"), lit(PhoneRe)))
-        .cast("long").as("n_redacted"))
+        regexp_replace(text, lit(EmailRe), lit("<EMAIL>")),
+        lit(IpRe), lit("<IP>")),
+      lit(PhoneRe), lit("<PHONE>")).as("clean_text"),
+    (regexp_count(text, lit(EmailRe)) +
+      regexp_count(text, lit(IpRe)) +
+      regexp_count(text, lit(PhoneRe)))
+      .cast("long").as("n_redacted"))
 
   def piiRedact(spark: SparkSession, sfDir: String): DataFrame =
     piiRedactCols(withPiiText(docs(spark, sfDir)))

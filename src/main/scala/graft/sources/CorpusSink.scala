@@ -14,17 +14,20 @@ import graft.pipeline.DataOps
  * Scale shape: `repartition(lang)` before the write gives one shuffle
  * that routes each partition's rows to few writer tasks (without it,
  * every task writes a file into every lang directory — the
- * small-files explosion), and `maxRecordsPerFile` re-splits oversized
+ * small-files explosion), and `MaxRecordsPerFile` re-splits oversized
  * partitions so a dominant language still parallelizes on read. At
  * 100 TB the same two knobs are the difference between 10^3 and 10^6
  * output files.
  */
 object CorpusSink {
 
+  /** The per-file row cap that re-splits a dominant language. */
+  private val MaxRecordsPerFile = 1000000L
+
   /** Write the curated corpus under `outDir/lang=<l>/...`; returns the
     * kept-document frame that was written. */
-  def writeCurated(spark: SparkSession, sfDir: String, outDir: String,
-      maxRecordsPerFile: Long = 1000000L): DataFrame = {
+  def writeCurated(spark: SparkSession, sfDir: String,
+      outDir: String): DataFrame = {
     val kept = DataOps.retentionDecision(spark, sfDir)
       .where(col("keep") === 1L)
       .select(col("doc_id"))
@@ -34,7 +37,7 @@ object CorpusSink {
       .repartition(col("lang"))
       .write
       .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
       .partitionBy("lang")
       .parquet(outDir)
     curated
@@ -120,11 +123,11 @@ object CorpusSink {
     * ingest's per-micro-batch sink — [[graft.streaming.IngestPipeline]])
     * with the same lang-partitioned layout discipline as
     * [[writeCurated]]: one shuffle routes each language to few writer
-    * tasks, `maxRecordsPerFile` re-splits a dominant language. */
+    * tasks, `MaxRecordsPerFile` re-splits a dominant language. */
   def appendCurated(batch: DataFrame, outDir: String,
-      maxRecordsPerFile: Long = 1000000L, tag: String = null): Unit = {
+      tag: String = null): Unit = {
     StoreDirs.appendOnce(batch.repartition(col("lang")), outDir,
-      tag, maxRecordsPerFile, Seq("lang"))
+      tag, MaxRecordsPerFile, Seq("lang"))
     ()
   }
 }

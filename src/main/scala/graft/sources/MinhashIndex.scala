@@ -81,7 +81,7 @@ object MinhashIndex extends Store {
     ()
   }
 
-  /** COMPACTION — rewrite both relations into `numFiles`-file layout
+  /** COMPACTION — rewrite both relations into one-file layout
     * (shingles sorted by (doc_id, h), bands by (bh, doc_id) — the
     * probe keys): a long-lived store accumulates one file set per
     * [[appendBatch]] and the small-files pileup eventually dominates
@@ -89,14 +89,13 @@ object MinhashIndex extends Store {
     * (pinned in MinhashIndexSpec); at cluster scale the same rewrite
     * buckets bands by `bh` and shingles by `doc_id` (the layout knob
     * of the store scaladoc). */
-  override def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int): Unit = {
+  override def compact(spark: SparkSession, indexDir: String): Unit = {
     val sh = spark.read.parquet(s"$indexDir/shingles")
-      .repartition(numFiles)
+      .repartition(1)
       .sortWithinPartitions(col("doc_id"), col("h"))
     StoreDirs.replaceParquet(sh, s"$indexDir/shingles")
     val bands = spark.read.parquet(s"$indexDir/bands")
-      .repartition(numFiles)
+      .repartition(1)
       .sortWithinPartitions(col("bh"), col("doc_id"))
     StoreDirs.replaceParquet(bands, s"$indexDir/bands")
     ()

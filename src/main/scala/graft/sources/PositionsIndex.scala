@@ -71,12 +71,11 @@ object PositionsIndex extends Store {
     ()
   }
 
-  /** COMPACTION — `numFiles`-file re-layout sorted by (t, doc_id, pos)
+  /** COMPACTION — one-file re-layout sorted by (t, doc_id, pos)
     * — the probe key first; contents bit-identical. */
-  override def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int): Unit = {
+  override def compact(spark: SparkSession, indexDir: String): Unit = {
     val p = spark.read.parquet(s"$indexDir/positions")
-      .repartition(numFiles)
+      .repartition(1)
       .sortWithinPartitions(col("t"), col("doc_id"), col("pos"))
     StoreDirs.replaceParquet(p, s"$indexDir/positions")
     ()

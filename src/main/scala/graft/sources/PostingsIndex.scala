@@ -161,22 +161,20 @@ object PostingsIndex extends Store {
     ()
   }
 
-  /** COMPACTION — rewrite the corpus-sized relations into
-    * `numFiles`-file layout (postings additionally sorted by (token,
-    * doc_id) inside each file): a long-lived store accumulates one
+  /** COMPACTION — rewrite the corpus-sized relations into one-file
+    * layout (postings additionally sorted by (token, doc_id) inside the
+    * file): a long-lived store accumulates one
     * parquet file batch per [[appendBatch]], and the small-files pileup
     * — not the data — eventually dominates probe open costs. Contents
     * are bit-identical before and after (pinned in PostingsIndexSpec);
     * at cluster scale the same rewrite buckets postings by `token`
     * (the layout knob of the K4 store scaladoc). */
-  override def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int): Unit = {
+  override def compact(spark: SparkSession, indexDir: String): Unit = {
     val p = spark.read.parquet(s"$indexDir/postings")
-      .repartition(numFiles).sortWithinPartitions(col("token"),
-        col("doc_id"))
+      .repartition(1).sortWithinPartitions(col("token"), col("doc_id"))
     StoreDirs.replaceParquet(p, s"$indexDir/postings")
     val d = spark.read.parquet(s"$indexDir/doclen")
-      .repartition(numFiles)
+      .repartition(1)
     StoreDirs.replaceParquet(d, s"$indexDir/doclen")
     ()
   }

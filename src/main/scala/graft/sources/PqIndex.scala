@@ -136,17 +136,16 @@ object PqIndex extends Store {
   }
 
   /** COMPACTION — rewrite the two corpus-sized relations into
-    * `numFiles`-file layout (codes sorted by (vec_id, m), cells by
+    * one-file layout (codes sorted by (vec_id, m), cells by
     * (cid, vec_id) — the probe keys), folding the one-file-set-per-
     * [[appendBatch]] pileup; contents bit-identical (PqIndexSpec). */
-  override def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int): Unit = {
+  override def compact(spark: SparkSession, indexDir: String): Unit = {
     val codes = spark.read.parquet(s"$indexDir/codes")
-      .repartition(numFiles)
+      .repartition(1)
       .sortWithinPartitions(col("vec_id"), col("m"))
     StoreDirs.replaceParquet(codes, s"$indexDir/codes")
     val cells = spark.read.parquet(s"$indexDir/cells")
-      .repartition(numFiles)
+      .repartition(1)
       .sortWithinPartitions(col("cid"), col("vec_id"))
     StoreDirs.replaceParquet(cells, s"$indexDir/cells")
     ()

@@ -81,13 +81,12 @@ object SqIndex extends Store {
   }
 
   /** COMPACTION — rewrite the reconstruction relation into
-    * `numFiles`-file layout sorted by vec_id, folding the
+    * one-file layout sorted by vec_id, folding the
     * one-file-set-per-[[appendBatch]] pileup; contents bit-identical
     * (SqIndexSpec). */
-  override def compact(spark: SparkSession, indexDir: String,
-      numFiles: Int): Unit = {
+  override def compact(spark: SparkSession, indexDir: String): Unit = {
     val recon = spark.read.parquet(s"$indexDir/recon")
-      .repartition(numFiles)
+      .repartition(1)
       .sortWithinPartitions(col("vec_id"))
     StoreDirs.replaceParquet(recon, s"$indexDir/recon")
     ()

@@ -57,11 +57,10 @@ trait Store {
   /** Remove a previously-absorbed batch, keyed as [[input]] says. */
   def removeBatch(spark: SparkSession, keys: DataFrame, dir: String): Unit
 
-  /** Contents-identical re-layout of the per-append file pileup; a no-op
-    * for stores whose appends rewrite their KB-sized relations
-    * wholesale. */
-  def compact(spark: SparkSession, dir: String, numFiles: Int = 1): Unit =
-    ()
+  /** Contents-identical re-layout of the per-append file pileup into one
+    * file per relation; a no-op for stores whose appends rewrite their
+    * KB-sized relations wholesale. */
+  def compact(spark: SparkSession, dir: String): Unit = ()
 
   /** One-row telemetry read purely off the store relations. */
   def statsOf(spark: SparkSession, dir: String): DataFrame

@@ -18,6 +18,11 @@ import graft.model.Model.{Attribution, ClickState, EwmaState, FunnelRow, FunnelS
  */
 object EventStreamOps {
 
+  /** Allowed event-time disorder of every operator here (and of
+    * [[StreamingOps.toxicWindows]] in TTL mode): late rows beyond it are
+    * dropped by the engine. */
+  val EventWatermark = "1 hour"
+
   /** Event-time column: exact nanos truncated to microseconds (Spark
     * timestamps are micro-precision). */
   private def withTs(events: Dataset[StreamEvent]): DataFrame =
@@ -34,10 +39,9 @@ object EventStreamOps {
     * at microsecond timestamps a measure-zero event, pinned equal on the
     * fixture by EventStreamSpec. Watermarked so sessions close and state
     * is evicted; append mode emits each session once, final. */
-  def sessionizeStream(events: Dataset[StreamEvent],
-      watermark: String = "1 hour"): DataFrame =
+  def sessionizeStream(events: Dataset[StreamEvent]): DataFrame =
     withTs(events)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", EventWatermark)
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("v")).as("val_micro"))
       .select(col("user_id"),
@@ -55,17 +59,17 @@ object EventStreamOps {
     * (`tns div 1000`) — the engine's cross-engine time grain
     * ([[graft.pipeline.EventOps]]) — so the inclusion edge and
     * floor-second gaps match the batch plan bit-for-bit. */
-  def rangeJoinRecentErrorsStream(events: Dataset[StreamEvent],
-      watermark: String = "1 hour"): DataFrame = {
+  def rangeJoinRecentErrorsStream(
+      events: Dataset[StreamEvent]): DataFrame = {
     val e = withTs(events)
     val errs = e.where(col("event_type") === "error")
       .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
         col("tns").as("e_tns"))
-      .withWatermark("e_ts", watermark)
+      .withWatermark("e_ts", EventWatermark)
     val purch = e.where(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("ts").as("p_ts"), col("tns").as("p_tns"))
-      .withWatermark("p_ts", watermark)
+      .withWatermark("p_ts", EventWatermark)
     purch.join(errs, expr(
         s"""user_id = e_user AND
            |p_ts >= e_ts AND p_ts <= e_ts + interval 6 hours AND
@@ -105,11 +109,10 @@ object EventStreamOps {
     * pre-bucket the key if a single key's per-batch volume is itself a
     * problem. */
   def funnelStream(events: Dataset[StreamEvent],
-      watermark: String = "1 hour",
       ttlMs: Long = 30L * 86400L * 1000L): Dataset[FunnelRow] = {
     import events.sparkSession.implicits._
     withTs(events)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", EventWatermark)
       .as[StreamEvent]
       .filter(e => e.event_type == "view" || e.event_type == "click" ||
         e.event_type == "purchase")
@@ -390,11 +393,10 @@ object EventStreamOps {
     * [[asofAttributionStream]] best-effort eviction-timing note apply
     * here too. */
   def scd2Stream(events: Dataset[StreamEvent],
-      watermark: String = "1 hour",
       ttlMs: Long = 30L * 86400L * 1000L): Dataset[Scd2Row] = {
     import events.sparkSession.implicits._
     withTs(events)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", EventWatermark)
       .as[StreamEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(),
@@ -448,8 +450,8 @@ object EventStreamOps {
     * micro-batch engine only re-fires a batch when the watermark moves,
     * where a processing-time timeout makes `shouldRunAnotherBatch`
     * return true unconditionally and the query busy-spins empty
-    * micro-batches forever. `watermark` bounds how out-of-order events
-    * may arrive (late rows beyond it are dropped by the engine).
+    * micro-batches forever. [[EventWatermark]] bounds how out-of-order
+    * events may arrive (late rows beyond it are dropped by the engine).
     *
     * Eviction timing is WATERMARK-GRANULAR and best-effort, not an
     * exact TTL cutoff (the contract shared by every event-time-TTL
@@ -462,11 +464,10 @@ object EventStreamOps {
     * per-batch buffering note as [[funnelStream]] applies to the
     * in-batch `toSeq` sort. */
   def asofAttributionStream(events: Dataset[StreamEvent],
-      watermark: String = "1 hour",
       ttlMs: Long = 7L * 86400L * 1000L): Dataset[Attribution] = {
     import events.sparkSession.implicits._
     withTs(events)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", EventWatermark)
       .as[StreamEvent]
       .filter(e => e.event_type == "click" || e.event_type == "purchase")
       .groupByKey(_.user_id)

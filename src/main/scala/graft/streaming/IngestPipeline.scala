@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.DriverThreads
+import graft.pipeline.DataOps
 import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
 
 /**
@@ -20,7 +21,8 @@ import graft.sources.{CorpusSink, MinhashIndex, Store, StoreDirs}
  *     doc_id processed by ANY earlier batch is dropped, so re-landed
  *     files can never double-publish or double-count postings)
  *   → keep filter
- *   → piiRedactStream (mask BEFORE anything persists)
+ *   → PII redaction of the landed text ([[DataOps.piiRedacted]]; mask
+ *     BEFORE anything persists)
  *   → near-dup probe against the K4 [[MinhashIndex]] store
  *     (per-batch batch-join — zero stream state, the store holds every
  *     heavy relation)
@@ -139,16 +141,16 @@ object IngestPipeline {
     }
 
   /** The per-micro-batch tail of the DAG, after the streaming-side
-    * curation verdict: keep filter → PII redaction (metadata re-joined
-    * on doc_id) → near-dup probe against the store. Returns (curated
-    * survivors, dup audit rows). Pure function of (verdict batch,
-    * store state), so the StreamingSpec batch twin replays the batch
-    * sequence on static frames. */
+    * curation verdict: keep filter → PII redaction of the landed text
+    * (one projection that keeps the verdict's columns) → near-dup probe
+    * against the store. Returns (curated survivors, dup audit rows).
+    * Pure function of (verdict batch, store state), so the StreamingSpec
+    * batch twin replays the batch sequence on static frames. */
   def finishBatch(verdict: DataFrame,
       indexDir: String): (DataFrame, DataFrame) = {
     val kept = verdict.where(col("keep") === 1L)
-    val redacted = StreamingOps.piiRedactStream(kept)
-      .join(kept.drop("text"), Seq("doc_id"))
+    val redacted = kept.select(
+      col("*") +: DataOps.piiRedacted(col("text")): _*)
     val dups = MinhashIndex.dedupAgainst(verdict.sparkSession,
       redacted.select(col("doc_id"), col("clean_text").as("text")),
       indexDir)
@@ -178,19 +180,18 @@ object IngestPipeline {
     * absorbs the same batches, closing the loop that lets later
     * batches dedup against earlier ones. */
   def start(docStream: DataFrame, sfDir: String, indexDir: String,
-      outDir: String, compactEvery: Int = 0,
-      writerId: String = StoreDirs.jvmNonce): StreamingQuery = {
+      outDir: String, compactEvery: Int = 0): StreamingQuery = {
     val spark = docStream.sparkSession
     // WRITER LEASE — the two-phase markers assume ONE writer; a second
     // concurrently-started pipeline on the same outDir would interleave
     // store rewrites undetected. Acquire `outDir/_lock` (Hadoop-FS
     // create-if-absent) BEFORE any store seeds or mutates; a conflict
-    // fails loudly. Re-entrant for the SAME writerId (a restarted
+    // fails loudly. Re-entrant for the same JVM (a restarted
     // pipeline in the same process resumes its own lease); a clean JVM
     // exit releases it via shutdown hook, so a lingering lock means the
     // owner is either alive or died uncleanly — exactly the two cases
     // where refusing to start is right.
-    acquireLease(spark, outDir, writerId)
+    acquireLease(spark, outDir, StoreDirs.jvmNonce)
     // Sweep staging/ leftovers whose batch already committed: a crash
     // between the batch-level marker touch and the staging delete
     // leaves full curated/dups copies on disk forever otherwise —
@@ -429,7 +430,18 @@ object IngestPipeline {
 
   /** The job form: bootstrap the dedup store from the existing corpus
     * if absent (index-once), then watch `--in` for landing document
-    * parquet and curate until terminated. */
+    * parquet and curate until terminated.
+    *
+    * The session's generated-code cache holds 512 classes, not Spark's
+    * 100: one steady batch touches about 160 cache keys (98 distinct
+    * whole-stage sources, most compiled once on a driver thread and once
+    * in a task, because the cache keys on the context classloader too).
+    * At 100 entries every steady batch of the benchmark's ingest-stream
+    * workload re-ran about 150 Janino compiles and JIT-compiled the fresh
+    * classes again; at 512 it ran 0 to 3 (4 cores). 512 is about three
+    * times the working set. Spark reads the setting once per JVM, at the
+    * first code generation, so it holds only for a session built before
+    * any query ran. */
   def main(args: Array[String]): Unit = {
     val config = parseArgs(args)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -437,6 +449,7 @@ object IngestPipeline {
       .appName("Graft Ingest")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.codegen.cache.maxEntries", 512L)
       .getOrCreate()
     val corpus = spark.read
       .parquet(s"${config.sfDir}/documents.parquet")

@@ -42,7 +42,8 @@ final class SentimentPipeline(val messages: Dataset[TimedMessage]) {
     * trunk feeding the entity/category branches at live granularity. */
   private lazy val scored: DataFrame =
     ParityQueries.withSentiment(
-      StreamingOps.withEventTime(messages).withWatermark("ts", "5 seconds"))
+      StreamingOps.withEventTime(messages)
+        .withWatermark("ts", StreamingOps.ChatWatermark))
 
   /** R3 entityStream (SentimentAnalysis.scala:62-93): one row per entity
     * mention with the record's mood. */
@@ -109,7 +110,8 @@ final class SentimentPipeline(val messages: Dataset[TimedMessage]) {
   /** W5: sliding 90 s / 60 s channel mood (SentimentAnalysis.scala:170-176). */
   lazy val channelMoodStream: DataFrame =
     ParityQueries.withSentiment(
-      StreamingOps.withEventTime(messages).withWatermark("ts", "5 seconds"))
+      StreamingOps.withEventTime(messages)
+        .withWatermark("ts", StreamingOps.ChatWatermark))
       .groupBy(window(col("ts"), "90 seconds", "60 seconds"),
         col("channel").as("key"))
       .agg(sum(col("mood_micro")).as("mood_micro"))
@@ -117,7 +119,8 @@ final class SentimentPipeline(val messages: Dataset[TimedMessage]) {
   /** R3/W3: entity flatten + 10 s tumbling count
     * (SentimentAnalysis.scala:62-104), per-record granularity. */
   lazy val topicStream: DataFrame =
-    StreamingOps.withEventTime(messages).withWatermark("ts", "5 seconds")
+    StreamingOps.withEventTime(messages)
+      .withWatermark("ts", StreamingOps.ChatWatermark)
       .select(col("ts"),
         explode(graft.functions.EntityMentionsExpr.mentions(spark,
           col("text"))).as("key"))

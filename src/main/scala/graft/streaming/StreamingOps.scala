@@ -30,6 +30,10 @@ import graft.pipeline.ParityQueries.BaseEpoch
  */
 object StreamingOps {
 
+  /** Allowed event-time disorder of the chat streams: the W1/W2 window
+    * queries here and [[SentimentPipeline]]'s watermarked branches. */
+  val ChatWatermark = "5 seconds"
+
   /** Event-time column for the derived stream: `tsec` seconds after the
     * fixture epoch. */
   def withEventTime(msgs: Dataset[TimedMessage]): DataFrame =
@@ -38,10 +42,9 @@ object StreamingOps {
 
   /** W1 with its event-time window column kept — the chaining form for
     * window-of-windows aggregation. */
-  def w1ConcatWindowed(msgs: Dataset[TimedMessage],
-      watermark: String = "5 seconds"): DataFrame =
+  def w1ConcatWindowed(msgs: Dataset[TimedMessage]): DataFrame =
     withEventTime(msgs)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", ChatWatermark)
       .groupBy(window(col("ts"), "1 second"), col("channel"),
         col("user").as("username"))
       .agg(orderedConcat(col("seq"), col("text")).as("text"))
@@ -49,9 +52,8 @@ object StreamingOps {
   /** W1 streaming form (SentimentAnalysis.scala:44-48): keyed 1 s tumbling
     * window + arrival-order concat, watermarked on event time. Output
     * matches [[ParityQueries.w1]]: (wsec, channel, username, text). */
-  def w1Concat(msgs: Dataset[TimedMessage],
-      watermark: String = "5 seconds"): DataFrame =
-    w1ConcatWindowed(msgs, watermark)
+  def w1Concat(msgs: Dataset[TimedMessage]): DataFrame =
+    w1ConcatWindowed(msgs)
       .select(
         (unix_timestamp(col("window.start")) - BaseEpoch).as("wsec"),
         col("channel"), col("username"), col("text"))
@@ -61,9 +63,8 @@ object StreamingOps {
     * multiple-stateful support, append mode): the second window groups on
     * `window_time` of the first, watermark propagating through. Output
     * matches [[ParityQueries.w2]]: (w2sec, channel, username, text). */
-  def w2Concat(msgs: Dataset[TimedMessage],
-      watermark: String = "5 seconds"): DataFrame =
-    w1ConcatWindowed(msgs, watermark)
+  def w2Concat(msgs: Dataset[TimedMessage]): DataFrame =
+    w1ConcatWindowed(msgs)
       .withColumn("wsec",
         unix_timestamp(col("window.start")) - BaseEpoch)
       .groupBy(window(window_time(col("window")), "100 seconds"),
@@ -75,9 +76,8 @@ object StreamingOps {
 
   /** E1 streaming form: W1 + the sentiment enrichment (stateless columns,
     * identical to the batch twin). */
-  def sentimentStream(msgs: Dataset[TimedMessage],
-      watermark: String = "5 seconds"): DataFrame =
-    ParityQueries.withSentiment(w1Concat(msgs, watermark))
+  def sentimentStream(msgs: Dataset[TimedMessage]): DataFrame =
+    ParityQueries.withSentiment(w1Concat(msgs))
       .select("wsec", "channel", "username", "score_micro", "mag_micro",
         "mood_micro")
 
@@ -117,23 +117,22 @@ object StreamingOps {
     * [[EventStreamOps]] contract): a timer fires only in a batch AFTER
     * the watermark passes it, and only for keys WITHOUT data in that
     * batch — a key whose next records arrive in the very batch that
-    * first reveals its expiry continues its old state. `watermark`
-    * bounds event-time disorder; records later than it are dropped by
-    * the engine (TTL mode only — without a TTL no watermark is applied
-    * and nothing is ever dropped or evicted). The default delay matches
-    * the sibling event-time-TTL operators ([[EventStreamOps]]): a
+    * first reveals its expiry continues its old state. The watermark
+    * delay bounds event-time disorder; records later than it are dropped
+    * by the engine (TTL mode only — without a TTL no watermark is applied
+    * and nothing is ever dropped or evicted). The delay is the sibling
+    * event-time-TTL operators' [[EventStreamOps.EventWatermark]]: a
     * 0-second delay would silently drop CROSS-key disorder the per-key
     * ordering contract explicitly allows. */
   def toxicWindows(moods: Dataset[MoodRec], n: Int,
       thresholdMicro: Long,
-      ttlMs: Option[Long] = None,
-      watermark: String = "1 hour"): Dataset[ToxWindow] = {
+      ttlMs: Option[Long] = None): Dataset[ToxWindow] = {
     import moods.sparkSession.implicits._
     val src =
       if (ttlMs.isDefined)
         moods.toDF()
           .withColumn("ts", timestamp_seconds(lit(BaseEpoch) + col("tsec")))
-          .withWatermark("ts", watermark)
+          .withWatermark("ts", EventStreamOps.EventWatermark)
           .as[MoodRec]
       else moods
     val timeoutConf =
@@ -176,16 +175,15 @@ object StreamingOps {
 
   /** Streaming exact dedup — the ingest-time form of
     * [[graft.pipeline.DataOps.dedupExact]]: drops records whose text hash
-    * was already seen, with state BOUNDED by the watermark
+    * was already seen, with state BOUNDED by a 10-second watermark
     * (`dropDuplicatesWithinWatermark`) so the dedup store cannot grow
     * without limit on an unbounded stream. At 100 TB ingest this is the
     * first stage of the training-data pipeline; the batch operator
     * handles the historical corpus. */
-  def dedupExactStream(msgs: Dataset[TimedMessage],
-      watermark: String = "10 seconds"): DataFrame =
+  def dedupExactStream(msgs: Dataset[TimedMessage]): DataFrame =
     withEventTime(msgs)
       .withColumn("h", md5(col("text")))
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "10 seconds")
       .dropDuplicatesWithinWatermark("h")
       .drop("h", "ts")
 
@@ -633,8 +631,11 @@ object StreamingOps {
       graft.pipeline.DataOps.withPiiText(docStream))
 
   /** Ingest-time PII masking — the streaming twin of
-    * [[graft.pipeline.DataOps.piiRedact]] (stateless projection; a
-    * production ingest path masks BEFORE anything persists). */
+    * [[graft.pipeline.DataOps.piiRedact]] (stateless projection). Like
+    * its batch twin it first appends the fixture's stand-in PII
+    * ([[graft.pipeline.DataOps.withPiiText]]), which its oracle replays;
+    * [[IngestPipeline]] masks real landed text with
+    * [[graft.pipeline.DataOps.piiRedacted]] instead. */
   def piiRedactStream(docStream: DataFrame): DataFrame =
     graft.pipeline.DataOps.piiRedactCols(
       graft.pipeline.DataOps.withPiiText(docStream))

@@ -426,10 +426,12 @@ class StreamingSpec extends SparkSpec {
     // deterministic.
     val in = MemoryStream[MoodRec]
     val name = freshQueryName("toxttl")
-    // zero watermark delay keeps the test's clock arithmetic tight;
-    // the production default is "1 hour" of allowed disorder
+    // The watermark trails the max event time by the 1-hour
+    // EventStreamOps.EventWatermark, so the clock-advancing records below
+    // sit one hour past the times they move the watermark to.
+    val lag = 3600L
     val q = StreamingOps.toxicWindows(in.toDS(), 10, -10L * 1000000L,
-        ttlMs = Some(30000L), watermark = "0 seconds") // 30 s event-time TTL
+        ttlMs = Some(30000L)) // 30 s event-time TTL
       .toDF().writeStream.outputMode("append").format("memory")
       .queryName(name).start()
     try {
@@ -439,12 +441,13 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table(name).count() == 1, "first window did not fire")
       // Advance the watermark past u's 40 s timeout with another key:
-      // the w@100 batch moves the watermark to 100 s; the w@101 batch
-      // then runs with that watermark and fires u's timer (u has no data
-      // in it — the best-effort eviction contract).
-      in.addData(Seq(MoodRec("w", 1L, 100L, 1000000L)))
+      // the w@(100 s + lag) batch moves the watermark to 100 s; the
+      // w@(101 s + lag) batch then runs with that watermark and fires
+      // u's timer (u has no data in it — the best-effort eviction
+      // contract).
+      in.addData(Seq(MoodRec("w", 1L, 100L + lag, 1000000L)))
       q.processAllAvailable()
-      in.addData(Seq(MoodRec("w", 2L, 101L, 1000000L)))
+      in.addData(Seq(MoodRec("w", 2L, 101L + lag, 1000000L)))
       q.processAllAvailable()
       // run 2: u returns later than the watermark — state restarted
       in.addData((11 to 20).map(i =>
@@ -1044,6 +1047,34 @@ class StreamingSpec extends SparkSpec {
       assert(new java.io.File(s"$outDir/committed").listFiles()
         .length >= 2)
     } finally q.stop()
+  }
+
+  test("IngestPipeline publishes landed text as it is and redacts only the PII it carries") {
+    implicit val sqlCtx = spark.sqlContext
+    // The texts of two documents the curation verdict keeps, landed
+    // under new ids: doc 7, an id the PII fixture's stand-in would append
+    // an email to, as it is; doc 2 with a real email appended.
+    val Seq((t7, lang7, src7, n7), (t2, lang2, src2, n2)) =
+      StreamingOps.curationStream(
+          spark.read.parquet(s"$SF/documents.parquet"), SF)
+        .where(col("keep") === 1L).orderBy("doc_id")
+        .select("text", "lang", "source", "n_chars")
+        .as[(String, String, String, Long)].head(2).toSeq
+    val dir =
+      java.nio.file.Files.createTempDirectory("graft-ingest-pii").toString
+    val in = MemoryStream[(Long, String, String, String, Long)]
+    val q = IngestPipeline.start(
+      in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
+      SF, s"$dir/dedup", s"$dir/out")
+    try {
+      in.addData(Seq((7L, t7, lang7, src7, n7),
+        (2L, s"$t2 mail bob@ex.org", lang2, src2, n2)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val published = spark.read.parquet(s"$dir/out/corpus")
+      .select("doc_id", "clean_text", "n_redacted")
+      .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
+    assert(published == Seq((2L, s"$t2 mail <EMAIL>", 1L), (7L, t7, 0L)))
   }
 
   test("IngestPipeline compactEvery: maintained stores fold to single files") {
