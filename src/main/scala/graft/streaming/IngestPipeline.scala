@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.DriverThreads
@@ -178,7 +180,14 @@ object IngestPipeline {
     * dedup store, which lives in the caller-bootstrapped `indexDir`
     * (seeded empty like the others if the caller left it absent) and
     * absorbs the same batches, closing the loop that lets later
-    * batches dedup against earlier ones. */
+    * batches dedup against earlier ones.
+    *
+    * Every micro-batch evaluates its expressions interpreted, with no
+    * generated code: a 250-document batch touches more generated classes
+    * than Spark's 100-entry cache holds, so with codegen each steady
+    * batch re-ran about 150 Janino compiles; interpreted it runs 0. At
+    * 10× the batch the two modes tie (4 cores). The setting goes on the
+    * query's own session clone, so the caller's session keeps its own. */
   def start(docStream: DataFrame, sfDir: String, indexDir: String,
       outDir: String, compactEvery: Int = 0): StreamingQuery = {
     val spark = docStream.sparkSession
@@ -220,6 +229,8 @@ object IngestPipeline {
     StreamingOps.curationStream(docStream, sfDir).writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
+        s.conf.set(SQLConf.CODEGEN_FACTORY_MODE.key,
+          CodegenObjectFactoryMode.NO_CODEGEN.toString)
         if (!StoreDirs.pathExists(s, s"$outDir/committed/$batchId")) {
           processBatch(batch.toDF(), batchId, indexDir, outDir)
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
@@ -430,18 +441,7 @@ object IngestPipeline {
 
   /** The job form: bootstrap the dedup store from the existing corpus
     * if absent (index-once), then watch `--in` for landing document
-    * parquet and curate until terminated.
-    *
-    * The session's generated-code cache holds 512 classes, not Spark's
-    * 100: one steady batch touches about 160 cache keys (98 distinct
-    * whole-stage sources, most compiled once on a driver thread and once
-    * in a task, because the cache keys on the context classloader too).
-    * At 100 entries every steady batch of the benchmark's ingest-stream
-    * workload re-ran about 150 Janino compiles and JIT-compiled the fresh
-    * classes again; at 512 it ran 0 to 3 (4 cores). 512 is about three
-    * times the working set. Spark reads the setting once per JVM, at the
-    * first code generation, so it holds only for a session built before
-    * any query ran. */
+    * parquet and curate until terminated. */
   def main(args: Array[String]): Unit = {
     val config = parseArgs(args)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -449,7 +449,6 @@ object IngestPipeline {
       .appName("Graft Ingest")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", 512L)
       .getOrCreate()
     val corpus = spark.read
       .parquet(s"${config.sfDir}/documents.parquet")

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.{CategoryHitsExpr, EntityMentionsExpr, FingerprintExpr, GramHashesExpr, GramStatsExpr, Int8QuantExpr, MicroVecExpr, StopHitsExpr, VecDotExpr, WordGramsExpr}
+import graft.functions.{CategoryHitsExpr, CharGramHashesExpr, EntityMentionsExpr, FingerprintExpr, GramHashesExpr, GramStatsExpr, Int8QuantExpr, MicroVecExpr, StopHitsExpr, ValenceStatsExpr, VecDotExpr, WordGramsExpr}
 import graft.functions.HashFns
 import graft.nlp.{Lexicons, NlpFunctions}
 
@@ -12,7 +14,10 @@ import graft.nlp.{Lexicons, NlpFunctions}
   * to the composed higher-order form it replaced, on RANDOM text — the
   * fixture suites cover hand-picked edges; these sweep generated
   * whitespace runs, casing, unicode and lexicon words. Deterministic
-  * ScalaCheck seeds, batched into ONE Spark job per expression. */
+  * ScalaCheck seeds, batched into ONE Spark job per expression and
+  * codegen mode: every property runs with generated code (FALLBACK,
+  * each expression's `doGenCode` inside whole-stage codegen) and
+  * interpreted (NO_CODEGEN, its `eval`, as the ingest job runs). */
 class NativeExprPropertiesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,7 +37,26 @@ class NativeExprPropertiesSpec extends SparkSpec {
   private def sample(n: Int): Seq[String] =
     (0 until n).flatMap(i => text(Gen.Parameters.default, Seed(i.toLong)))
 
-  test("CategoryHitsExpr equals composed categoriesArr on random text") {
+  /** One test that runs `body` under each codegen factory mode. The
+    * optimizer's ConvertToLocalRelation is off meanwhile: it would
+    * evaluate projections over the in-memory sample at plan time,
+    * interpreted in either mode. */
+  private def property(name: String)(body: => Unit): Unit =
+    test(name) {
+      for (mode <- Seq(CodegenObjectFactoryMode.FALLBACK,
+          CodegenObjectFactoryMode.NO_CODEGEN)) withClue(s"[$mode] ") {
+        spark.conf.set(SQLConf.CODEGEN_FACTORY_MODE.key, mode.toString)
+        spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key,
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+        try body
+        finally {
+          spark.conf.unset(SQLConf.CODEGEN_FACTORY_MODE.key)
+          spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
+        }
+      }
+    }
+
+  property("CategoryHitsExpr equals composed categoriesArr on random text") {
     val df = sample(200).toDF("t")
       .select(NlpFunctions.tokens(col("t")).as("toks"))
     val diff = df.where(not(
@@ -42,7 +66,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("EntityMentionsExpr equals composed entityMentions on random text") {
+  property("EntityMentionsExpr equals composed entityMentions on random text") {
     val df = sample(200).toDF("t")
     val diff = df.where(not(
         EntityMentionsExpr.mentions(spark, col("t")) ===
@@ -51,7 +75,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("GramHashesExpr equals transform(word_grams, hash60) on random text") {
+  property("GramHashesExpr equals transform(word_grams, hash60) on random text") {
     import graft.functions.HashFns
     val df = sample(200).toDF("t")
     val composed = transform(
@@ -73,7 +97,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff2 == 0)
   }
 
-  test("VecDotExpr equals the composed aggregate(zip_with) on random vectors") {
+  property("VecDotExpr equals the composed aggregate(zip_with) on random vectors") {
     val vecs: Seq[(Seq[Long], Seq[Long])] = (0 until 200).map { i =>
       val r = new scala.util.Random(i)
       val n = 1 + r.nextInt(96)
@@ -95,7 +119,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diffN == 0)
   }
 
-  test("VecDotExpr yields NULL on a null element, like the composed form") {
+  property("VecDotExpr yields NULL on a null element, like the composed form") {
     val df = Seq(
       (Seq[java.lang.Long](1L, null, 3L), Seq[java.lang.Long](4L, 5L, 6L)),
       (Seq[java.lang.Long](1L, 2L), Seq[java.lang.Long](null, 5L)),
@@ -120,7 +144,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(e.getMessage.contains("n >= 1"), e.getMessage)
   }
 
-  test("GramStatsExpr equals the WordGramsExpr-derived stats on random text") {
+  property("GramStatsExpr equals the WordGramsExpr-derived stats on random text") {
     // the fused stats must equal what the gram arrays say: token count,
     // first-occurrence-distinct tokens, bigram total, and the max
     // per-bigram count (≡ longest equal-run in the sorted bigram array)
@@ -149,7 +173,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("StopHitsExpr equals the composed filter(array_contains) count") {
+  property("StopHitsExpr equals the composed filter(array_contains) count") {
     val stopArr = typedLit(Lexicons.stopwords)
     // lexicon-biased random text + explicit stopword-heavy rows
     val df = (sample(200) ++ Seq("the and of", "", "xqzzy the THE the"))
@@ -163,7 +187,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("MicroVecExpr equals the composed transform(round) on random floats") {
+  property("MicroVecExpr equals the composed transform(round) on random floats") {
     val vecs: Seq[Seq[Float]] = (0 until 300).map { i =>
       val r = new scala.util.Random(i)
       Seq.fill(1 + r.nextInt(80))((r.nextFloat() * 2f) - 1f)
@@ -177,7 +201,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("FingerprintExpr equals the composed 5-gram min-sketch on random text") {
+  property("FingerprintExpr equals the composed 5-gram min-sketch on random text") {
     val lt = lower(col("t"))
     val grams = when(length(lt) >= 5,
       transform(sequence(lit(1), length(lt) - 4),
@@ -196,7 +220,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("CharGramCountsExpr equals a naive JVM profile on random text") {
+  property("CharGramCountsExpr equals a naive JVM profile on random text") {
     val texts = sample(200) ++ Seq("", "ab", "abc", "AAAAAA",
       "ÜBER naïve 漢字漢字漢字")
     def jvmHash60(s: String): Long = {
@@ -220,7 +244,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(got == texts.map(naive))
   }
 
-  test("Sq8ReconExpr equals the composed reconstruction on random vectors") {
+  property("Sq8ReconExpr equals the composed reconstruction on random vectors") {
     val vecs: Seq[Seq[Long]] = (0 until 300).map { i =>
       val r = new scala.util.Random(1000 + i)
       Seq.fill(1 + r.nextInt(80))(r.nextLong() % 4000000L)
@@ -239,7 +263,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("Int8QuantExpr equals the composed quantization on random vectors") {
+  property("Int8QuantExpr equals the composed quantization on random vectors") {
     val vecs: Seq[Seq[Long]] = (0 until 300).map { i =>
       val r = new scala.util.Random(i + 7)
       Seq.fill(1 + r.nextInt(80))(r.nextLong() % 1000000L)
@@ -277,7 +301,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("LangHitsExpr equals the composed per-profile greatest argmax") {
+  property("LangHitsExpr equals the composed per-profile greatest argmax") {
     import graft.functions.LangHitsExpr
     val scored = Lexicons.langProfiles.sortBy(_._1).zipWithIndex.map {
       case ((l, ws), i) =>
@@ -300,7 +324,7 @@ class NativeExprPropertiesSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("WordGramsExpr equals the composed gram pipeline on random text") {
+  property("WordGramsExpr equals the composed gram pipeline on random text") {
     val composed = {
       val w = filter(split(col("t"), " "), x => x =!= lit(""))
       array_distinct(when(size(w) >= 3,
@@ -315,5 +339,34 @@ class NativeExprPropertiesSpec extends SparkSpec {
         composed))
       .count()
     assert(diff == 0)
+  }
+
+  property("ValenceStatsExpr equals the composed aggregate() lexicon sums") {
+    val df = (sample(200) ++ Seq("good bad awful", "", "GOOD good"))
+      .toDF("t")
+      .select(NlpFunctions.tokens(col("t")).as("toks"))
+      .withColumn("vs", ValenceStatsExpr.stats(spark, col("toks")))
+    val diff = df.where(not(
+        col("vs.sv") === NlpFunctions.valenceSum(col("toks")) &&
+        col("vs.sav") === NlpFunctions.absValenceSum(col("toks")) &&
+        col("vs.n") === NlpFunctions.matchedCount(col("toks"))))
+      .count()
+    assert(diff == 0)
+  }
+
+  property("CharGramHashesExpr equals the composed positional k-gram hashes") {
+    val df = (sample(200) ++ Seq("", "ab", "abc", "abcde", "AAAAAA",
+      "ÜBER naïve 漢字漢字漢字")).toDF("t")
+    val lt = lower(col("t"))
+    for (k <- Seq(3, 5)) {
+      val composed = when(length(lt) >= k,
+        transform(sequence(lit(1), length(lt) - (k - 1)),
+          i => HashFns.hash60(lt.substr(i, lit(k)))))
+        .otherwise(array().cast("array<bigint>"))
+      val diff = df.where(not(
+          CharGramHashesExpr.gramHashes(spark, col("t"), k) === composed))
+        .count()
+      assert(diff == 0, s"k=$k")
+    }
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.model.Model.{MoodRec, TimedMessage}
 import graft.ops.ChatOps
@@ -1075,6 +1078,35 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "clean_text", "n_redacted")
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
     assert(published == Seq((2L, s"$t2 mail <EMAIL>", 1L), (7L, t7, 0L)))
+  }
+
+  test("IngestPipeline micro-batches run interpreted: a steady batch compiles nothing") {
+    implicit val sqlCtx = spark.sqlContext
+    // both halves are read up front: a query on this session between
+    // the counter reads would compile code of its own
+    val (evens, odds) = spark.read.parquet(s"$SF/documents.parquet")
+      .select("doc_id", "text", "lang", "source", "n_chars")
+      .as[(Long, String, String, String, Long)].collect().toSeq
+      .partition(_._1 % 2 == 0)
+    val dir =
+      java.nio.file.Files.createTempDirectory("graft-ingest-interp").toString
+    val in = MemoryStream[(Long, String, String, String, Long)]
+    val q = IngestPipeline.start(
+      in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
+      SF, s"$dir/dedup", s"$dir/out")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val secondBatch = try {
+      in.addData(evens)
+      q.processAllAvailable()
+      val before = compiles
+      in.addData(odds)
+      q.processAllAvailable()
+      compiles - before
+    } finally q.stop()
+    assert(secondBatch == 0L)
+    // the mode lives on the query's session clone, not the caller's
+    assert(spark.conf.get(SQLConf.CODEGEN_FACTORY_MODE.key) ==
+      CodegenObjectFactoryMode.FALLBACK.toString)
   }
 
   test("IngestPipeline compactEvery: maintained stores fold to single files") {
