@@ -131,11 +131,6 @@ object Lexicons {
   def stopListSql: String =
     stopwords.map(sqlStr).mkString("[", ", ", "]")
 
-  /** `stopw(word)` VALUES CTE body. */
-  def stopwordCte: String =
-    "stopw(word) AS (VALUES " +
-      stopwords.map(w => s"(${sqlStr(w)})").mkString(", ") + ")"
-
   /** `langp(lang, word)` VALUES CTE body. */
   def langCte: String =
     "langp(lang, word) AS (VALUES " +

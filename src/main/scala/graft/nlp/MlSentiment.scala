@@ -46,9 +46,6 @@ import graft.pipeline.ParityQueries
  */
 object MlSentiment {
 
-  /** Rate scale: Laplace-smoothed class rates in parts per billion. */
-  val RateScale = 1000000000L
-
   /** Observed train accuracy floors (degeneracy guards, asserted in
     * DataOpsSpec — NOT at query-construction time, so plan-only paths
     * stay lazy): the majority class sits at ≈ 0.57 on the fixture. */

@@ -614,9 +614,6 @@ object DataOps {
   /** 60-bit SimHash over whitespace-token frequencies (Charikar 2002
     * similarity estimation; chunk-bucketed pairing as in Manku et al.
     * 2007, "Detecting Near-Duplicates for Web Crawling"). */
-  private def simhashSigs(spark: SparkSession, sfDir: String): DataFrame =
-    simhashSigsFrom(spark, docs(spark, sfDir))
-
   private def simhashSigsFrom(spark: SparkSession, d: DataFrame): DataFrame = {
     val wc = d
       .select(col("doc_id"),
@@ -937,11 +934,17 @@ object DataOps {
     * order can never flip a result. (em_i = round(x_i · 1e6); |x| < 1 and
     * dim = 64 keep dots < 2^46.) */
   private[graft] def emb(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"),
-        graft.functions.MicroVecExpr.micro(spark, col("embedding"))
-          .as("em"))
-      .withColumn("nrm", dot(col("em"), col("em")))
+    microVectors(spark.read.parquet(s"$sfDir/embeddings.parquet"))
+
+  /** (vec_id, embedding) → (vec_id, em, nrm): the micro-unit vector and
+    * its exact squared norm — the one projection the loader above, the
+    * vector stores' ingest absorb and the streaming vector queries
+    * share. */
+  private[graft] def microVectors(v: DataFrame): DataFrame =
+    v.select(col("vec_id"), graft.functions.MicroVecExpr
+        .micro(v.sparkSession, col("embedding")).as("em"))
+      .withColumn("nrm", graft.functions.VecDotExpr
+        .dot(v.sparkSession, col("em"), col("em")))
 
   /** Exact integer dot product of two micro-unit vectors — the native
     * codegen [[graft.functions.VecDotExpr]] (the former

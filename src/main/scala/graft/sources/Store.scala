@@ -148,12 +148,8 @@ object Store {
   case object Vectors extends Input {
     def absorb(published: DataFrame): Option[DataFrame] =
       if (!published.columns.contains("embedding")) None
-      else Some(published
-        .select(col("doc_id").as("vec_id"),
-          graft.functions.MicroVecExpr.micro(published.sparkSession,
-            col("embedding")).as("em"))
-        .withColumn("nrm", graft.functions.VecDotExpr.dot(
-          published.sparkSession, col("em"), col("em"))))
+      else Some(graft.pipeline.DataOps.microVectors(published
+        .select(col("doc_id").as("vec_id"), col("embedding"))))
     def fromSfDir(spark: SparkSession, sfDir: String): DataFrame =
       graft.pipeline.DataOps.emb(spark, sfDir)
     override def seedable: Boolean = false

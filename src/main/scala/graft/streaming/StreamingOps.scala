@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 
 import graft.model.Model.{CapAdmit, CapDoc, MoodRec, TimedMessage, ToxState, ToxWindow}
 import graft.ops.ChatOps.orderedConcat
@@ -204,15 +205,10 @@ object StreamingOps {
         graft.pipeline.DataOps.contamGramHashes(col("text")), bench))
   }
 
-  /** Ingest-time incremental near-dup detection — the K4 persistent
-    * store ([[graft.sources.MinhashIndex]]) serving the INGEST path:
-    * each micro-batch of snapshot documents probes the stored corpus
-    * bands/shingles via `foreachBatch` →
-    * [[graft.sources.MinhashIndex.dedupAgainst]], appending
-    * (doc_id, dup_of, jac_micro) rows to `outDir`. Because a document's
-    * signature and band buckets depend only on its OWN text, the result
-    * is independent of micro-batch boundaries — stream ≡ batch pinned
-    * across two batches in StreamingSpec.
+  /** The sink of every store-serving stream below: each non-empty
+    * micro-batch is answered as a BATCH query against a persistent
+    * store, `answer(batch, batchId)`, and the answer appended to
+    * `outDir` as parquet. An empty micro-batch appends nothing.
     *
     * `foreachBatch` is the right bridge here (not a stateful streaming
     * operator): the probe is a JOIN against a parquet STORE, which
@@ -221,22 +217,42 @@ object StreamingOps {
     * batch-joins against the store are exactly how production ingest
     * dedup runs. Stream state is zero; all heavy relations live in the
     * store. */
-  def dedupAgainstStream(docStream: DataFrame, indexDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        graft.sources.MinhashIndex
-          .dedupAgainst(batch.sparkSession, batch.toDF(), indexDir)
-          .write.mode("append").parquet(outDir)
+  private def appendEachBatch(stream: DataFrame, outDir: String)(
+      answer: (DataFrame, Long) => DataFrame): StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!batch.isEmpty)
+          answer(batch.toDF(), batchId).write.mode("append").parquet(outDir)
         ()
       }
       .start()
 
+  /** A micro-batch of raw (vec_id, embedding) query vectors in the
+    * micro-unit query shape (q_id, qem, qn) the vector stores probe
+    * with — the batch loader's own projection. */
+  private def vecQueries(batch: DataFrame): DataFrame =
+    graft.pipeline.DataOps.microVectors(batch).toDF("q_id", "qem", "qn")
+
+  /** Ingest-time incremental near-dup detection — the K4 persistent
+    * store ([[graft.sources.MinhashIndex]]) serving the INGEST path:
+    * each micro-batch of snapshot documents probes the stored corpus
+    * bands/shingles via [[graft.sources.MinhashIndex.dedupAgainst]],
+    * appending
+    * (doc_id, dup_of, jac_micro) rows to `outDir`. Because a document's
+    * signature and band buckets depend only on its OWN text, the result
+    * is independent of micro-batch boundaries — stream ≡ batch pinned
+    * across two batches in StreamingSpec. */
+  def dedupAgainstStream(docStream: DataFrame, indexDir: String,
+      outDir: String): StreamingQuery =
+    appendEachBatch(docStream, outDir) { (batch, _) =>
+      graft.sources.MinhashIndex
+        .dedupAgainst(batch.sparkSession, batch, indexDir)
+    }
+
   /** Streaming DSIR scoring over the K8 persistent importance store
     * ([[graft.sources.DsirStore]]) — the data-selection ingest path:
     * each micro-batch of (doc_id, text) documents scores against the
-    * frozen target/raw bucket statistics via `foreachBatch` →
+    * frozen target/raw bucket statistics via
     * [[graft.sources.DsirStore.scoreAgainst]], appending
     * (doc_id, n_bigrams, weight_bits, keep) to `outDir`. A document's
     * weight depends only on its own hashed bigrams and the store, so
@@ -244,21 +260,16 @@ object StreamingOps {
     * batch pinned in StreamingSpec. Stream state is zero; the KB-sized
     * model lives in the store and broadcasts per batch. */
   def dsirScoreStream(docStream: DataFrame, storeDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        graft.sources.DsirStore
-          .scoreAgainst(batch.sparkSession, batch.toDF(), storeDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    appendEachBatch(docStream, outDir) { (batch, _) =>
+      graft.sources.DsirStore
+        .scoreAgainst(batch.sparkSession, batch, storeDir)
+    }
 
   /** Streaming lexical-search serving over the K9 persistent postings
     * store ([[graft.sources.PostingsIndex]]) — the search-tier query
     * path: each micro-batch of (q_id, token) query rows probes the
-    * stored postings/length/df relations via `foreachBatch` →
+    * stored postings/length/df relations via
     * [[graft.sources.PostingsIndex.bm25ServeAgainst]], appending each
     * query's exact-integer BM25 top-10 (q_id, doc_id, score_micro, rnk,
     * n_terms_hit) to `outDir`. A query's answer depends only on its own
@@ -266,16 +277,11 @@ object StreamingOps {
     * micro-batch boundaries — stream ≡ batch pinned in StreamingSpec.
     * Stream state is zero; every heavy relation lives in the store. */
   def bm25ServeStream(queryStream: DataFrame, indexDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        graft.sources.PostingsIndex
-          .bm25ServeAgainst(batch.sparkSession, batch.toDF(), indexDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    appendEachBatch(queryStream, outDir) { (batch, _) =>
+      graft.sources.PostingsIndex
+        .bm25ServeAgainst(batch.sparkSession, batch, indexDir)
+    }
 
   /** [[bm25ServeStream]] over the BUCKETED postings layout — the
     * serving twin of the round-14 `bm25Bucketed` batch probe: each
@@ -287,23 +293,13 @@ object StreamingOps {
     * difference between a serving tick reading a few posting lists
     * and re-scanning the index per tick. Results ≡ the directory
     * probe for the same queries (stream ≡ batch pinned across two
-    * micro-batches in StreamingSpec); an empty micro-batch appends
-    * nothing. */
+    * micro-batches in StreamingSpec). */
   def bm25ServeBucketedStream(queryStream: DataFrame, table: String,
-      indexDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.PostingsIndex
-            .bm25ServeAgainstBucketed(batch.sparkSession, batch.toDF(),
-              table, indexDir)
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+      indexDir: String, outDir: String): StreamingQuery =
+    appendEachBatch(queryStream, outDir) { (batch, _) =>
+      graft.sources.PostingsIndex.bm25ServeAgainstBucketed(
+        batch.sparkSession, batch, table, indexDir)
+    }
 
   /** STREAMING RIGHT-TO-BE-FORGOTTEN — the deletion-request QUEUE a
     * pipeline actually operates (GDPR/CCPA requests arrive
@@ -329,26 +325,18 @@ object StreamingOps {
     * only the victims' lang partitions. */
   def forgetStream(requestStream: DataFrame, corpusDir: String,
       stores: Seq[(graft.sources.Store, String)],
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    requestStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.Forget.forget(batch.sparkSession, batch.toDF(),
-            corpusDir, stores)
-          batch.toDF().select(col("doc_id"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    appendEachBatch(requestStream, outDir) { (batch, batchId) =>
+      graft.sources.Forget.forget(batch.sparkSession, batch, corpusDir,
+        stores)
+      batch.select(col("doc_id")).withColumn("batch_id", lit(batchId))
+    }
 
   /** Streaming ANN serving over the K5 persistent PQ store
     * ([[graft.sources.PqIndex]]) — the vector-store query path: each
     * micro-batch of raw float query vectors converts to the micro-unit
-    * query shape (native `micro_vec` + `vec_dot` — the batch loader's
-    * own expressions) and probes the store via `foreachBatch` →
+    * query shape ([[vecQueries]] — the batch loader's own native
+    * `micro_vec` + `vec_dot` expressions) and probes the store via
     * [[graft.sources.PqIndex.queryAgainst]], appending
     * (q_id, n_id, rnk, cos_micro) to `outDir`. Per-query answers depend
     * only on the store and the query's own vector, so results are
@@ -356,43 +344,27 @@ object StreamingOps {
     * StreamingSpec. The query side of each batch is naturally bounded
     * by the micro-batch; the heavy relations all live in the store. */
   def annAgainstStream(vecStream: DataFrame, indexDir: String,
-      sfDir: String, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val spark = batch.sparkSession
-        val q = batch.toDF()
-          .select(col("vec_id").as("q_id"),
-            graft.functions.MicroVecExpr.micro(spark, col("embedding"))
-              .as("qem"))
-          .withColumn("qn",
-            graft.functions.VecDotExpr.dot(spark, col("qem"), col("qem")))
-        graft.sources.PqIndex.queryAgainst(spark, q, indexDir, sfDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      sfDir: String, outDir: String): StreamingQuery =
+    appendEachBatch(vecStream, outDir) { (batch, _) =>
+      graft.sources.PqIndex.queryAgainst(batch.sparkSession,
+        vecQueries(batch), indexDir, sfDir)
+    }
 
   /** Streaming phrase serving over the K10 persistent positional
     * index ([[graft.sources.PositionsIndex]]) — the exact-phrase query
     * path: each micro-batch of (g, i, t) phrase-part rows probes the
-    * stored positional relation via `foreachBatch` →
+    * stored positional relation via
     * [[graft.sources.PositionsIndex.phraseAgainst]], appending each
     * phrase's (doc_id, phrase, n_hits, first_pos) hits to `outDir`.
     * A phrase's answer depends only on its own parts and the frozen
     * store, so results are independent of micro-batch boundaries —
     * stream ≡ batch pinned in StreamingSpec. Stream state is zero. */
   def phraseServeStream(partsStream: DataFrame, indexDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    partsStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        graft.sources.PositionsIndex
-          .phraseAgainst(batch.sparkSession, batch.toDF(), indexDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    appendEachBatch(partsStream, outDir) { (batch, _) =>
+      graft.sources.PositionsIndex
+        .phraseAgainst(batch.sparkSession, batch, indexDir)
+    }
 
   /** [[phraseServeStream]] over the BUCKETED positions layout — the
     * K10 sibling of [[bm25ServeBucketedStream]]: each micro-batch's
@@ -402,19 +374,11 @@ object StreamingOps {
     * corpus-sized positions relation. Stream ≡ directory serve pinned
     * across two micro-batches in StreamingSpec. */
   def phraseServeBucketedStream(partsStream: DataFrame, table: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    partsStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.PositionsIndex
-            .phraseServeAgainstBucketed(batch.sparkSession,
-              batch.toDF(), table)
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    appendEachBatch(partsStream, outDir) { (batch, _) =>
+      graft.sources.PositionsIndex
+        .phraseServeAgainstBucketed(batch.sparkSession, batch, table)
+    }
 
   /** [[dedupAgainstStream]] over the BUCKETED band layout — the K4
     * sibling: each micro-batch of landed documents probes the
@@ -425,26 +389,16 @@ object StreamingOps {
     * band hashes are data-dependent). Stream ≡ directory probe pinned
     * across two micro-batches in StreamingSpec. */
   def dedupAgainstBucketedStream(docStream: DataFrame, table: String,
-      indexDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.MinhashIndex
-            .dedupAgainstBucketed(batch.sparkSession, batch.toDF(),
-              table, indexDir)
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+      indexDir: String, outDir: String): StreamingQuery =
+    appendEachBatch(docStream, outDir) { (batch, _) =>
+      graft.sources.MinhashIndex.dedupAgainstBucketed(batch.sparkSession,
+        batch, table, indexDir)
+    }
 
   /** Streaming proximity serving over the SAME K10 positional index —
     * the windowed-co-occurrence query path beside [[phraseServeStream]]
     * (one stored positions relation, both query families live): each
     * micro-batch of (t, role) term-pair rows probes the store via
-    * `foreachBatch` →
     * [[graft.sources.PositionsIndex.proximityAgainst]], appending each
     * pair's (doc_id, t_a, t_b, min_dist, n_pairs_w) hits to `outDir`.
     * CONTRACT: one term PAIR per micro-batch — the (t, role) shape
@@ -454,16 +408,11 @@ object StreamingOps {
     * own terms and the frozen store — stream ≡ batch pinned in
     * StreamingSpec; zero stream state. */
   def proximityServeStream(termsStream: DataFrame, indexDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    termsStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        graft.sources.PositionsIndex
-          .proximityAgainst(batch.sparkSession, batch.toDF(), indexDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    appendEachBatch(termsStream, outDir) { (batch, _) =>
+      graft.sources.PositionsIndex
+        .proximityAgainst(batch.sparkSession, batch, indexDir)
+    }
 
   /** Streaming MULTI-PAIR proximity serving — the batched sibling of
     * [[proximityServeStream]] (round 13): each micro-batch carries a
@@ -475,18 +424,11 @@ object StreamingOps {
     * any number of pairs land per trigger, each q_id independent.
     * Zero stream state; stream ≡ batch pinned in StreamingSpec. */
   def proximityServeBatchedStream(termsStream: DataFrame,
-      indexDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    termsStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        graft.sources.PositionsIndex
-          .proximityServeAgainst(batch.sparkSession, batch.toDF(),
-            indexDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      indexDir: String, outDir: String): StreamingQuery =
+    appendEachBatch(termsStream, outDir) { (batch, _) =>
+      graft.sources.PositionsIndex
+        .proximityServeAgainst(batch.sparkSession, batch, indexDir)
+    }
 
   /** Streaming COMPOSED IVFPQ serving over the K5 store — the
     * [[annAgainstStream]] sibling on the cell-pruned path (round 13:
@@ -498,22 +440,11 @@ object StreamingOps {
     * depend only on the store and the query's own vector — stream ≡
     * batch pinned in StreamingSpec; zero stream state. */
   def ivfPqAgainstStream(vecStream: DataFrame, indexDir: String,
-      sfDir: String, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val spark = batch.sparkSession
-        val q = batch.toDF()
-          .select(col("vec_id").as("q_id"),
-            graft.functions.MicroVecExpr.micro(spark, col("embedding"))
-              .as("qem"))
-          .withColumn("qn",
-            graft.functions.VecDotExpr.dot(spark, col("qem"), col("qem")))
-        graft.sources.PqIndex.ivfPqAgainst(spark, q, indexDir, sfDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      sfDir: String, outDir: String): StreamingQuery =
+    appendEachBatch(vecStream, outDir) { (batch, _) =>
+      graft.sources.PqIndex.ivfPqAgainst(batch.sparkSession,
+        vecQueries(batch), indexDir, sfDir)
+    }
 
   /** [[ivfPqAgainstStream]] over the BUCKETED inverted-list layout —
     * the K5 sibling of [[bm25ServeBucketedStream]], completing the
@@ -524,34 +455,18 @@ object StreamingOps {
     * those cells' buckets. Stream ≡ directory composed probe pinned
     * across two micro-batches in StreamingSpec. */
   def ivfPqServeBucketedStream(vecStream: DataFrame, table: String,
-      indexDir: String, sfDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val q = batch.toDF()
-            .select(col("vec_id").as("q_id"),
-              graft.functions.MicroVecExpr.micro(spark, col("embedding"))
-                .as("qem"))
-            .withColumn("qn",
-              graft.functions.VecDotExpr.dot(spark, col("qem"),
-                col("qem")))
-          graft.sources.PqIndex
-            .ivfPqServeAgainstBucketed(spark, q, table, indexDir, sfDir)
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+      indexDir: String, sfDir: String, outDir: String): StreamingQuery =
+    appendEachBatch(vecStream, outDir) { (batch, _) =>
+      graft.sources.PqIndex.ivfPqServeAgainstBucketed(batch.sparkSession,
+        vecQueries(batch), table, indexDir, sfDir)
+    }
 
   /** Streaming ANN serving over the K7 persistent SQ store
     * ([[graft.sources.SqIndex]]) — the [[annAgainstStream]] twin at the
     * scalar-quantized tier (the one store that had no streaming
     * serving path): each micro-batch of raw float query vectors
     * converts to the micro-unit query shape and probes the stored
-    * reconstruction relation via `foreachBatch` →
+    * reconstruction relation via
     * [[graft.sources.SqIndex.queryAgainst]], appending
     * (q_id, n_id, rnk, cos_micro) to `outDir`. Per-query answers
     * depend only on the store and the query's own vector, so results
@@ -559,43 +474,27 @@ object StreamingOps {
     * in StreamingSpec across two micro-batches. Stream state is zero;
     * the corpus-sized relation lives in the store. */
   def sqAgainstStream(vecStream: DataFrame, indexDir: String,
-      sfDir: String, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val spark = batch.sparkSession
-        val q = batch.toDF()
-          .select(col("vec_id").as("q_id"),
-            graft.functions.MicroVecExpr.micro(spark, col("embedding"))
-              .as("qem"))
-          .withColumn("qn",
-            graft.functions.VecDotExpr.dot(spark, col("qem"), col("qem")))
-        graft.sources.SqIndex.queryAgainst(spark, q, indexDir, sfDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      sfDir: String, outDir: String): StreamingQuery =
+    appendEachBatch(vecStream, outDir) { (batch, _) =>
+      graft.sources.SqIndex.queryAgainst(batch.sparkSession,
+        vecQueries(batch), indexDir, sfDir)
+    }
 
   /** Streaming classification over the persistent Cavnar-Trenkle
     * profile store ([[graft.sources.LangProfileStore]]) — the
     * train-offline/score-online production shape: each micro-batch of
     * documents classifies as a BATCH against the stored (broadcast,
-    * KB-sized) profile relation via `foreachBatch`, appending
+    * KB-sized) profile relation, appending
     * (doc_id, lang, lang_pred, dist) to `outDir`. Per-doc predictions
     * depend only on the store and the doc's own trigrams, so results
     * are independent of micro-batch boundaries — stream ≡ the
     * self-trained batch query pinned in StreamingSpec. */
   def classifyAgainstStream(docStream: DataFrame, storeDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        graft.sources.LangProfileStore
-          .classifyAgainst(batch.sparkSession, batch.toDF(), storeDir)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    appendEachBatch(docStream, outDir) { (batch, _) =>
+      graft.sources.LangProfileStore
+        .classifyAgainst(batch.sparkSession, batch, storeDir)
+    }
 
   /** Ingest-time language ID — the streaming twin of
     * [[graft.pipeline.DataOps.langId]]: the stateless projection form

@@ -1767,6 +1767,36 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("bm25ServeStream: an empty micro-batch appends nothing") {
+    implicit val sqlCtx = spark.sqlContext
+    val indexDir =
+      java.nio.file.Files.createTempDirectory("graft-postings-e").toString
+    val outDir =
+      java.nio.file.Files.createTempDirectory("graft-postings-eout")
+        .toString + "/hits"
+    graft.sources.PostingsIndex.build(spark, SF, indexDir)
+    val in = MemoryStream[(Long, String)]
+    val q = StreamingOps.bm25ServeStream(
+      in.toDF().toDF("q_id", "token"), indexDir, outDir)
+    try {
+      in.addData(Seq.empty[(Long, String)])
+      q.processAllAvailable()
+      assert(q.lastProgress != null && q.lastProgress.batchId == 0L)
+      val out = new java.io.File(outDir)
+      val parts = Option(out.listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet"))
+      assert(parts.isEmpty, s"empty batch wrote ${parts.mkString(", ")}")
+      in.addData(Seq((1L, "dup")))
+      q.processAllAvailable()
+      val streamed = spark.read.parquet(outDir)
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      val batch = graft.sources.PostingsIndex.bm25ServeAgainst(spark,
+          Seq((1L, "dup")).toDF("q_id", "token"), indexDir)
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      assert(streamed.nonEmpty && streamed == batch)
+    } finally q.stop()
+  }
+
   test("bm25ServeBucketedStream: two micro-batches over the bucketed layout == directory serve, scans prune") {
     implicit val sqlCtx = spark.sqlContext
     val indexDir =
